@@ -27,7 +27,7 @@ object Bench {
     "dedup_semantic", "dedup_neardup_incremental", "ann_topk_brute",
     "ann_ivf", "ann_ivfpq_rerank", "text_c4_clean", "text_bm25_topk",
     "corpus_report", "pack_sequences", "sample_token_budget",
-    "quality_classifier", "g_psi_drift", "graph_pagerank",
+    "quality_classifier", "g_psi", "graph_pagerank",
     "linkage_fellegi_sunter", "retrieval_hybrid",
     "dedup_containment", "pack_whole", "corpus_report_incremental",
     "bitext_margin", "g_mondrian", "embedding_matryoshka", "graph_kcore",
@@ -55,12 +55,15 @@ object Bench {
     // not engine throughput. Bounded (~20 queries ≈ 15 s untimed);
     // warming the full 196-query suite would double the driver's bench
     // wall-clock for the remaining long tail of already-cheap queries.
-    try {
-      (Seq("q1_agg") ++ Headline).foreach(q =>
-        SparkEntry.queries(q)(spark, sfDir).count())
-      graft.queries.Q.tableNames
-        .foreach(t => graft.queries.Q.table(spark, sfDir, t).count())
-    } catch { case _: Throwable => () }
+    // A failed warm-up is reported and skipped: it leaves that query cold
+    // but must neither stop the warm-up nor pass unnoticed.
+    def warm(what: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $what failed: ${e.getClass.getName}: ${e.getMessage}") }
+    (Seq("q1_agg") ++ Headline).foreach(q =>
+      warm(q)(SparkEntry.queries(q)(spark, sfDir).count()))
+    graft.queries.Q.tableNames.foreach(t =>
+      warm(s"table $t")(graft.queries.Q.table(spark, sfDir, t).count()))
     // optional args: run only these queries (local profiling — the
     // driver always invokes with no args, timing the full surface)
     val only: Set[String] = args.toSet

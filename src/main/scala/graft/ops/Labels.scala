@@ -235,9 +235,4 @@ object Labels {
     filled.join(broadcast(dict), col(column) === col(s"__cat_$column"), "left")
       .drop(s"__cat_$column")
   }
-
-  /** P12: tag a split literal column (for re-concat plotting unions).
-    * Ref: func_aux/func_preproc.py:369-377. */
-  def tagSplit(df: DataFrame, split: String): DataFrame =
-    df.withColumn("split", lit(split))
 }

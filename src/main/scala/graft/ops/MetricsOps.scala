@@ -32,20 +32,6 @@ object MetricsOps {
       .na.fill(0L, Seq("cnt"))
   }
 
-  /** Per-class TP/FP/FN/support from a dense confusion matrix. */
-  def perClassStats(confusion: DataFrame): DataFrame = {
-    val tp = confusion.where(col("y_true") === col("y_pred"))
-      .select(col("y_true").as("cls"), col("cnt").as("tp"))
-    val support = confusion.groupBy(col("y_true").as("cls"))
-      .agg(sum("cnt").as("support"))
-    val predicted = confusion.groupBy(col("y_pred").as("cls"))
-      .agg(sum("cnt").as("predicted"))
-    support.join(tp, Seq("cls"), "left").join(predicted, Seq("cls"), "left")
-      .na.fill(0L)
-      .withColumn("fn", col("support") - col("tp"))
-      .withColumn("fp", col("predicted") - col("tp"))
-  }
-
   /** G13 — the multiclass metric suite of func_aux/func_test.py:61-171
     * (confusion-derivable part; the AUC part lives in [[Curves]]).
     * Input: per-row `(yTrue, yPred)` int columns. Output: ONE row.

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** R5 — permutation feature importance over window tensors.
   *
@@ -35,8 +36,11 @@ object PermImportance {
     // the exploded cells; the reassembly join reads the windows again) —
     // and each withGlobalIndex call EAGERLY collects its partition
     // counts, so an unpinned input lineage (often a full sliding-window
-    // op) re-executes per call. Pin both faces once (r13).
-    val dfP = df.localCheckpoint(false)
+    // op) re-executes per call. Pin both faces once (r13) — the input
+    // only when the caller has not cached it already (a cached input is
+    // read from its cache; a pinned copy would only duplicate it).
+    val dfP =
+      if (df.storageLevel != StorageLevel.NONE) df else df.localCheckpoint(false)
     val exploded = dfP.select(col(winId),
       posexplode(transform(col(window), r => element_at(r, featureIdx + 1)))
         .as(Seq("t", "v")))

@@ -35,15 +35,13 @@ object Robustness {
   def seededUniform(seed: Long, keys: Column*): Column =
     seededUniformC(lit(seed), keys: _*)
 
-  /** Box–Muller standard normal from two hash-uniforms (distinct salts). */
-  def seededNormal(seed: Long, keys: Column*): Column =
-    seededNormalC(lit(seed), keys: _*)
-
   /** Column-seeded uniform — the seed itself a column, for plans that
     * sweep (severity, seed) grids in one pass. */
   def seededUniformC(seed: Column, keys: Column*): Column =
     IntHash.mix(seed, keys).cast("double") / lit(IntHash.M.toDouble)
 
+  /** Box–Muller standard normal from two hash-uniforms (distinct salts),
+    * the seed a column. */
   def seededNormalC(seed: Column, keys: Column*): Column = {
     val u1 = greatest(seededUniformC(seed, keys: _*), lit(1e-12)) // avoid log(0)
     // second independent stream via an extra salt key (no seed arithmetic
@@ -149,6 +147,9 @@ object Robustness {
               1))),
         1)
     }
+
+  /** The degradation kinds R1–R4, by the reference's names. */
+  val Kinds: Seq[String] = Seq("packet_loss", "missing_variables", "clock_offset", "drift")
 
   /** R6 — severity-sweep grid as a driver-side deterministic loop spec:
     * severities linspace(0, maxSev, nSev), seeds `base + 1000·i + rep`

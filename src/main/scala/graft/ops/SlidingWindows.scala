@@ -77,6 +77,11 @@ object SlidingWindows {
     * its windows independently with an ordinary partitioned window frame.
     * Cost: one global rank + one narrow duplication of a `(seqLen-1) /
     * chunkSize` fraction of rows — embarrassingly parallel afterwards.
+    *
+    * With `partitionCols`, every segment (distinct partition-column
+    * values) is its own global sequence — the union of per-segment
+    * [[slideGlobal]] calls, computed with ONE rank pass: `win_id` restarts
+    * at 1 per segment and no window crosses a segment boundary.
     */
   def slideGlobalChunked(
       df: DataFrame,
@@ -84,20 +89,23 @@ object SlidingWindows {
       features: Column,
       seqLen: Int,
       step: Int,
-      chunkSize: Int = 65536): DataFrame = {
+      chunkSize: Int = 65536,
+      partitionCols: Seq[String] = Nil): DataFrame = {
     require(chunkSize >= seqLen, "chunkSize must be >= seqLen")
     // global rank via the fused distributed index (round 3) — this form
     // now has NO single-partition stage either; it remains the
     // collect_list-based comparison baseline for the streaming form
-    val ranked = withGlobalIndex(df, orderCols, "__rn")
+    val ranked = withGlobalIndex(df, orderCols, "__rn", partitionCols = partitionCols)
     // Home chunk of each row, plus a copy into the NEXT chunk for rows in
     // the trailing seqLen-1 positions (they seed the next chunk's frames).
+    // __rn restarts per segment, so chunks never span two segments.
     val home = ranked.withColumn("__chunk", ((col("__rn") - 1) / chunkSize).cast("long"))
     val tail = ranked
       .where(pmod(col("__rn") - 1, lit(chunkSize)) >= chunkSize - (seqLen - 1))
       .withColumn("__chunk", ((col("__rn") - 1) / chunkSize).cast("long") + 1)
     val chunked = if (seqLen == 1) home else home.unionByName(tail)
-    val w = Window.partitionBy(col("__chunk")).orderBy(col("__rn"))
+    val w = Window.partitionBy((partitionCols.map(col) :+ col("__chunk")): _*)
+      .orderBy(col("__rn"))
     chunked
       .withColumn("window", collect_list(features).over(w.rowsBetween(-(seqLen - 1), 0)))
       // A row is a real window end only in its HOME chunk, with a full frame
@@ -148,27 +156,55 @@ object SlidingWindows {
     * computed twice anymore. Partitions are sorted in executor memory —
     * size them via `numPartitions` (the range partitioner balances rows);
     * RDD used deliberately: per-partition imperative logic is the
-    * documented exception (builder brief). */
+    * documented exception (builder brief).
+    *
+    * With `partitionCols` the index restarts at 1 per segment — equal to
+    * `row_number()` over `partitionBy(partitionCols).orderBy(orderCols)`,
+    * without the hash exchange that funnels each segment through one task.
+    * The range exchange runs on (partition cols, order cols), so a
+    * segment may straddle range partitions; pass 1 counts rows per
+    * (range partition, segment) and the offsets are prefix sums per
+    * segment. With no partition columns the one segment is the empty key
+    * and the plan is the plain global index. */
   def withGlobalIndex(df: DataFrame, orderCols: Seq[Column], out: String,
-      numPartitions: Int = 0): DataFrame = {
+      numPartitions: Int = 0, partitionCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parts = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val (withOrd, ordNames) = materializeOrder(df, orderCols)
-    val ranged = withOrd.repartitionByRange(parts, ordNames.map(col): _*)
+    val keyNames = partitionCols ++ ordNames
+    val ranged = withOrd.repartitionByRange(parts, keyNames.map(col): _*)
     val rdd = ranged.rdd
-    // pass 1 — counts only, unsorted (order-independent)
-    val counts = rdd.mapPartitionsWithIndex((i, it) => Iterator((i, it.size)))
-      .collect().sortBy(_._1).map(_._2.toLong)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val ord = rowOrdering(ordNames.map(ranged.schema.fieldIndex))
-    // pass 2 — the only sort, then index
+    val segIdx = partitionCols.map(ranged.schema.fieldIndex)
+    def segment(r: Row): Seq[Any] = segIdx.map(r.get)
+    // pass 1 — counts per segment, unsorted (order-independent)
+    val counts = rdd.mapPartitionsWithIndex { (i, it) =>
+      val n = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+      it.foreach { r => val s = segment(r); n(s) = n.getOrElse(s, 0L) + 1 }
+      n.iterator.map { case (s, c) => (i, s, c) }
+    }.collect().sortBy(_._1)
+    // offset of (partition, segment) = that segment's rows in earlier
+    // partitions (range partitions are contiguous in (segment, order))
+    val seen = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+    val offsets: Map[(Int, Seq[Any]), Long] = counts.map { case (i, s, c) =>
+      val o = seen.getOrElse(s, 0L)
+      seen(s) = o + c
+      (i, s) -> o
+    }.toMap
+    val ord = rowOrdering(keyNames.map(ranged.schema.fieldIndex))
+    // pass 2 — the only sort, then index (restarting per segment)
     val indexed = rdd.mapPartitionsWithIndex { (i, it) =>
       val arr = it.toArray
       java.util.Arrays.sort(arr, ord)
-      var k = offsets(i)
-      arr.iterator.map { r => k += 1; Row.fromSeq(r.toSeq :+ k) }
+      var seg: Seq[Any] = null
+      var k = 0L
+      arr.iterator.map { r =>
+        val s = segment(r)
+        if (s != seg) { seg = s; k = offsets((i, s)) }
+        k += 1
+        Row.fromSeq(r.toSeq :+ k)
+      }
     }
     val schema = StructType(ranged.schema.fields :+ StructField(out, LongType, nullable = false))
     df.sparkSession.createDataFrame(indexed, schema).drop(ordNames: _*)

@@ -62,16 +62,24 @@ object Pipeline1 {
       timing: Timing,
       scaler: Map[String, (Double, Double)])
 
-  /** Train pipeline on a labeled time series.
+  /** The per-key half of [[run]]: everything a (task, seqLen, step) key
+    * determines, independent of the scorer — shared by every scorer of a
+    * grid key. `windows` is cached and materialized; the owner unpersists
+    * it once its last scorer is done. `encoder` is a local table. */
+  final case class Prepared(
+      windows: DataFrame,
+      encoder: DataFrame,
+      scaler: Map[String, (Double, Double)])
+
+  /** Labels, encoder, split, scaler and cached windows of one grid key.
     *
     * @param df        input with `attackCol`, `stateCol`, feature columns,
     *                  and a total chronological order given by `orderCols`
     * @param features  numeric feature columns (scaled with train stats)
-    * @param scorer    pluggable model (SURVEY §2.10)
     */
-  def run(spark: SparkSession, df: DataFrame, features: Seq[String],
+  def prepare(spark: SparkSession, df: DataFrame, features: Seq[String],
       attackCol: String, stateCol: String, orderCols: Seq[Column],
-      scorer: WindowScorer = Scorers.Logistic(), config: Config = Config()): Result = {
+      config: Config = Config()): Prepared = {
 
     // 1. labels (P1/P2) + target per task (prepare_labels_for_task,
     //    func_preproc.py:97-125) + task filter (F3)
@@ -89,8 +97,12 @@ object Pipeline1 {
       case other => throw new IllegalArgumentException(s"unknown task $other")
     }
 
-    // 2. encode y (P9, lexicographic) — broadcast joined
-    val encoder = Labels.fitLabelEncoder(filtered, target)
+    // 2. encode y (P9, lexicographic) — collected once (k rows) and
+    //    broadcast joined from a local table, so no later job re-derives
+    //    the distinct classes from the input
+    val fitted = Labels.fitLabelEncoder(filtered, target)
+    val encoder = spark.createDataFrame(
+      java.util.Arrays.asList(fitted.collect(): _*), fitted.schema)
     val encoded = Labels.encodeLabel(filtered, encoder, target, "y")
 
     // 3. per-(Attack, State) chronological split (G1) — one shuffle;
@@ -110,34 +122,44 @@ object Pipeline1 {
     val scaled = Stats.applyStandardScaler(split, scaler)
 
     // 5. sliding windows per split (W1/W2): label/state/attack from the
-    //    window's LAST row; windows slide over the concatenated sorted
-    //    split (crossing attack/state boundaries — the spec, SURVEY §7.4.2)
+    //    window's LAST row; within a split, windows slide over the
+    //    concatenated sorted rows (crossing attack/state boundaries — the
+    //    spec, SURVEY §7.4.2). All three splits window in ONE pass: the
+    //    split is the windower's segment column, so one range exchange on
+    //    (split, order) ranks every split at once, win_id restarts per
+    //    split, and no window crosses a split boundary.
     val featArray = array(features.map(col): _*)
-    val windows = Seq("train", "val", "test").map { s =>
-      SlidingWindows.slideGlobalChunked(
-        scaled.where(col("split") === s), orderCols, featArray,
-        config.seqLen, config.step, config.chunkSize)
-        .withColumn("split", lit(s))
-    }.reduce(_ unionByName _)
+    val windows = SlidingWindows.slideGlobalChunked(scaled, orderCols, featArray,
+        config.seqLen, config.step, config.chunkSize, partitionCols = Seq("split"))
       .select(col("split"), col("win_id"), col("window"), col("y"),
         col(attackCol).as("attack"), col(stateCol).as("state"),
         col("state_bin").as("state_bin_last"))
-      // cached: model fit + every metric aggregation below re-reads the
-      // windows; the caller owns Result.windows and may unpersist when
-      // done (mirrors the reference persisting windows.npz once)
+      // cached: every scorer's fit + every metric aggregation re-reads the
+      // windows (mirrors the reference persisting windows.npz once).
+      // Materialized here, so a scorer's training_time_seconds measures
+      // its fit alone (the reference fits on pre-materialized npz arrays,
+      // func_models.py:339).
       .cache()
-
-    // 6. train + score. Force the window cache BEFORE the fit timer so
-    //    training_time_seconds measures the fit alone (the reference fits
-    //    on pre-materialized npz arrays, func_models.py:339).
     windows.count()
+    Prepared(windows, encoder, scaler)
+  }
+
+  /** The per-scorer half of [[run]]: fit `scorer` on the prepared train
+    * windows, score every split, and compute the metrics. */
+  def fitEvaluate(prepared: Prepared, scorer: WindowScorer,
+      config: Config = Config()): Result = {
+    val windows = prepared.windows
+
+    // 6. train + score
     val tTrain0 = System.nanoTime()
     val model = scorer.fit(windows.where(col("split") === "train"))
     val trainingTimeSeconds = (System.nanoTime() - tTrain0) / 1e9
     val scored = model.transform(windows)
 
     // 7. metrics: G9/G13 on test; G16 operational for binary; F10 per-state
-    val k = encoder.count().toInt
+    //    (the encoder is local: reading it runs no job)
+    val classes = prepared.encoder.collect()
+    val k = classes.length
     val test = scored.where(col("split") === "test")
     // Inference latency: wall-clock of ONE forced scoring pass over the
     // test windows / their count (func_test.py:317-327). The aggregate
@@ -155,8 +177,9 @@ object Pipeline1 {
       if (config.task == "binary" && k == 2) {
         // attack-class proba: class id of "attack" under lexicographic
         // encoding ("attack" < "benign" → id 0)
-        val attackId = encoder.where(col("class") === "attack")
-          .head().getAs[Int]("y")
+        val attackId = classes.find(_.getString(0) == "attack")
+          .getOrElse(throw new NoSuchElementException("no \"attack\" class in the encoder"))
+          .getAs[Int]("y")
         val score = element_at(col("proba"), attackId + 1)
         Some(BinaryOperational.evaluate(
           scored.where(col("split") === "val"),
@@ -169,9 +192,21 @@ object Pipeline1 {
         when(col("state_bin_last") >= 0.5, "charging").otherwise("idle")),
       "state_slice", "y", "y_pred", 0 until k)
 
-    Result(windows, scored, encoder, model, multiclass, confusion, operational,
-      perState, Timing(trainingTimeSeconds, avgLatency, nTestWindows), scaler)
+    Result(windows, scored, prepared.encoder, model, multiclass, confusion, operational,
+      perState, Timing(trainingTimeSeconds, avgLatency, nTestWindows), prepared.scaler)
   }
+
+  /** Train pipeline on a labeled time series: [[prepare]] then
+    * [[fitEvaluate]]. The caller owns `Result.windows` and may unpersist
+    * it when done.
+    *
+    * @param scorer    pluggable model (SURVEY §2.10)
+    */
+  def run(spark: SparkSession, df: DataFrame, features: Seq[String],
+      attackCol: String, stateCol: String, orderCols: Seq[Column],
+      scorer: WindowScorer = Scorers.Logistic(), config: Config = Config()): Result =
+    fitEvaluate(prepare(spark, df, features, attackCol, stateCol, orderCols, config),
+      scorer, config)
 
   final case class GridCell(
       name: String,
@@ -183,9 +218,9 @@ object Pipeline1 {
 
   /** Experiment-grid driver with per-cell failure isolation — the
     * reference's entry-point loop (run_pipeline_train_network.py:48-71,
-    * run_pipeline_train_power.py:36-73): iterate task × model × seq_len ×
-    * step, try/except each cell so one bad config cannot kill the sweep,
-    * and give every run its own artifact directory.
+    * run_pipeline_train_power.py:36-73): every task × model × seq_len ×
+    * step cell is tried on its own so one bad config cannot kill the
+    * sweep, and every run gets its own artifact directory.
     *
     * Per successful cell (when `outputRoot` is set) writes
     * `<root>/<task>_<model>_seq<L>_step<S>/{metrics.json,config.json}` in
@@ -195,61 +230,83 @@ object Pipeline1 {
     * metrics.json carries the multiclass row plus `training_time_seconds`
     * and `avg_inference_latency_per_window_sec` (NaN-sanitized to null).
     *
-    * Memory at grid scale: each cell's window cache is released once its
-    * artifacts are written (126 concurrent caches would pin the cluster);
-    * a returned Result's `windows` recomputes lazily if re-used. */
+    * Prepare once, score many: the grid runs key by key (task → seq_len →
+    * step) and [[prepare]]s each key once — labels, encoder, split,
+    * scaler and the one-pass windows of all three splits — then fits and
+    * evaluates every scorer on it, so the scorers of a key share one
+    * `windows` Dataset. A failed prepare fails every cell of its key with
+    * that error. The cells come back in task → model → seq_len → step
+    * order either way.
+    *
+    * Memory at grid scale: one window cache is live at a time — each
+    * key's cache is released after its last scorer (126 concurrent caches
+    * would pin the cluster); a returned Result's `windows` recomputes
+    * lazily if re-used. */
   def runGrid(spark: SparkSession, df: DataFrame, features: Seq[String],
       attackCol: String, stateCol: String, orderCols: Seq[Column],
       tasks: Seq[String], scorers: Seq[(String, WindowScorer)],
       seqLens: Seq[Int], stepsFor: Int => Seq[Int] = l => Seq(1, l).distinct,
       outputRoot: Option[String] = None, base: Config = Config()): Seq[GridCell] = {
-    val cells = for {
+    val keys = for {
       task <- tasks
-      (scorerName, scorer) <- scorers
       seqLen <- seqLens
       step <- stepsFor(seqLen)
-    } yield (task, scorerName, scorer, seqLen, step)
-    cells.map { case (task, scorerName, scorer, seqLen, step) =>
-      val name = s"${task}_${scorerName}_seq${seqLen}_step$step"
-      val outcome = scala.util.Try {
-        val res = run(spark, df, features, attackCol, stateCol, orderCols,
-          scorer, base.copy(task = task, seqLen = seqLen, step = step))
-        outputRoot.foreach { root =>
-          val runDir = java.nio.file.Paths.get(root, name)
-          java.nio.file.Files.createDirectories(runDir)
-          val metricsDoc = graft.sources.Sources.sanitizeDoubles(
-            res.multiclass
-              .withColumn("training_time_seconds",
-                lit(res.timing.trainingTimeSeconds))
-              .withColumn("avg_inference_latency_per_window_sec",
-                lit(res.timing.avgInferenceLatencyPerWindowSec))
-              .withColumn("n_test_windows", lit(res.timing.nTestWindows)))
-            .toJSON.head()
-          java.nio.file.Files.writeString(runDir.resolve("metrics.json"),
-            s"""{"metrics": $metricsDoc}""")
-          java.nio.file.Files.writeString(runDir.resolve("config.json"),
-            s"""{"config": {"task": "$task", "model": "$scorerName", """ +
-              s""""seq_len": $seqLen, "step": $step, """ +
-              s""""fpr_target": ${base.fprTarget}}}""")
-          // S7 artifacts per run (the reference persists model + encoder +
-          // scaler alongside metrics); models that don't expose an MLlib
-          // transformer (custom scorers) have nothing portable to save
-          graft.model.ModelIO.saveEncoder(res.encoder,
-            runDir.resolve("encoder").toString)
-          graft.model.ModelIO.saveScaler(res.scaler,
-            runDir.resolve("scaler").toString)
-          if (res.model.isInstanceOf[graft.model.HasMlModel])
-            graft.model.ModelIO.saveModel(res.model, runDir.resolve("model").toString)
+    } yield (task, seqLen, step)
+    val byCell = keys.distinct.flatMap { case (task, seqLen, step) =>
+      val config = base.copy(task = task, seqLen = seqLen, step = step)
+      val prepared = scala.util.Try(
+        prepare(spark, df, features, attackCol, stateCol, orderCols, config))
+      val cells = scorers.zipWithIndex.map { case ((scorerName, scorer), i) =>
+        val name = s"${task}_${scorerName}_seq${seqLen}_step$step"
+        val outcome = prepared.map { p =>
+          val res = fitEvaluate(p, scorer, config)
+          outputRoot.foreach(root =>
+            writeArtifacts(java.nio.file.Paths.get(root, name), res, task,
+              scorerName, seqLen, step, base.fprTarget))
+          res
         }
-        res.windows.unpersist(blocking = false)
-        res
+        outcome.failed.foreach { e =>
+          println(s"[runGrid][error] $name failed: " +
+            s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        }
+        (task, i, seqLen, step) -> GridCell(name, task, scorerName, seqLen, step, outcome)
       }
-      outcome.failed.foreach { e =>
-        println(s"[runGrid][error] $name failed: " +
-          s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      GridCell(name, task, scorerName, seqLen, step, outcome)
-    }
+      prepared.foreach(_.windows.unpersist(blocking = false))
+      cells
+    }.toMap
+    for {
+      task <- tasks
+      i <- scorers.indices
+      seqLen <- seqLens
+      step <- stepsFor(seqLen)
+    } yield byCell((task, i, seqLen, step))
+  }
+
+  /** One cell's run directory: metrics.json, config.json and the S7
+    * artifacts (the reference persists model + encoder + scaler alongside
+    * metrics); models that don't expose an MLlib transformer (custom
+    * scorers) have nothing portable to save. */
+  private def writeArtifacts(runDir: java.nio.file.Path, res: Result, task: String,
+      scorerName: String, seqLen: Int, step: Int, fprTarget: Double): Unit = {
+    java.nio.file.Files.createDirectories(runDir)
+    val metricsDoc = graft.sources.Sources.sanitizeDoubles(
+      res.multiclass
+        .withColumn("training_time_seconds",
+          lit(res.timing.trainingTimeSeconds))
+        .withColumn("avg_inference_latency_per_window_sec",
+          lit(res.timing.avgInferenceLatencyPerWindowSec))
+        .withColumn("n_test_windows", lit(res.timing.nTestWindows)))
+      .toJSON.head()
+    java.nio.file.Files.writeString(runDir.resolve("metrics.json"),
+      s"""{"metrics": $metricsDoc}""")
+    java.nio.file.Files.writeString(runDir.resolve("config.json"),
+      s"""{"config": {"task": "$task", "model": "$scorerName", """ +
+        s""""seq_len": $seqLen, "step": $step, """ +
+        s""""fpr_target": $fprTarget}}""")
+    graft.model.ModelIO.saveEncoder(res.encoder, runDir.resolve("encoder").toString)
+    graft.model.ModelIO.saveScaler(res.scaler, runDir.resolve("scaler").toString)
+    if (res.model.isInstanceOf[graft.model.HasMlModel])
+      graft.model.ModelIO.saveModel(res.model, runDir.resolve("model").toString)
   }
 }
 
@@ -284,63 +341,26 @@ object Pipeline2 {
 object Pipeline3 {
 
   /** 3A: severity sweep of seeded degradations over the test windows,
-    * re-scored per (kind, severity, repeat); G7 mean/std across repeats.
-    * The sweep is a deterministic driver loop (70 evaluations in the
-    * reference, pipeline_tests_power.py:255-379); each evaluation is one
-    * distributed job over the degraded windows. */
+    * re-scored per (kind, severity, repeat); G7 mean/std across repeats
+    * (70 evaluations in the reference, pipeline_tests_power.py:255-379).
+    *
+    * ONE plan (SURVEY §3.2): broadcast the (kind, severity, rep, seed)
+    * grid, cross join it against the test windows, degrade with
+    * column-parameterized severity/seed, score once, aggregate once — 2
+    * jobs instead of one job per evaluation. The data grows by the grid
+    * size within the plan (kinds × severities × repeats copies of the
+    * test windows — the point: the whole sweep parallelizes across the
+    * cluster); batch the kinds or repeats if windows × grid exceeds
+    * cluster memory. PipelineSpec keeps the reference's per-evaluation
+    * driver loop as the parity oracle. */
   def robustness(scored: DataFrame, model: graft.model.WindowModel,
       kinds: Seq[String] = Seq("packet_loss", "missing_variables"),
       maxSev: Double = 0.6, nSev: Int = 7, nRepeats: Int = 5,
       baseSeed: Long = 123L): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    // Every sweep evaluation re-reads the test windows; cache them for the
-    // loop's lifetime (all results reduce to driver tuples → safe to
-    // unpersist before returning).
-    val test = scored.where(col("split") === "test")
-      .select(col("win_id").cast("long").as("win_id"), col("window"), col("y"))
-      .cache()
-    val grid = Robustness.severityGrid(maxSev, nSev, nRepeats, baseSeed)
-    val rows = for {
-      kind <- kinds
-      (sev, rep, seed) <- grid
-    } yield {
-      val degraded = kind match {
-        case "packet_loss" =>
-          test.withColumn("window", Robustness.packetLoss(col("window"), col("win_id"), sev, seed))
-        case "missing_variables" =>
-          test.withColumn("window", Robustness.missingVariables(col("window"), col("win_id"), sev, seed))
-        case "clock_offset" =>
-          test.withColumn("window", Robustness.clockOffset(col("window"), col("win_id"), sev, seed))
-        case "drift" =>
-          test.withColumn("window", Robustness.drift(col("window"), col("win_id"), sev, seed))
-        case other => throw new IllegalArgumentException(s"unknown kind $other")
-      }
-      val rescored = model.transform(degraded)
-      val acc = rescored.agg(avg((col("y_pred") === col("y")).cast("double"))).head().getDouble(0)
-      (kind, sev, rep, acc)
-    }
-    test.unpersist(blocking = false)
-    rows.toDF("kind", "severity", "rep", "accuracy")
-      .groupBy("kind", "severity")
-      .agg(avg("accuracy").as("accuracy_mean"),
-        coalesce(stddev_samp(col("accuracy")), lit(0.0)).as("accuracy_std"))
-      .orderBy("kind", "severity")
-  }
-
-  /** 3A as ONE plan (SURVEY §3.2): broadcast the (kind, severity, rep,
-    * seed) grid, cross join against the test windows, degrade with
-    * column-parameterized severity/seed, score once, aggregate once —
-    * 2 jobs instead of kinds×severities×repeats sequential evaluations.
-    * Data inflates by the grid size within the plan (the point: the
-    * whole sweep parallelizes across the cluster); batch the grid if
-    * windows × grid exceeds cluster memory. */
-  def robustnessSweepPlan(scored: DataFrame, model: graft.model.WindowModel,
-      kinds: Seq[String] = Seq("packet_loss", "missing_variables"),
-      maxSev: Double = 0.6, nSev: Int = 7, nRepeats: Int = 5,
-      baseSeed: Long = 123L): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
+    kinds.filterNot(Robustness.Kinds.contains).foreach(k =>
+      throw new IllegalArgumentException(s"unknown kind $k"))
     val test = scored.where(col("split") === "test")
       .select(col("win_id").cast("long").as("win_id"), col("window"), col("y"))
     val grid = for {

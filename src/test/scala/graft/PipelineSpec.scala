@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.Scorers
 import graft.pipelines.{HostImportance, Pipeline1, Pipeline2, Pipeline3}
@@ -161,6 +162,44 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("pipeline1 grid: the scorers of one key share its windows; every cell equals a standalone run") {
+    val config = Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05,
+      chunkSize = 256)
+    val scorers = Seq("logit" -> Scorers.Logistic(maxIter = 30),
+      "gbt" -> Scorers.GBT(maxIter = 3, maxDepth = 3))
+    val cells = Pipeline1.runGrid(spark, power, Seq("current_ma", "power_mw"),
+      "Attack", "State", Seq(col("t")), tasks = Seq("binary"), scorers = scorers,
+      seqLens = Seq(10), stepsFor = _ => Seq(5), base = config)
+    assert(cells.map(_.name) == Seq("binary_logit_seq10_step5", "binary_gbt_seq10_step5"))
+    val results = cells.map(_.outcome.get)
+    assert(results(0).windows eq results(1).windows)
+    results.zip(scorers).foreach { case (got, (name, scorer)) =>
+      val alone = Pipeline1.run(spark, power, Seq("current_ma", "power_mw"),
+        "Attack", "State", Seq(col("t")), scorer, config)
+      assert(got.multiclass.head().toSeq == alone.multiclass.head().toSeq, name)
+      assert(got.confusion.collect().toSet == alone.confusion.collect().toSet, name)
+      assert(got.perState.collect().toSet == alone.perState.collect().toSet, name)
+      assert(got.operational == alone.operational, name)
+      assert(got.timing.nTestWindows == alone.timing.nTestWindows, name)
+      alone.windows.unpersist()
+    }
+  }
+
+  test("pipeline1 grid: a failed prepare fails every cell of its key, and only those") {
+    val cells = Pipeline1.runGrid(spark, power, Seq("current_ma", "power_mw"),
+      "Attack", "State", Seq(col("t")), tasks = Seq("binary", "no_such_task"),
+      scorers = Seq("a" -> Scorers.Logistic(maxIter = 5), "b" -> Scorers.Logistic(maxIter = 6)),
+      seqLens = Seq(10), stepsFor = _ => Seq(5),
+      base = Pipeline1.Config(fprTarget = 0.05, chunkSize = 256))
+    assert(cells.map(_.name) == Seq("binary_a_seq10_step5", "binary_b_seq10_step5",
+      "no_such_task_a_seq10_step5", "no_such_task_b_seq10_step5"))
+    assert(cells.take(2).forall(_.outcome.isSuccess))
+    cells.drop(2).foreach { c =>
+      val e = c.outcome.failed.get
+      assert(e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains("no_such_task"))
+    }
+  }
+
   test("pipeline2: surrogate tree imitates the base model above chance") {
     val p2 = Pipeline2.run(result.scored, nFeatures = 2)
     val agreement = p2.agreement.head().getAs[Double]("agreement")
@@ -178,12 +217,43 @@ class PipelineSpec extends SparkSpec {
     assert(rows.last._2 <= rows.head._2 + 1e-9)
   }
 
+  /** Parity oracle for [[Pipeline3.robustness]]: the reference's sweep as a
+    * driver loop (pipeline_tests_power.py:255-379) — one distributed job
+    * per (kind, severity, repeat) evaluation over the test windows, each
+    * degraded with the STATIC-parameter degradation forms. */
+  private def robustnessLoop(scored: DataFrame,
+      model: graft.model.WindowModel, kinds: Seq[String], maxSev: Double,
+      nSev: Int, nRepeats: Int, baseSeed: Long = 123L): DataFrame = {
+    import graft.ops.Robustness
+    val test = scored.where(col("split") === "test")
+      .select(col("win_id").cast("long").as("win_id"), col("window"), col("y"))
+    val rows = for {
+      kind <- kinds
+      (sev, rep, seed) <- Robustness.severityGrid(maxSev, nSev, nRepeats, baseSeed)
+    } yield {
+      val degrade: (Column, Column) => Column = kind match {
+        case "packet_loss" => Robustness.packetLoss(_, _, sev, seed)
+        case "missing_variables" => Robustness.missingVariables(_, _, sev, seed)
+        case "clock_offset" => Robustness.clockOffset(_, _, sev, seed)
+        case "drift" => Robustness.drift(_, _, sev, seed)
+      }
+      val rescored = model.transform(
+        test.withColumn("window", degrade(col("window"), col("win_id"))))
+      val acc = rescored.agg(avg((col("y_pred") === col("y")).cast("double"))).head().getDouble(0)
+      (kind, sev, rep, acc)
+    }
+    rows.toDF("kind", "severity", "rep", "accuracy")
+      .groupBy("kind", "severity")
+      .agg(avg("accuracy").as("accuracy_mean"),
+        coalesce(stddev_samp(col("accuracy")), lit(0.0)).as("accuracy_std"))
+  }
+
   test("pipeline3A single-plan sweep equals the driver-loop sweep exactly") {
-    val loop = Pipeline3.robustness(result.scored, result.model,
+    val loop = robustnessLoop(result.scored, result.model,
       kinds = Seq("packet_loss", "missing_variables"), maxSev = 0.4, nSev = 3, nRepeats = 2)
       .collect().map(r => (r.getString(0), r.getDouble(1)) ->
         (r.getAs[Double]("accuracy_mean"), r.getAs[Double]("accuracy_std"))).toMap
-    val plan = Pipeline3.robustnessSweepPlan(result.scored, result.model,
+    val plan = Pipeline3.robustness(result.scored, result.model,
       kinds = Seq("packet_loss", "missing_variables"), maxSev = 0.4, nSev = 3, nRepeats = 2)
       .collect().map(r => (r.getString(0), r.getDouble(1)) ->
         (r.getAs[Double]("accuracy_mean"), r.getAs[Double]("accuracy_std"))).toMap

@@ -59,6 +59,39 @@ class SlidingWindowsSpec extends SparkSpec {
     }
   }
 
+  test("segmented chunked windower equals the union of per-segment slideGlobal") {
+    // segment a straddles range partitions, b is shorter than most seqLens,
+    // c has one row, and d has none (no rows → no windows); the input
+    // arrives shuffled across several partitions
+    val sizes = Seq("a" -> 97, "b" -> 3, "c" -> 1, "e" -> 40)
+    val df = sizes.flatMap { case (g, n) =>
+      (1 to n).map(i => (g, (i * 3).toLong, i * 10.0 + g.head))
+    }.toDF("seg", "t", "x").repartition(5)
+    val parts = df.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+        col("seg"), col("t"))
+      .where(col("seg") === "a").select(spark_partition_id()).distinct().count()
+    assert(parts > 1, "segment a must straddle range partitions")
+    for {
+      seqLen <- Seq(1, 2, 4, 9)
+      step <- Seq(1, 3)
+      chunk <- Seq(9, 16, 512)
+      if chunk >= seqLen
+    } {
+      val expected = Seq("a", "b", "c", "d", "e").flatMap { g =>
+        SlidingWindows.slideGlobal(df.where(col("seg") === g), Seq(col("t")), col("x"),
+          seqLen, step)
+          .select($"seg", $"win_id", $"window", $"t").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2), r.getLong(3)))
+      }.sortBy(r => (r._1, r._2))
+      val got = SlidingWindows.slideGlobalChunked(df, Seq(col("t")), col("x"), seqLen, step,
+          chunk, partitionCols = Seq("seg"))
+        .select($"seg", $"win_id", $"window", $"t").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2), r.getLong(3)))
+        .sortBy(r => (r._1, r._2))
+      assert(got.toSeq == expected, s"seqLen=$seqLen step=$step chunk=$chunk")
+    }
+  }
+
   test("partitioned slide never crosses group boundaries") {
     val df = Seq(("a", 1L, 1.0), ("a", 2L, 2.0), ("a", 3L, 3.0),
       ("b", 4L, 4.0), ("b", 5L, 5.0)).toDF("g", "t", "x")
@@ -98,5 +131,29 @@ class SlidingWindowsSpec extends SparkSpec {
       .select("o", "i", "rt").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)
+  }
+
+  test("withGlobalIndex with partition columns equals row_number over partitionBy") {
+    import org.apache.spark.sql.expressions.Window
+    // three segments (one with null keys) interleaved across the input's
+    // partitions; order key with gaps and ties broken by the second key
+    val df = spark.range(0, 600).toDF("n")
+      .select(
+        when(col("n") % 4 === 3, lit(null).cast("string"))
+          .otherwise(concat(lit("s"), (col("n") % 4).cast("string"))).as("seg"),
+        (col("n") * 7 % 300).as("o"), col("n"))
+      .repartition(6)
+    val expected = df
+      .withColumn("i", row_number().over(
+        Window.partitionBy(col("seg")).orderBy(col("o"), col("n"))).cast("long"))
+      .select("n", "seg", "i").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSet
+    for (parts <- Seq(1, 4, 7)) {
+      val got = SlidingWindows.withGlobalIndex(df, Seq(col("o"), col("n")), "i",
+          numPartitions = parts, partitionCols = Seq("seg"))
+        .select("n", "seg", "i").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSet
+      assert(got == expected, s"numPartitions=$parts")
+    }
   }
 }
