@@ -4,35 +4,29 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
-  * Queries run in name order (deterministic) after one untimed warmup
-  * action so the first timed query doesn't absorb JVM/codegen/parquet-
-  * footer warmup (~4s on this container).
+  * Queries run in name order (deterministic) after an untimed warm-up,
+  * so the first timed query does not absorb JVM, codegen and
+  * parquet-footer costs.
   */
 object Bench {
-  /** One flagship query per operator family: warmed untimed before the
-    * suite (plan-shape/codegen coverage) and reported in the compact
-    * first-line stdout summary. */
-  /** r13 (verdict item 8, additions-only): the r12/r13 optimization
-    * targets rotated INTO the warmed headline set and the compact stdout
-    * summary, so the driver's round-over-round subset actually measures
-    * the rewritten surface. Nothing removed or renamed — the original 35
-    * headliners keep their positions (and the stdout map keeps its
-    * original 16 entries, these 4 are appended). Defined before Headline
-    * (object init order). */
-  val RotatedIn: Seq[String] = Seq("g_temperature_scaling",
-    "g13_multiclass_metrics", "graph_clustering_coef", "g_spearman")
-
+  /** One flagship query per operator family, warmed untimed before the
+    * suite (plan-shape and codegen coverage). `q1_agg` plus the first
+    * `CompactSize` entries are the per-query map of the compact stdout
+    * line; runs are compared by those keys, so keep that prefix's names
+    * and order. */
   val Headline: Seq[String] = Seq("q_topk", "g12_ttd", "g14_roc_curve",
     "w1_sliding_windows", "dedup_exact_groups", "dedup_minhash_lsh",
     "dedup_semantic", "dedup_neardup_incremental", "ann_topk_brute",
     "ann_ivf", "ann_ivfpq_rerank", "text_c4_clean", "text_bm25_topk",
-    "corpus_report", "pack_sequences", "sample_token_budget",
-    "quality_classifier", "g_psi", "graph_pagerank",
+    "corpus_report", "pack_sequences", "g_temperature_scaling",
+    "g13_multiclass_metrics", "graph_clustering_coef", "g_spearman",
+    "sample_token_budget", "quality_classifier", "g_psi", "graph_pagerank",
     "linkage_fellegi_sunter", "retrieval_hybrid",
     "dedup_containment", "pack_whole", "corpus_report_incremental",
     "bitext_margin", "g_mondrian", "embedding_matryoshka", "graph_kcore",
     "scd2_build", "g_funnel", "text_fertility", "retrieval_rm3",
-    "sft_flatten", "dq_constraints", "text_unigram_lm") ++ RotatedIn
+    "sft_flatten", "dq_constraints", "text_unigram_lm")
+  val CompactSize = 19
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,19 +38,13 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     TsContract.check(spark, sfDir)
-    // Untimed warmup: the FIXED headline set (one flagship query per
-    // operator family — the same list the compact stdout summary reports)
-    // plus a scan of every table, so no timed query absorbs first-reader
-    // footer/metadata costs or first-run janino compilation (~1.9 s for
-    // the ANN stage family alone, round-9 profile). This is the builder
-    // "bench pair" methodology (warm second run is the graded number)
-    // applied inside one JVM to a bounded representative subset: codegen
-    // compile is a per-JVM artifact the 100 TB story amortizes to zero,
-    // not engine throughput. Bounded (~20 queries ≈ 15 s untimed);
-    // warming the full 196-query suite would double the driver's bench
-    // wall-clock for the remaining long tail of already-cheap queries.
-    // A failed warm-up is reported and skipped: it leaves that query cold
-    // but must neither stop the warm-up nor pass unnoticed.
+    // Untimed warm-up: the headline set plus a scan of every table, so no
+    // timed query absorbs first-reader footer/metadata costs or first-run
+    // janino compilation. Codegen compile is a per-JVM cost, not engine
+    // throughput; warming a bounded subset instead of the whole suite
+    // keeps the bench's wall clock from doubling. A failed warm-up is
+    // reported and skipped: it leaves that query cold but must neither
+    // stop the warm-up nor pass unnoticed.
     def warm(what: String)(body: => Unit): Unit =
       try body catch { case e: Throwable =>
         System.err.println(s"[bench] warm-up $what failed: ${e.getClass.getName}: ${e.getMessage}") }
@@ -64,8 +52,7 @@ object Bench {
       warm(q)(SparkEntry.queries(q)(spark, sfDir).count()))
     graft.queries.Q.tableNames.foreach(t =>
       warm(s"table $t")(graft.queries.Q.table(spark, sfDir, t).count()))
-    // optional args: run only these queries (local profiling — the
-    // driver always invokes with no args, timing the full surface)
+    // optional args: run only these queries (no args = the full surface)
     val only: Set[String] = args.toSet
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -78,9 +65,7 @@ object Bench {
       try spark.catalog.clearCache() catch { case _: Throwable => () }
       (name, dt, ok)
     }
-    // Millisecond precision keeps the JSON line ~2.5x shorter (the driver
-    // snapshots a bounded tail of stdout; full doubles overflowed it and
-    // truncated the first ~64 timings out of BENCH_r03).
+    // Millisecond precision keeps the JSON lines ~2.5x shorter.
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
@@ -89,48 +74,31 @@ object Bench {
       .mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
-    // BENCH_r06/r07/r08 all came back "parsed": null, and the r8 snapshot
-    // starts MID-LINE ~75% into the full JSON (at "q_arith") — the
-    // driver's stdout window is BOUNDED (~a few KB) and the 196-query
-    // line (~4 KB) simply doesn't fit, from either end. So the FIRST
-    // substantive stdout line is now a compact (~0.5 KB) summary that
-    // parses on its own: same contract fields, with `queries` reduced to
-    // a fixed headline subset and the full per-query map in
-    // BENCH_FULL.json (committed per round). The full line still follows
-    // twice for any unbounded capture.
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","cpus":"$cpus"}"""
+    // Stdout is read through a bounded tail window (the last ~2000
+    // chars), which the full per-query line (~4 KB) does not fit. Stdout
+    // therefore carries only a compact (~0.8 KB) line with the same
+    // contract fields and `queries` reduced to the headline prefix; the
+    // full line goes to BENCH_FULL.json.
     val byName = results.map(r => r._1 -> r._2).toMap
-    // r13: the 4 RotatedIn targets are APPENDED to the stdout map (the
-    // original q1_agg + 15 stay) — ~830 B total, still two complete
-    // copies inside the driver's ~2000-char stdout tail window
-    val hq = ("q1_agg" +: (Headline.take(15) ++ RotatedIn))
+    val hq = ("q1_agg" +: Headline.take(CompactSize))
       .filter(byName.contains)
       .map(k => "\"" + k + "\":" + fmt(byName(k))).mkString("{", ",", "}")
     val shortLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$hq,"failed":$failed,"n_queries":${results.size},"queries_full_in":"BENCH_FULL.json","sf":"$sfDir"}"""
-    // BENCH_r06..r09 all came back "parsed": null: the driver snapshots
-    // the LAST 2000 chars of stdout (measured from BENCH_r09.json), sbt
-    // appends its own ~73-char "[success] Total time" line, and the ~4 KB
-    // full-map line printed last meant the window never held a complete
-    // JSON line. The full map now goes ONLY to BENCH_FULL.json; stdout
-    // carries just this compact summary (q1 + 15 headliners ≈ 650 B),
-    // printed first AND as the very last line — TWO complete copies fit
-    // inside the 2000-char tail window with the sbt epilogue.
+    // The compact line prints twice, here and as the very last line: sbt
+    // appends its own "[success] Total time" line, and two complete
+    // copies still fit inside the tail window next to it.
     println(shortLine)
-    // Belt-and-braces: persist the full line where tail truncation can't
-    // reach it (committed per round for round-over-round comparison).
-    // Path comes from the environment or the working directory — a
-    // hardcoded absolute path would silently skip the artifact on any
-    // other checkout; and a failed write is WARNed, not swallowed.
+    // The output path comes from the environment or the working
+    // directory; a failed write is WARNed, not swallowed.
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_OUT", "BENCH_FULL.json"))
     try java.nio.file.Files.writeString(outPath, line + "\n")
     catch { case e: Throwable =>
       System.err.println(s"WARN: could not write $outPath: $e") }
-    // r13 artifact hygiene (r12 verdict item 5): every run ALSO writes a
-    // core-count-suffixed copy, so an 8-core re-run can no longer
-    // clobber the 32-core full map (additive — BENCH_FULL.json remains
-    // the primary artifact the driver and judge read)
+    // Every run also writes a core-count-suffixed copy, so runs at
+    // different core counts do not overwrite each other's full map.
     val cpuPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_OUT", "BENCH_FULL.json")
         .replaceAll("\\.json$", s"_c$cpus.json"))

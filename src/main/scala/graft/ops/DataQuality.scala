@@ -126,7 +126,8 @@ object DataQuality {
     // |fact rows| (4x fewer on lineitem->orders; at 100 TB the gap is the
     // fact/dim cardinality ratio). Sum of multiplicity over missing keys
     // == the row-level anti count, exactly. Locally neutral (0.42 s both
-    // shapes at sf0.1, ProbeR13), kept on the scale argument.
+    // shapes at sf0.1, OPTIMIZATION_r13.md item 6), kept on the scale
+    // argument.
     val refCounts: Map[String, (Long, Long)] = refRules.map {
       case r @ RefIntegrity(c, dim, dc) =>
         val total = row.getAs[Long](r.name + "\u0000total")

@@ -53,7 +53,7 @@ object Stats {
     * k-countDistinct aggregate rewrites into an Expand that is QUADRATIC
     * in width (k rows out per input row × k-wide projections: 300 cols
     * at 50k rows already costs 320 s one-pass, 900 cols OOMs — measured,
-    * ScaleProbe `widehost`); this form needs no Expand at all:
+    * SCALE.md "Round 10"); this form needs no Expand at all:
     *
     *   nunique(dropna=False) <= 1  ⟺  n_nonnull == 0
     *                                  ∨ (n_nonnull == n ∧ min == max)

@@ -407,11 +407,12 @@ object TextOps {
     * exploded corpus against the logprob table — deliberately NOT forced
     * broadcast (web-scale vocabularies are cluster-sized; AQE broadcasts
     * when small) — and one per-doc aggregation. Measured tradeoff
-    * (ScaleProbe, 2M docs): pre-collapsing to distinct (doc, token)
-    * pairs ADDS a same-sized shuffle and ran 2.3× slower here; that pair
-    * variant only wins when per-doc token repetition is Zipf-heavy AND
-    * the vocabulary is too big to broadcast. Returns
-    * (id, n_tokens, avg_logp, ppl); zero-token docs drop out. */
+    * (2M docs, SCALE.md "Probe measurements"): pre-collapsing to
+    * distinct (doc, token) pairs ADDS a same-sized shuffle and ran 2.3×
+    * slower here; that pair variant only wins when per-doc token
+    * repetition is Zipf-heavy AND the vocabulary is too big to
+    * broadcast. Returns (id, n_tokens, avg_logp, ppl); zero-token docs
+    * drop out. */
   def lmScore(df: org.apache.spark.sql.DataFrame, id: String,
       text: Column): org.apache.spark.sql.DataFrame = {
     val toks = df.select(col(id), explode(split(trim(text), "\\s+")).as("token"))

@@ -48,7 +48,7 @@ object Sources {
     // all candidates are DoubleType after coercion, so the no-Expand
     // min/max form applies — at the reference's real ~900-column width
     // the k-countDistinct Expand is quadratic in k and OOMs (measured,
-    // ScaleProbe widehost); parity with the exact form is spec-pinned
+    // SCALE.md "Round 10"); parity with the exact form is spec-pinned
     val constant = Stats.constantColumnsFast(coerced, eventCandidates)
     val eventCols = eventCandidates.filterNot(constant.contains)
     val cleaned = rowIndexTimestamp(coerced.drop(constant: _*))

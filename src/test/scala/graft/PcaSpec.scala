@@ -141,7 +141,7 @@ class PcaSpec extends SparkSpec {
     // across partitionings (the embedding_pca literal-replay twin's
     // contract); the stored mean keeps its ~1e-15 summation wobble,
     // which the projection face cannot see (guards the r8/r9 fix at the
-    // fit level — the 10M-row version runs as ScaleProbe pcasweep)
+    // fit level — the 10M-row measurement is in SCALE.md "Round 10")
     val df = fakeRows(400, 6).toDF("id", "v")
     val base = Pca.pcaFit(df.coalesce(1), col("v"), d = 6, nComponents = 3)
     val baseProj = df.coalesce(1)
