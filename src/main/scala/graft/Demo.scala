@@ -35,7 +35,7 @@ object Demo {
 
     val r = Pipeline1.run(spark, power, Seq("value", "v2"), "Attack", "State",
       Seq(col("ts"), col("event_id")), Scorers.Logistic(maxIter = 25),
-      Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05, chunkSize = 8192))
+      Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05))
 
     Sources.writeWindows(r.windows, s"$outDir/windows")
     Sources.writeMetricsJson(

@@ -28,7 +28,9 @@ object ScalarQuant {
 
   /** Per-dimension affine model over L2-NORMALIZED vectors: `mins(i)` and
     * `scales(i) = (max_i - min_i)/255`; a constant dimension has scale 0
-    * and always encodes to code 0. */
+    * and always encodes to code 0. A dimension with no finite value (every
+    * element null or NaN) has min 0 and scale 0: it encodes to code 0 and
+    * dequantizes to 0. */
   case class Sq8Model(mins: Array[Double], scales: Array[Double]) {
     def dim: Int = mins.length
   }
@@ -52,9 +54,12 @@ object ScalarQuant {
       .normalizedMinMaxCol(col(vec).cast("array<double>"), dim).as("mm"))
       .head()
     val mm = r.getSeq[Double](0)
-    val mins = mm.take(dim).toArray
-    val maxs = mm.drop(dim).toArray
-    Sq8Model(mins, maxs.zip(mins).map { case (mx, mn) => (mx - mn) / 255.0 })
+    // min skips NaN (Double.compare orders it greatest): a dimension with
+    // no finite value keeps the +Inf seed
+    val (mins, scales) = mm.take(dim).zip(mm.drop(dim)).map { case (mn, mx) =>
+      if (java.lang.Double.isFinite(mn)) (mn, (mx - mn) / 255.0) else (0.0, 0.0)
+    }.unzip
+    Sq8Model(mins.toArray, scales.toArray)
   }
 
   /** Encode an L2-normalized `array<double>` column to `array<tinyint>`

@@ -31,15 +31,7 @@ object Pipeline1 {
       fprTarget: Double = 1e-3,
       hopSeconds: Double = 1.0,
       trainFrac: Double = 0.70,
-      valFrac: Double = 0.15,
-      chunkSize: Int = 65536,
-      // 0 = plain window G1; > 0 = the skew-immune salted split with
-      // this many range buckets (ChronoSplit.withSplitSalted) — the
-      // 100 TB setting when one (Attack, State) group dominates (AQE
-      // splits skewed joins, not window partitions; SCALE.md chronoskew
-      // row). Same rows either way — requires orderCols = (numeric ts,
-      // unique tie-breakers...).
-      saltedSplitBuckets: Int = 0)
+      valFrac: Double = 0.15)
 
   /** Wall-clock measurements the reference records into every run's
     * metrics.json (pipeline_trainingmodels_power.py:160-192,328-329;
@@ -105,17 +97,9 @@ object Pipeline1 {
       java.util.Arrays.asList(fitted.collect(): _*), fitted.schema)
     val encoded = Labels.encodeLabel(filtered, encoder, target, "y")
 
-    // 3. per-(Attack, State) chronological split (G1) — one shuffle;
-    //    saltedSplitBuckets > 0 swaps in the skew-immune two-phase form
-    //    (row-for-row identical output, ChronoSplitSpec parity)
-    val split =
-      if (config.saltedSplitBuckets > 0)
-        ChronoSplit.withSplitSalted(encoded, Seq(attackCol, stateCol),
-          orderCols.head, orderCols.tail, config.saltedSplitBuckets,
-          config.trainFrac, config.valFrac)
-      else
-        ChronoSplit.withSplit(encoded, Seq(attackCol, stateCol), orderCols,
-          config.trainFrac, config.valFrac)
+    // 3. per-(Attack, State) chronological split (G1) — one shuffle
+    val split = ChronoSplit.withSplit(encoded, Seq(attackCol, stateCol), orderCols,
+      config.trainFrac, config.valFrac)
 
     // 4. standardize on train stats only (P10)
     val scaler = Stats.fitStandardScaler(split.where(col("split") === "train"), features)
@@ -124,13 +108,13 @@ object Pipeline1 {
     // 5. sliding windows per split (W1/W2): label/state/attack from the
     //    window's LAST row; within a split, windows slide over the
     //    concatenated sorted rows (crossing attack/state boundaries — the
-    //    spec, SURVEY §7.4.2). All three splits window in ONE pass: the
-    //    split is the windower's segment column, so one range exchange on
-    //    (split, order) ranks every split at once, win_id restarts per
-    //    split, and no window crosses a split boundary.
+    //    spec, SURVEY §7.4.2). All three splits window in ONE pass of the
+    //    streaming windower: the split is its segment column, so one range
+    //    exchange on (split, order) orders every split at once, win_id
+    //    restarts per split, and no window crosses a split boundary.
     val featArray = array(features.map(col): _*)
-    val windows = SlidingWindows.slideGlobalChunked(scaled, orderCols, featArray,
-        config.seqLen, config.step, config.chunkSize, partitionCols = Seq("split"))
+    val windows = SlidingWindows.slideGlobalStreaming(scaled, orderCols, featArray,
+        config.seqLen, config.step, partitionCols = Seq("split"))
       .select(col("split"), col("win_id"), col("window"), col("y"),
         col(attackCol).as("attack"), col(stateCol).as("state"),
         col("state_bin").as("state_bin_last"))
@@ -140,7 +124,14 @@ object Pipeline1 {
       // its fit alone (the reference fits on pre-materialized npz arrays,
       // func_models.py:339).
       .cache()
-    windows.count()
+    // the materializing job counts the train windows: a key without any
+    // fails here, by name, instead of inside every scorer's fit
+    val nTrain = windows.agg(count(when(col("split") === "train", true)))
+      .head().getLong(0)
+    if (nTrain == 0L) windows.unpersist()
+    require(nTrain > 0L, s"no train windows for task=${config.task} " +
+      s"seqLen=${config.seqLen} step=${config.step}: the train split has " +
+      s"${split.where(col("split") === "train").count()} rows")
     Prepared(windows, encoder, scaler)
   }
 

@@ -23,14 +23,9 @@ object RowsOnlyQueries {
   private val ord = Seq(col("ts").asc, col("event_id").asc)
 
   /** Shared windowed events: seq_len=8, step=8 (tumbling), one feature.
-    * Uses the streaming windower — byte-equal to the global form (proven
-    * by the w1_streaming_parity oracle query), no single-partition stage,
-    * and the cheapest scale-safe physical form: one range exchange + two
-    * jobs, vs. the chunked form's extra hash exchange for the chunk
-    * window (profiled ~25% faster on this family at sf0.1; the round-2
-    * numbers for r1–r4 came from the since-removed serial
-    * Window.orderBy rank, which was faster at bench scale only because
-    * 100k rows fit one partition). */
+    * Uses the streaming windower — the one scale path, byte-equal to the
+    * global form (proven by the w1_streaming_parity oracle query): one
+    * range exchange + two jobs, no single-partition stage. */
   private def wins(s: org.apache.spark.sql.SparkSession, dir: String) =
     SlidingWindows.slideGlobalStreaming(scoredEvents(s, dir), ord, array(col("value")),
       seqLen = 8, step = 8)

@@ -61,16 +61,17 @@ object SplitWindowQueries {
         .orderBy("win_id")
     }),
 
-    "w1_chunked_parity" -> ((s, dir) => {
-      // The scale-path windower (range-chunked with seqLen-1 overlap) must
-      // produce byte-identical windows to the single-partition form — this
-      // query IS the parity proof, run through the oracle for both.
+    "w1_segmented_parity" -> ((s, dir) => {
+      // The form pipeline 1 runs: the streaming windower with a segment
+      // column (one range exchange on (segment, order); win_id restarts
+      // per segment, no window crosses one) — each event_type is its own
+      // global sequence, against a PARTITION BY twin.
       val ev = scoredEvents(s, dir)
-      SlidingWindows.slideGlobalChunked(ev, ord, col("value"), seqLen = 5, step = 7,
-          chunkSize = 512)
-        .select(col("win_id").cast("long").as("win_id") +: winCols(5) :+
+      SlidingWindows.slideGlobalStreaming(ev, ord, col("value"), seqLen = 5, step = 7,
+          rangePartitions = 8, partitionCols = Seq("event_type"))
+        .select(col("event_type") +: col("win_id") +: winCols(5) :+
           col("y_true").as("y") :+ col("event_id").as("end_event_id"): _*)
-        .orderBy("win_id")
+        .orderBy("event_type", "win_id")
     }),
 
     "w1_streaming_parity" -> ((s, dir) => {
@@ -158,8 +159,18 @@ object SplitWindowQueries {
     "g1_chrono_split_salted" -> g1OracleSql,
 
     "w1_sliding_windows" -> w1OracleSql,
-    "w1_chunked_parity" -> w1OracleSql,
     "w1_streaming_parity" -> w1OracleSql,
+
+    "w1_segmented_parity" ->
+      s"""SELECT event_type, rn AS win_id, ${winColsSql(5)}, y, event_id AS end_event_id FROM (
+        |  SELECT event_type, event_id,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn,
+        |    list(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
+        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS "window",
+        |    y_true AS y
+        |  FROM (${Q.scoredEventsSql}) se) t
+        |WHERE rn >= 5 AND (rn - 5) % 7 = 0
+        |ORDER BY event_type, win_id""".stripMargin,
 
     "w1_partitioned" ->
       s"""SELECT user_id, rn AS win_id, ${winColsSql(3)}, event_id AS end_event_id FROM (

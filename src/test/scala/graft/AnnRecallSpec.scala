@@ -193,4 +193,23 @@ class AnnRecallSpec extends SparkSpec {
       .agg(max("maxerr")).head().getDouble(0)
     assert(errs <= maxScale / 2 + 1e-12, s"dequant error $errs vs scale/2 ${maxScale / 2}")
   }
+
+  test("sq8 fit: a dimension with no finite value fits min 0 and scale 0; roundtrip has no NaN") {
+    import graft.ops.ScalarQuant
+    // the third element is always null
+    val df = (0 until 40).map { i =>
+      (i.toLong, Seq[Option[Double]](Some(1.0 + i % 5), Some(-2.0 + i % 3), None,
+        Some(0.5 * i)))
+    }.toDF("id", "vec")
+    val m = ScalarQuant.fitSq8(df, "vec", 4)
+    assert((m.mins ++ m.scales).forall(x => java.lang.Double.isFinite(x)),
+      s"mins ${m.mins.toSeq} scales ${m.scales.toSeq}")
+    assert(m.mins(2) == 0.0 && m.scales(2) == 0.0)
+    val dv = ScalarQuant.encodeCorpus(df, "id", "vec", m)
+      .select(ScalarQuant.dequantSq8(col("codes"), m).as("dv")).collect()
+      .map(_.getSeq[Any](0))
+    assert(dv.length == 40)
+    assert(dv.forall(_.forall(x => x != null && !x.asInstanceOf[Double].isNaN)),
+      dv.take(3).toSeq)
+  }
 }

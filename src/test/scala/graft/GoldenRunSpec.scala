@@ -64,7 +64,7 @@ class GoldenRunSpec extends SparkSpec {
       scorers = Seq("logit" -> Scorers.Logistic(maxIter = 30)),
       seqLens = Seq(10), stepsFor = _ => Seq(5),
       outputRoot = Some(root),
-      base = Pipeline1.Config(fprTarget = 0.05, chunkSize = 256))
+      base = Pipeline1.Config(fprTarget = 0.05))
     assert(cells.length == 1 && cells.head.outcome.isSuccess,
       cells.head.outcome.toString)
     val runDir = java.nio.file.Paths.get(root, "binary_logit_seq10_step5")
@@ -99,7 +99,7 @@ class GoldenRunSpec extends SparkSpec {
       scorers = Seq("logit" -> Scorers.Logistic(maxIter = 30)),
       seqLens = Seq(10), stepsFor = _ => Seq(5),
       outputRoot = Some(root),
-      base = Pipeline1.Config(fprTarget = 0.05, chunkSize = 256))
+      base = Pipeline1.Config(fprTarget = 0.05))
     val cfg = parseFlat(java.nio.file.Files.readString(java.nio.file.Paths
       .get(root, "binary_logit_seq10_step5", "config.json")), "config")
     assert(cfg == Map("task" -> "binary", "model" -> "logit",

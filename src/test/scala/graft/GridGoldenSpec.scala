@@ -54,13 +54,19 @@ class GridGoldenSpec extends SparkSpec {
       scorers = Seq("logit" -> Scorers.Logistic(maxIter = 30)),
       seqLens = Seq(10, 20, 100000), stepsFor = l => Seq(l / 2),
       outputRoot = Some(root),
-      base = Pipeline1.Config(fprTarget = 0.05, chunkSize = 256))
+      base = Pipeline1.Config(fprTarget = 0.05))
     assert(cells.length == 3)
     val byName = cells.map(c => c.name -> c).toMap
     assert(byName("binary_logit_seq10_step5").outcome.isSuccess)
     assert(byName("binary_logit_seq20_step10").outcome.isSuccess)
     assert(byName("binary_logit_seq100000_step50000").outcome.isFailure,
       "the poison cell was expected to fail")
+    // it fails in prepare, by name, not inside the scorer's fit
+    val poison = byName("binary_logit_seq100000_step50000").outcome.failed.get
+    assert(poison.isInstanceOf[IllegalArgumentException], poison.toString)
+    assert(poison.getMessage.contains(
+      "no train windows for task=binary seqLen=100000 step=50000: the train split has "),
+      poison.getMessage)
     // isolation: the failed cell wrote no run directory
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "binary_logit_seq100000_step50000")))

@@ -28,14 +28,14 @@ object LawsProps extends Properties("GraftLaws") {
       got == expected
     }
 
-  property("chunked windower == global windower for any chunk >= seqLen") =
-    Prop.forAll(Gen.choose(13, 90), seqLenG, stepG, Gen.choose(12, 64)) { (n, seqLen, step, chunk0) =>
-      val chunk = math.max(chunk0, seqLen)
+  property("streaming windower == global windower for any rangePartitions") =
+    Prop.forAll(Gen.choose(13, 90), seqLenG, stepG, Gen.choose(1, 24)) { (n, seqLen, step, parts) =>
       val df = (1 to n).map(i => (i.toLong, i.toDouble)).toDF("t", "x").repartition(3)
       val a = SlidingWindows.slideGlobal(df, Seq(col("t")), col("x"), seqLen, step)
         .select("win_id", "window").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toList)).sortBy(_._1).toList
-      val b = SlidingWindows.slideGlobalChunked(df, Seq(col("t")), col("x"), seqLen, step, chunk)
+      val b = SlidingWindows.slideGlobalStreaming(df, Seq(col("t")), col("x"), seqLen, step,
+          rangePartitions = parts)
         .select("win_id", "window").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toList)).sortBy(_._1).toList
       a == b

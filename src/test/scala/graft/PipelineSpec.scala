@@ -27,8 +27,7 @@ class PipelineSpec extends SparkSpec {
   private lazy val result = Pipeline1.run(
     spark, power, Seq("current_ma", "power_mw"), "Attack", "State",
     Seq(col("t")), Scorers.Logistic(maxIter = 30),
-    Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05,
-      chunkSize = 256))
+    Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05))
 
   test("pipeline1: windows carry split/label/state; counts follow the window law per split") {
     val counts = result.windows.groupBy("split").count().collect()
@@ -67,24 +66,10 @@ class PipelineSpec extends SparkSpec {
     val again = Pipeline1.run(
       spark, power, Seq("current_ma", "power_mw"), "Attack", "State",
       Seq(col("t")), Scorers.Logistic(maxIter = 30),
-      Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05,
-        chunkSize = 256))
+      Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05))
     val a = result.multiclass.head().toSeq
     val b = again.multiclass.head().toSeq
     assert(a == b)
-  }
-
-  test("pipeline1 with the salted G1 split: identical metrics to the window form") {
-    // saltedSplitBuckets swaps the split's physical plan only — the
-    // monster-group configuration must not move a single metric
-    val salted = Pipeline1.run(
-      spark, power, Seq("current_ma", "power_mw"), "Attack", "State",
-      Seq(col("t")), Scorers.Logistic(maxIter = 30),
-      Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05,
-        chunkSize = 256, saltedSplitBuckets = 8))
-    assert(salted.multiclass.head().toSeq == result.multiclass.head().toSeq)
-    assert(salted.confusion.collect().map(_.toSeq).toSeq ==
-      result.confusion.collect().map(_.toSeq).toSeq)
   }
 
   test("pipeline1 timing: training time and per-window inference latency recorded") {
@@ -116,7 +101,7 @@ class PipelineSpec extends SparkSpec {
       scorers = Seq("logit" -> Scorers.Logistic(maxIter = 10), "poison" -> PoisonAt(10)),
       seqLens = Seq(8, 10, 12), stepsFor = _ => Seq(5),
       outputRoot = Some(root),
-      base = Pipeline1.Config(fprTarget = 0.05, chunkSize = 256))
+      base = Pipeline1.Config(fprTarget = 0.05))
     assert(cells.length == 6)
     val (ok, bad) = cells.partition(_.outcome.isSuccess)
     assert(bad.map(_.name) == Seq("binary_poison_seq10_step5"))
@@ -163,8 +148,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pipeline1 grid: the scorers of one key share its windows; every cell equals a standalone run") {
-    val config = Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05,
-      chunkSize = 256)
+    val config = Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05)
     val scorers = Seq("logit" -> Scorers.Logistic(maxIter = 30),
       "gbt" -> Scorers.GBT(maxIter = 3, maxDepth = 3))
     val cells = Pipeline1.runGrid(spark, power, Seq("current_ma", "power_mw"),
@@ -190,7 +174,7 @@ class PipelineSpec extends SparkSpec {
       "Attack", "State", Seq(col("t")), tasks = Seq("binary", "no_such_task"),
       scorers = Seq("a" -> Scorers.Logistic(maxIter = 5), "b" -> Scorers.Logistic(maxIter = 6)),
       seqLens = Seq(10), stepsFor = _ => Seq(5),
-      base = Pipeline1.Config(fprTarget = 0.05, chunkSize = 256))
+      base = Pipeline1.Config(fprTarget = 0.05))
     assert(cells.map(_.name) == Seq("binary_a_seq10_step5", "binary_b_seq10_step5",
       "no_such_task_a_seq10_step5", "no_such_task_b_seq10_step5"))
     assert(cells.take(2).forall(_.outcome.isSuccess))

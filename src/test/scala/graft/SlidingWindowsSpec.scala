@@ -5,8 +5,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.SlidingWindows
 
-/** W1 laws (SURVEY §5.2): window-count law, last-row labeling, chunked
-  * parity, per-window stats. Ref laws: func_preproc.py:206-247,
+/** W1 laws (SURVEY §5.2): window-count law, last-row labeling, streaming
+  * (and segmented) parity, per-window stats. Ref laws: func_preproc.py:206-247,
   * pipeline_tests_power.py:154. */
 class SlidingWindowsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,55 +40,58 @@ class SlidingWindowsSpec extends SparkSpec {
     assert(out.map(_.getString(2)).toSeq == Seq("lab3", "lab5", "lab7", "lab9"))
   }
 
-  test("chunked windower equals single-partition windower on every grid point") {
+  test("streaming windower equals single-partition windower on every grid point") {
     val df = series(97).repartition(5)
     for {
       seqLen <- Seq(1, 4, 9)
       step <- Seq(1, 3)
-      chunk <- Seq(16, 32, 512) // incl. chunk > n (single-chunk edge)
+      rangeParts <- Seq(1, 4, 19) // incl. one partition (single-chunk edge)
     } {
       val a = SlidingWindows.slideGlobal(df, Seq(col("t")), col("x"), seqLen, step)
         .select($"win_id".cast("long"), $"window").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
         .sortBy(_._1)
-      val b = SlidingWindows.slideGlobalChunked(df, Seq(col("t")), col("x"), seqLen, step, chunk)
+      val b = SlidingWindows.slideGlobalStreaming(df, Seq(col("t")), col("x"), seqLen, step,
+          rangePartitions = rangeParts)
         .select($"win_id".cast("long"), $"window").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
         .sortBy(_._1)
-      assert(a.toSeq == b.toSeq, s"seqLen=$seqLen step=$step chunk=$chunk")
+      assert(a.toSeq == b.toSeq, s"seqLen=$seqLen step=$step rangeParts=$rangeParts")
     }
   }
 
-  test("segmented chunked windower equals the union of per-segment slideGlobal") {
+  test("segmented streaming windower equals the union of per-segment slideGlobal") {
     // segment a straddles range partitions, b is shorter than most seqLens,
-    // c has one row, and d has none (no rows → no windows); the input
-    // arrives shuffled across several partitions
-    val sizes = Seq("a" -> 97, "b" -> 3, "c" -> 1, "e" -> 40)
-    val df = sizes.flatMap { case (g, n) =>
-      (1 to n).map(i => (g, (i * 3).toLong, i * 10.0 + g.head))
-    }.toDF("seg", "t", "x").repartition(5)
-    val parts = df.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
-        col("seg"), col("t"))
+    // c has one row, d has none (no rows → no windows), the null segment
+    // is a segment of its own, and n has null order keys (nulls first,
+    // ties broken by k); the input arrives shuffled across partitions
+    val sizes = Seq[(String, Int)]("a" -> 97, "b" -> 3, "c" -> 1, "e" -> 40, (null, 25), "n" -> 30)
+    val df = sizes.zipWithIndex.flatMap { case ((g, n), gi) =>
+      (1 to n).map { i =>
+        val t = if (g == "n" && i % 4 == 0) None else Some((i * 3).toLong)
+        (g, t, (gi * 1000 + i).toLong, i * 10.0 + gi)
+      }
+    }.toDF("seg", "t", "k", "x").repartition(5)
+    val ord = Seq(col("t"), col("k"))
+    val parts = df.repartitionByRange(4, col("seg"), col("t"), col("k"))
       .where(col("seg") === "a").select(spark_partition_id()).distinct().count()
     assert(parts > 1, "segment a must straddle range partitions")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select($"seg", $"win_id", $"window", $"k").collect()
+        .map(r => (Option(r.getString(0)), r.getLong(1), r.getSeq[Double](2), r.getLong(3)))
+        .sortBy(r => (r._1, r._2))
     for {
       seqLen <- Seq(1, 2, 4, 9)
       step <- Seq(1, 3)
-      chunk <- Seq(9, 16, 512)
-      if chunk >= seqLen
+      rangeParts <- Seq(1, 4, 19)
     } {
-      val expected = Seq("a", "b", "c", "d", "e").flatMap { g =>
-        SlidingWindows.slideGlobal(df.where(col("seg") === g), Seq(col("t")), col("x"),
-          seqLen, step)
-          .select($"seg", $"win_id", $"window", $"t").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2), r.getLong(3)))
+      val expected = Seq("a", "b", "c", "d", "e", "n", null).flatMap { g =>
+        rows(SlidingWindows.slideGlobal(df.where(col("seg") <=> g), ord, col("x"),
+          seqLen, step))
       }.sortBy(r => (r._1, r._2))
-      val got = SlidingWindows.slideGlobalChunked(df, Seq(col("t")), col("x"), seqLen, step,
-          chunk, partitionCols = Seq("seg"))
-        .select($"seg", $"win_id", $"window", $"t").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2), r.getLong(3)))
-        .sortBy(r => (r._1, r._2))
-      assert(got.toSeq == expected, s"seqLen=$seqLen step=$step chunk=$chunk")
+      val got = rows(SlidingWindows.slideGlobalStreaming(df, ord, col("x"), seqLen, step,
+          rangePartitions = rangeParts, partitionCols = Seq("seg")))
+      assert(got.toSeq == expected, s"seqLen=$seqLen step=$step rangeParts=$rangeParts")
     }
   }
 
@@ -133,7 +136,7 @@ class SlidingWindowsSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("withGlobalIndex with partition columns equals row_number over partitionBy") {
+  test("segmented windower, seqLen 1: win_id equals row_number over partitionBy") {
     import org.apache.spark.sql.expressions.Window
     // three segments (one with null keys) interleaved across the input's
     // partitions; order key with gaps and ties broken by the second key
@@ -149,11 +152,11 @@ class SlidingWindowsSpec extends SparkSpec {
       .select("n", "seg", "i").collect()
       .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSet
     for (parts <- Seq(1, 4, 7)) {
-      val got = SlidingWindows.withGlobalIndex(df, Seq(col("o"), col("n")), "i",
-          numPartitions = parts, partitionCols = Seq("seg"))
-        .select("n", "seg", "i").collect()
+      val got = SlidingWindows.slideGlobalStreaming(df, Seq(col("o"), col("n")), col("n"),
+          seqLen = 1, step = 1, rangePartitions = parts, partitionCols = Seq("seg"))
+        .select("n", "seg", "win_id").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSet
-      assert(got == expected, s"numPartitions=$parts")
+      assert(got == expected, s"rangePartitions=$parts")
     }
   }
 }

@@ -85,9 +85,9 @@ class WideHostFrameSpec extends SparkSpec {
     val (df, eventCols) = Sources.loadHost(spark, csvPath)
     val topK = eventCols.take(8) // stand-in for importance-ranked selection
     val feats = array(topK.map(c => col(c).cast("double")): _*)
-    val wins = SlidingWindows.slideGlobalChunked(
+    val wins = SlidingWindows.slideGlobalStreaming(
       df.select((topK :+ "timestamp").map(col): _*),
-      Seq(col("timestamp")), feats, seqLen = 5, step = 5, chunkSize = 64)
+      Seq(col("timestamp")), feats, seqLen = 5, step = 5, rangePartitions = 2)
     assert(wins.count() == 24) // 1 + (120-5)/5
     val row = wins.select("window").head().getSeq[scala.collection.Seq[Double]](0)
     assert(row.size == 5 && row.head.size == 8)
