@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{DotProduct, JaccardSim, L2Norm, MinHashSig, WordShingles}
+import org.apache.spark.sql.graft.{BetaInv, DotProduct, JaccardSim, JaroWinkler, L2Norm,
+  MinHashSig, WordShingles}
 
 /** SparkSessionExtensions registering the engine's native expressions as
   * SQL functions, so `spark.sql("SELECT graft_dot(a, b) …")` works and
@@ -16,57 +17,10 @@ import org.apache.spark.sql.graft.{DotProduct, JaccardSim, L2Norm, MinHashSig, W
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => JaccardSizeGuardRule)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot(arrayA, arrayB)")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_l2norm"),
-      new ExpressionInfo(classOf[L2Norm].getName, "graft_l2norm"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_l2norm(array)")
-        L2Norm(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_shingles(text, nWords)")
-        WordShingles(children.head, GraftExtensions.intLit(children(1), "nWords"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_minhash(shingles, numHashes)")
-        MinHashSig(children.head, GraftExtensions.intLit(children(1), "numHashes"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[JaccardSim].getName, "graft_jaccard"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_jaccard(arrayA, arrayB)")
-        JaccardSim(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[org.apache.spark.sql.graft.JaroWinkler].getName,
-        "graft_jaro_winkler"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_jaro_winkler(a, b)")
-        org.apache.spark.sql.graft.JaroWinkler(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_beta_inv"),
-      new ExpressionInfo(classOf[org.apache.spark.sql.graft.BetaInv].getName,
-        "graft_beta_inv"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "graft_beta_inv(p, a, b)")
-        org.apache.spark.sql.graft.BetaInv(children.head, children(1), children(2))
-      }))
+    GraftExtensions.sqlFunctions.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.expressionClass.getName, f.name), f.builder))
+    }
   }
 }
 
@@ -79,11 +33,39 @@ object GraftExtensions {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ JaccardSizeGuardRule
 
-  /** Visible-to-shim variant of [[intLit]]. */
-  def intLitPublic(e: Expression, name: String): Int = intLit(e, name)
+  /** One SQL function: its `usage` line (name and arguments, also the
+    * wrong-arity error message), the expression class it builds, and the
+    * builder over an argument list of the right arity. */
+  final case class SqlFunction(usage: String,
+      expressionClass: Class[_ <: Expression],
+      build: PartialFunction[Seq[Expression], Expression]) {
+    def name: String = usage.takeWhile(_ != '(')
+    def builder: Seq[Expression] => Expression = { children =>
+      require(build.isDefinedAt(children), usage)
+      build(children)
+    }
+  }
+
+  /** The engine's SQL functions: [[GraftExtensions]] injects them into a
+    * session being built, `VectorShim.register` into a live one. */
+  val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_dot(arrayA, arrayB)", classOf[DotProduct],
+      { case Seq(a, b) => DotProduct(a, b) }),
+    SqlFunction("graft_l2norm(array)", classOf[L2Norm],
+      { case Seq(a) => L2Norm(a) }),
+    SqlFunction("graft_shingles(text, nWords)", classOf[WordShingles],
+      { case Seq(t, n) => WordShingles(t, intLit(n, "nWords")) }),
+    SqlFunction("graft_minhash(shingles, numHashes)", classOf[MinHashSig],
+      { case Seq(sh, n) => MinHashSig(sh, intLit(n, "numHashes")) }),
+    SqlFunction("graft_jaccard(arrayA, arrayB)", classOf[JaccardSim],
+      { case Seq(a, b) => JaccardSim(a, b) }),
+    SqlFunction("graft_jaro_winkler(a, b)", classOf[JaroWinkler],
+      { case Seq(a, b) => JaroWinkler(a, b) }),
+    SqlFunction("graft_beta_inv(p, a, b)", classOf[BetaInv],
+      { case Seq(p, a, b) => BetaInv(p, a, b) }))
 
   /** Extract a literal int argument (e.g. `graft_minhash(sh, 32)`). */
-  private[functions] def intLit(e: Expression, name: String): Int = {
+  private def intLit(e: Expression, name: String): Int = {
     require(e.foldable, s"$name must be a literal integer")
     e.eval() match {
       case i: Int => i

@@ -64,36 +64,8 @@ object VectorShim {
     * config is set — `getOrCreate` against a live session ignores them). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => { require(exprs.size == 2, "graft_dot(arrayA, arrayB)"); DotProduct(exprs.head, exprs(1)) },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_l2norm",
-      exprs => { require(exprs.size == 1, "graft_l2norm(array)"); L2Norm(exprs.head) },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_jaccard",
-      exprs => { require(exprs.size == 2, "graft_jaccard(arrayA, arrayB)"); JaccardSim(exprs.head, exprs(1)) },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => {
-        require(exprs.size == 2, "graft_shingles(text, nWords)")
-        WordShingles(exprs.head, graft.functions.GraftExtensions.intLitPublic(exprs(1), "nWords"))
-      },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => {
-        require(exprs.size == 2, "graft_minhash(shingles, numHashes)")
-        MinHashSig(exprs.head, graft.functions.GraftExtensions.intLitPublic(exprs(1), "numHashes"))
-      },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      exprs => {
-        require(exprs.size == 2, "graft_jaro_winkler(a, b)")
-        JaroWinkler(exprs.head, exprs(1))
-      },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_beta_inv",
-      exprs => { require(exprs.size == 3, "graft_beta_inv(p, a, b)"); BetaInv(exprs.head, exprs(1), exprs(2)) },
-      "scala_udf")
+    graft.functions.GraftExtensions.sqlFunctions.foreach(f =>
+      reg.createOrReplaceTempFunction(f.name, f.builder, "scala_udf"))
   }
 }
 

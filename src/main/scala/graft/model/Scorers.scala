@@ -63,8 +63,6 @@ object Scorers {
           .drop("__features", "rawPrediction", "probability", "prediction")
     }
 
-  private def wrap(m: org.apache.spark.ml.Transformer): WindowModel = wrapTransformer(m)
-
   /** Multinomial logistic regression on flattened windows — the fast
     * deterministic default scorer. */
   final case class Logistic(maxIter: Int = 50, regParam: Double = 0.01) extends WindowScorer {
@@ -75,7 +73,7 @@ object Scorers {
         .setMaxIter(maxIter).setRegParam(regParam)
         .setFeaturesCol("__features").setLabelCol("__label")
         .fit(prepared)
-      wrap(m)
+      wrapTransformer(m)
     }
   }
 
@@ -90,7 +88,7 @@ object Scorers {
         .setMaxIter(maxIter).setMaxDepth(maxDepth).setSeed(seed)
         .setFeaturesCol("__features").setLabelCol("__label")
         .fit(prepared)
-      wrap(m)
+      wrapTransformer(m)
     }
   }
 

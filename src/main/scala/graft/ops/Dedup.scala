@@ -437,6 +437,10 @@ object Dedup {
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
+  /** Edge rows under which [[connectedComponents]] runs union-find on the
+    * driver ([[LocalRegime]]). */
+  private val LocalCcEdges = 1 << 18
+
   /** Near-duplicate CLUSTERING: connected components over an undirected
     * pair graph — the step after LSH that real dedup needs (keep one doc
     * per CLUSTER, not per pair; A~B and B~C must collapse A,B,C together
@@ -458,14 +462,14 @@ object Dedup {
     * scale.
     *
     * SMALL-GRAPH REGIME: when the edge list fits a bounded driver budget
-    * (`localEdgeThreshold`, default 2^18 rows ≈ tens of MB of endpoint
-    * strings), the iterative plan is the wrong tool — each round costs a
-    * fixed ~0.5–1s in shuffle scheduling + eager checkpoint regardless of
-    * data volume, so a 64-node entity graph pays seconds of pure
-    * overhead. A `limit`-probed collect detects the regime WITHOUT a
-    * separate count action, union-find with path compression resolves the
-    * components on the driver (microseconds), and the result rejoins the
-    * node table by BROADCAST — two narrow scans of `nodes`, zero
+    * (`LocalCcEdges`, 2^18 rows ≈ tens of MB of endpoint strings), the
+    * iterative plan is the wrong tool — each round costs a fixed ~0.5–1s
+    * in shuffle scheduling + eager checkpoint regardless of data volume,
+    * so a 64-node entity graph pays seconds of pure overhead.
+    * [[LocalRegime.collectAtMost]]'s `limit`-probed collect detects the
+    * regime WITHOUT a separate count action, union-find with path
+    * compression resolves the components on the driver (microseconds),
+    * and the result rejoins the node table by BROADCAST — two narrow scans of `nodes`, zero
     * shuffles, identical output (component = min reachable member OF
     * `nodes`, string minima compared as UTF-8 bytes exactly like Spark's
     * `min`). Graphs past the threshold, or with a non-integral/non-string
@@ -477,8 +481,7 @@ object Dedup {
     * id); component = min id reachable. `edges` may list each pair once
     * in either orientation. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, id: String,
-      src: String, dst: String, maxIter: Int = 25,
-      localEdgeThreshold: Int = 1 << 18): DataFrame = {
+      src: String, dst: String, maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, "maxIter must be >= 1")
     val idType = nodes.schema(id).dataType
     // cast edge endpoints to the NODE id type: the distributed loop's
@@ -492,13 +495,11 @@ object Dedup {
       case LongType | IntegerType | ShortType | StringType => true
       case _ => false
     }
-    if (localizable && localEdgeThreshold > 0) {
-      val probe = e2.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val out = localComponents(nodes, probe, id, idType)
+    if (localizable) LocalRegime.collectAtMost(e2, LocalCcEdges) match {
+      case Some(probe) =>
         e2.unpersist()
-        return out
-      }
+        return localComponents(nodes, probe, id, idType)
+      case None =>
     }
     // narrow re-projection of the persisted e2 each round — NOT cached
     // itself, so the edge list is stored once, not twice
@@ -1216,6 +1217,10 @@ object Dedup {
       .distinct()
   }
 
+  /** Signature rows under which [[nearDupIncremental]] scans the batch
+    * and the store on the driver ([[LocalRegime]]). */
+  private val LocalNearDupRows = 1 << 14
+
   /** Incremental NEAR-duplicate dedup against a persisted LSH signature
     * store — the batch twin of
     * [[graft.streaming.StreamingOps.nearDupStream]], for ingestion that
@@ -1243,9 +1248,10 @@ object Dedup {
     * recacheByPath hazard as [[dedupExactIncremental]]).
     *
     * Two regimes (the [[connectedComponents]]/[[graft.ops.TextOps.bpeTrain]]
-    * split): when limit-probes show BOTH the batch and the store fit
-    * `localRowThreshold` signature rows, the identical greedy scan runs
-    * on the driver over the collected signatures — same band/bucket
+    * split): when [[LocalRegime.collectAtMost]] probes show BOTH the batch
+    * and the store fit `LocalNearDupRows` (2^14) signature rows, the
+    * identical greedy scan runs on the driver over the collected
+    * signatures — same band/bucket
     * candidate keys (sig-slice equality ⟺ the distributed join's
     * hashed-key equality), same `array_intersect` Jaccard arithmetic,
     * same ascending-id "earlier" order — and the store append reuses the
@@ -1255,8 +1261,7 @@ object Dedup {
     * parity is spec-pinned. */
   def nearDupIncremental(newDocs: DataFrame, id: String, text: String,
       storePath: String, threshold: Double, numShingleWords: Int = 3,
-      numBands: Int = 8, rowsPerBand: Int = 4,
-      localRowThreshold: Int = 1 << 14): DataFrame = {
+      numBands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
     val spark = newDocs.sparkSession
     val shim = org.apache.spark.sql.graft.MinHashShim
@@ -1287,13 +1292,15 @@ object Dedup {
       else batchStore.limit(0)
     // small regime: limit-probe the batch, then the store (no probe job
     // at all on a bootstrap-absent store)
-    val batchProbe = batchStore.limit(localRowThreshold + 1).collect()
-    if (batchProbe.length <= localRowThreshold) {
-      val storeProbe =
-        if (!storeExists) Array.empty[org.apache.spark.sql.Row]
-        else store.select(col(id), col("__sig"), col("__sh"))
-          .limit(localRowThreshold + 1).collect()
-      if (storeProbe.length <= localRowThreshold) {
+    val probes = for {
+      batchRows <- LocalRegime.collectAtMost(batchStore, LocalNearDupRows)
+      storeRows <-
+        if (!storeExists) Some(Array.empty[org.apache.spark.sql.Row])
+        else LocalRegime.collectAtMost(
+          store.select(col(id), col("__sig"), col("__sh")), LocalNearDupRows)
+    } yield (batchRows, storeRows)
+    probes match {
+      case Some((batchProbe, storeProbe)) =>
         val dupIds = localGreedyNearDups(batchProbe, storeProbe, threshold,
           numBands, rowsPerBand)
         // append the already-collected signatures — no recompute, and the
@@ -1310,7 +1317,7 @@ object Dedup {
         return withSh.join(broadcast(dupF), Seq(id), "left_anti")
           .drop("__sh", "__sig")
           .unionByName(zero)
-      }
+      case None =>
     }
     val batchBuckets = buckets(withSh)
     // candidate ids (batch doc, earlier doc) from both regimes, deduped

@@ -20,6 +20,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   */
 object Graph {
 
+  /** Edge rows under which [[pageRank]], [[labelPropagation]], [[kCore]]
+    * and [[hits]] run their rounds on the driver ([[LocalRegime]]). */
+  private val LocalEdges = 1 << 18
+
   /** PageRank over directed `edges`. Multi-edges are weighted (a src
     * counts each parallel edge in its out-degree and contributes once per
     * edge) — `.distinct()` the edges first for simple-graph semantics.
@@ -31,16 +35,15 @@ object Graph {
     * driver actions (dangling-mass scalar + rank materialization) of
     * fixed ~0.3 s scheduling overhead regardless of volume, so a 40-node
     * graph pays ~2.5 s for 3 iterations. When the edge list fits
-    * `localEdgeThreshold` (default 2^18 rows, detected by a limit-probed
-    * collect — no separate count job), the identical power iteration
-    * (same out-degree weighting, same dangling redistribution, same
-    * teleport term) runs on the driver in microseconds and the result is
+    * `LocalEdges` (2^18 rows, detected by [[LocalRegime.collectAtMost]]'s
+    * limit-probed collect — no separate count job), the identical power
+    * iteration (same out-degree weighting, same dangling redistribution,
+    * same teleport term) runs on the driver in microseconds and the result is
     * parallelized back. Larger graphs take the distributed loop
     * unchanged; the probed projection is persisted so nothing is paid
     * twice. */
   def pageRank(edges: DataFrame, src: String, dst: String,
-      iterations: Int, damping: Double = 0.85,
-      localEdgeThreshold: Int = 1 << 18): DataFrame = {
+      iterations: Int, damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping > 0.0 && damping < 1.0, "damping in (0, 1)")
     // null / uncastable endpoints are dropped BEFORE the regime split so
@@ -50,13 +53,11 @@ object Graph {
     val e0 = edges.select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
       .persist()
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val out = localPageRank(edges.sparkSession, probe, iterations, damping)
+    LocalRegime.collectAtMost(e0, LocalEdges) match {
+      case Some(probe) =>
         e0.unpersist()
-        return out
-      }
+        return localPageRank(edges.sparkSession, probe, iterations, damping)
+      case None =>
     }
     val e = e0
     val nodes = e.select(col("u").as("node"))
@@ -104,21 +105,19 @@ object Graph {
     * labels on src) + one map-side-combined `groupBy(node, label)` +
     * a per-node window pick (each node's partition is its distinct
     * neighbor-label set — bounded by degree, never the whole graph).
-    * Same two-regime split as [[pageRank]]: an edge list under
-    * `localEdgeThreshold` runs the identical rounds on the driver. */
+    * Same two-regime split as [[pageRank]]: an edge list within
+    * `LocalEdges` runs the identical rounds on the driver. */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
-      iterations: Int, localEdgeThreshold: Int = 1 << 18): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     val e0 = edges.select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
       .persist()
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val out = localLabelProp(edges.sparkSession, probe, iterations)
+    LocalRegime.collectAtMost(e0, LocalEdges) match {
+      case Some(probe) =>
         e0.unpersist()
-        return out
-      }
+        return localLabelProp(edges.sparkSession, probe, iterations)
+      case None =>
     }
     import org.apache.spark.sql.expressions.Window
     val sym = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
@@ -161,22 +160,20 @@ object Graph {
     * endpoints; each sweep removes ALL currently under-k nodes at once
     * (synchronized peeling), so real graphs converge in a few dozen
     * sweeps, not O(n) — `maxSweeps` bounds the loop loudly. Same
-    * two-regime split as [[pageRank]]: an edge list under
-    * `localEdgeThreshold` peels on the driver. */
+    * two-regime split as [[pageRank]]: an edge list within
+    * `LocalEdges` peels on the driver. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
-      maxSweeps: Int = 100, localEdgeThreshold: Int = 1 << 18): DataFrame = {
+      maxSweeps: Int = 100): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxSweeps >= 1, "maxSweeps must be >= 1")
     val e0 = edges.select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
       .persist()
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val out = localKCore(edges.sparkSession, probe, k, maxSweeps)
+    LocalRegime.collectAtMost(e0, LocalEdges) match {
+      case Some(probe) =>
         e0.unpersist()
-        return out
-      }
+        return localKCore(edges.sparkSession, probe, k, maxSweeps)
+      case None =>
     }
     // localCheckpoint per sweep: the peel can run dozens of sweeps, and a
     // cache alone keeps the whole anti-join lineage — the plan tree (and
@@ -223,19 +220,17 @@ object Graph {
     * then on dst) each followed by a map-side-combined groupBy + one
     * 2-scalar normalization aggregate; edges cached across rounds, same
     * regime split as [[pageRank]]. */
-  def hits(edges: DataFrame, src: String, dst: String, iterations: Int,
-      localEdgeThreshold: Int = 1 << 18): DataFrame = {
+  def hits(edges: DataFrame, src: String, dst: String,
+      iterations: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e0 = edges.select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
       .persist()
-    if (localEdgeThreshold > 0) {
-      val probe = e0.limit(localEdgeThreshold + 1).collect()
-      if (probe.length <= localEdgeThreshold) {
-        val out = localHits(edges.sparkSession, probe, iterations)
+    LocalRegime.collectAtMost(e0, LocalEdges) match {
+      case Some(probe) =>
         e0.unpersist()
-        return out
-      }
+        return localHits(edges.sparkSession, probe, iterations)
+      case None =>
     }
     val e = e0
     val nodes = e.select(col("u").as("node"))
@@ -387,7 +382,7 @@ object Graph {
 
   /** Driver-side power iteration for [[pageRank]]'s small-graph regime:
     * the same update rule over the collected edge rows. Memory is bounded
-    * by the caller's edge threshold. */
+    * by `LocalEdges`. */
   private def localPageRank(spark: SparkSession, edgeRows: Array[Row],
       iterations: Int, damping: Double): DataFrame = {
     import scala.collection.mutable

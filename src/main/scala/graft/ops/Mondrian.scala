@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * cut check) — each collecting ≤ |active leaves| rows (leaf-bounded,
   * never data-bounded); the pid relabel is a literal CASE projection,
   * localCheckpointed per round like [[Graph.kCore]] so the ~log2(n/k)
-  * rounds keep a flat plan. A QI projection under `localRowThreshold`
-  * takes the identical recursion on the driver (regime-parity spec).
+  * rounds keep a flat plan. A QI projection within `LocalRows` (2^21
+  * rows, probed by [[LocalRegime.collectAtMost]]) takes the identical
+  * recursion on the driver (regime-parity spec).
   * Apply is one broadcast join of the ≤ `maxLeaves` leaf table.
   */
 object Mondrian {
@@ -49,19 +50,21 @@ object Mondrian {
     if (lo == n - 1) v(lo) else v(lo) + (pos - lo) * (v(lo + 1) - v(lo))
   }
 
+  /** QI rows under which [[fit]] recurses on the driver ([[LocalRegime]]). */
+  private val LocalRows = 1 << 21
+
   def fit(df: DataFrame, quasi: Seq[String], k: Int, maxLeaves: Int = 4096,
-      maxRounds: Int = 64, localRowThreshold: Long = 1L << 21): Model = {
+      maxRounds: Int = 64): Model = {
     require(quasi.nonEmpty, "need QI columns")
     require(k >= 2, "k must be >= 2")
     val d = quasi.size
     val proj0 = df.select(quasi.zipWithIndex.map { case (q, i) =>
       col(q).cast("double").as(s"q$i") }: _*)
       .where(quasi.indices.map(i => col(s"q$i").isNotNull).reduce(_ && _))
-    if (localRowThreshold > 0) {
-      val probe = proj0.limit((localRowThreshold + 1).toInt).collect()
-      if (probe.length <= localRowThreshold)
-        return localFit(quasi, k, maxLeaves, maxRounds,
-          probe.map(r => Array.tabulate(d)(r.getDouble)))
+    LocalRegime.collectAtMost(proj0, LocalRows) match {
+      case Some(probe) => return localFit(quasi, k, maxLeaves, maxRounds,
+        probe.map(r => Array.tabulate(d)(r.getDouble)))
+      case None =>
     }
     var cur = proj0.withColumn("pid", lit(0L)).localCheckpoint()
     // global ranges normalize the spread so dims on different scales

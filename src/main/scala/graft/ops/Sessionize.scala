@@ -36,6 +36,10 @@ object Sessionize extends Serializable {
       isFirstEver: Boolean): Boolean =
     yt == 1 && (isFirstEver || prevYt != 1 || prevEp != ep)
 
+  /** Projected rows under which [[episodes]] scans on the driver
+    * ([[LocalRegime]]). */
+  private val LocalRows = 1 << 18
+
   /** Per-episode table: (episode, start_idx, det_idx|null, delay_windows|null).
     * Episode numbering equals the running count of episode starts in
     * global `order` — identical to the gaps-and-islands cumsum form.
@@ -45,21 +49,23 @@ object Sessionize extends Serializable {
     * scan costs ~4 fixed driver actions (probe-free summaries collect +
     * partials + final agg) regardless of volume — multi-second scheduling
     * floor on an sf0.1 input. When the projected (idx, yt, yp, ep) rows
-    * fit `localRowThreshold` (default 2^18, detected by a limit-probed
-    * collect that early-exits on big inputs — no count job), the rows are
-    * fetched ONCE in the exact distributed order (`orderBy(idx, ep, yt,
-    * yp)` — Spark's own type ordering, so any orderable idx type
-    * behaves identically) and the identical single scan runs on the
-    * driver; the per-episode result (bounded by the row threshold)
+    * fit `LocalRows` (2^18, fetched by [[LocalRegime.collectAtMost]]'s
+    * limit-probed collect that early-exits on big inputs — no count job),
+    * the probed rows take the exact distributed order from Spark's own
+    * `orderBy(idx, ep, yt, yp)` over a local relation (Spark's type
+    * ordering, so any orderable idx type behaves identically; the input
+    * is not read again) and the identical single scan runs on the
+    * driver; the per-episode result (bounded by `LocalRows`)
     * parallelizes back. Larger inputs take the two-pass path unchanged. */
   def episodes(df: DataFrame, order: Column, yTrue: Column, yPred: Column,
-      episodeId: Column, localRowThreshold: Int = 1 << 18): DataFrame = {
+      episodeId: Column): DataFrame = {
     val spark = df.sparkSession
     val base = df.select(order.as("idx"), yTrue.cast("int").as("yt"),
       yPred.cast("int").as("yp"), episodeId.cast("string").as("ep"))
-    if (localRowThreshold > 0 &&
-        base.limit(localRowThreshold + 1).count() <= localRowThreshold)
-      return localEpisodes(base)
+    LocalRegime.collectAtMost(base, LocalRows) match {
+      case Some(rows) => return localEpisodes(base, rows)
+      case None =>
+    }
     val parts = spark.sessionState.conf.numShufflePartitions
     // The tiebreakers make the in-partition order a function of row
     // CONTENT, so the two passes below see identical sequences even
@@ -159,13 +165,14 @@ object Sessionize extends Serializable {
   }
 
   /** Driver-side finish for [[episodes]]' small-input regime: the same
-    * `starts` scan over rows fetched in the distributed passes' exact
-    * order, producing complete episodes in one sweep (no partition
+    * `starts` scan over the probed rows put in the distributed passes'
+    * exact order, producing complete episodes in one sweep (no partition
     * boundaries to chain). `delay_windows` is applied as the same Column
     * expression so result types match the distributed path bit-for-bit. */
-  private def localEpisodes(base: DataFrame): DataFrame = {
+  private def localEpisodes(base: DataFrame, probed: Array[Row]): DataFrame = {
     val spark = base.sparkSession
-    val rows = base.orderBy(col("idx"), col("ep"), col("yt"), col("yp")).collect()
+    val rows = spark.createDataFrame(java.util.Arrays.asList(probed: _*), base.schema)
+      .orderBy(col("idx"), col("ep"), col("yt"), col("yp")).collect()
     val (idxI, ytI, ypI, epI) = (0, 1, 2, 3)
     var prevYt = 0; var prevEp: String = null; var firstEver = true
     var episode = 0L

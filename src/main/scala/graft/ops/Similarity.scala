@@ -275,6 +275,10 @@ object Similarity {
       .withColumn("cnorm", norm(col("cvec")))
   }
 
+  /** Vector elements (rows × dim) under which [[trainIvfCentroids]] runs
+    * its Lloyd steps on the driver ([[LocalRegime]]). */
+  private val LocalLloydElements = 1 << 23
+
   /** Train IVF centroids: hash-sampled seeds ([[sampleCentroids]]) refined
     * by `iters` Lloyd iterations. Deterministic (no RNG — seeds are the
     * nCells lowest-hash rows, iterations are pure aggregations).
@@ -284,9 +288,10 @@ object Similarity {
     * plus an exploded groupBy chain — a fixed ~0.5 s of job scheduling
     * per iteration regardless of volume, the dominant cost of `ann_ivf`
     * at sf0.1. When the (id, vec) projection fits a driver element
-    * budget (`localElementBudget` array cells ≈ 64 MB of doubles at the
-    * default, detected by a limit-probed collect — no count job), the
-    * IDENTICAL Lloyd iteration runs on the driver: same cosine argmin
+    * budget (`LocalLloydElements` = 2^23 array cells ≈ 64 MB of doubles,
+    * i.e. 2^23 / dim rows, detected by [[LocalRegime.collectAtMost]]'s
+    * limit-probed collect — no count job), the IDENTICAL Lloyd iteration
+    * runs on the driver: same cosine argmin
     * with the same (distance, cell_id) tie order and NaN-greatest
     * semantics, same drop-empty-cells rule, same sequentially-exact
     * per-dimension mean (partial-sum order cannot diverge for inputs
@@ -294,18 +299,16 @@ object Similarity {
     * embeddings — pinned by the local==distributed parity spec). Larger
     * corpora take the per-iteration aggregation path unchanged. */
   def trainIvfCentroids(corpus: DataFrame, id: String, vec: String,
-      nCells: Int, iters: Int, byHash: Boolean = true,
-      localElementBudget: Long = 1L << 23): DataFrame = {
+      nCells: Int, iters: Int, byHash: Boolean = true): DataFrame = {
     val (seedData, seeds) = sampleCentroids(corpus, id, vec, nCells, byHash)
     if (iters == 0 || seedData.isEmpty) return seeds
     val dim = seedData.head.getSeq[Double](1).size
-    val rowThr = (localElementBudget / math.max(dim, 1)).min(Int.MaxValue - 1).toInt
-    if (rowThr > 0) {
-      val probe = corpus.select(col(id), col(vec)).limit(rowThr + 1).collect()
-      if (probe.length <= rowThr)
-        return localLloyd(corpus.sparkSession, probe, seedData, iters, seeds.schema)
+    val rowLimit = LocalLloydElements / math.max(dim, 1)
+    LocalRegime.collectAtMost(corpus.select(col(id), col(vec)), rowLimit) match {
+      case Some(probe) =>
+        localLloyd(corpus.sparkSession, probe, seedData, iters, seeds.schema)
+      case None => (1 to iters).foldLeft(seeds)((c, _) => kMeansStep(corpus, c, id, vec))
     }
-    (1 to iters).foldLeft(seeds)((c, _) => kMeansStep(corpus, c, id, vec))
   }
 
   /** Driver-side finish for [[trainIvfCentroids]]' small-corpus regime:
@@ -313,8 +316,7 @@ object Similarity {
     * semantics — cosine argmin breaking ties to the lowest cell_id with
     * NaN distances greatest (Spark's struct-min order), null vectors
     * contributing to no cell (posexplode emits nothing for them), empty
-    * cells dropped. Driver memory is bounded by the caller's element
-    * budget. */
+    * cells dropped. Driver memory is bounded by `LocalLloydElements`. */
   private def localLloyd(spark: org.apache.spark.sql.SparkSession,
       corpusRows: Array[org.apache.spark.sql.Row],
       seedData: Array[org.apache.spark.sql.Row], iters: Int,

@@ -1464,6 +1464,10 @@ object TextOps {
     if (c != 0) c < 0 else less(x._2, y._2) < 0
   }
 
+  /** Distinct words under which [[bpeTrain]] merges on the driver
+    * ([[LocalRegime]]). */
+  private val LocalBpeWords = 1 << 18
+
   /** BPE merge-rule training: learn the first `nMerges` merge rules from
     * a corpus. Returns the ordered rule list — the MODEL, driver-sized
     * like IVF centroids or the DSIR bucket table (a tokenizer is ~30k
@@ -1479,7 +1483,8 @@ object TextOps {
     * merge it in every word, repeat.
     *
     * Two regimes like connectedComponents/trainIvfCentroids: word
-    * tables within `localWordThreshold` (limit-probed, no count job)
+    * tables within `LocalBpeWords` (2^18 words, probed by
+    * [[LocalRegime.collectAtMost]], no count job)
     * run the identical loop on the driver — at test scale each
     * distributed iteration costs a fixed scheduling floor that would
     * dwarf the arithmetic. Larger tables iterate distributed: explode
@@ -1489,19 +1494,17 @@ object TextOps {
     * Multimodal decode), with periodic localCheckpoint so lineage
     * doesn't grow by one mapPartitions per rule. Local == distributed
     * merge-for-merge (parity spec). */
-  def bpeTrain(df: DataFrame, text: Column, nMerges: Int,
-      localWordThreshold: Int = 1 << 18): Seq[(String, String)] = {
+  def bpeTrain(df: DataFrame, text: Column, nMerges: Int): Seq[(String, String)] = {
     require(nMerges >= 0, "nMerges must be >= 0")
     val spark = df.sparkSession
     val words = df
       .select(explode(filter(split(trim(text), "\\s+"), t => length(t) > 0)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .persist()
-    try {
-      val probe = words.limit(localWordThreshold + 1).collect()
-      if (probe.length <= localWordThreshold) {
+    try LocalRegime.collectAtMost(words, LocalBpeWords) match {
+      case Some(probe) =>
         bpeTrainLocal(probe.map(r => (r.getString(0), r.getLong(1))), nMerges)
-      } else {
+      case None =>
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types._
         val symSchema = StructType(Seq(
@@ -1543,7 +1546,6 @@ object TextOps {
           }
         }
         merges.toSeq
-      }
     } finally words.unpersist()
   }
 

@@ -11,9 +11,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   *  - [[slidingFeatureWindows]]: W1's event-time form — sliding
   *    window(aggregates) with watermark, per entity.
-  *  - [[scoreStream]]: apply a fitted [[graft.model.WindowModel]]-style
-  *    threshold to a streaming score column (model scoring is row-local,
-  *    so any codegen'd scorer runs unchanged on a stream).
   *  - [[EpisodeDetector]]: G12's online form — per-entity
   *    flatMapGroupsWithState sessionization emitting (episode start,
   *    first detection, delay) as episodes close.
@@ -37,11 +34,6 @@ object StreamingOps {
         min(valueCol).as("min_value"),
         max(valueCol).as("max_value"),
         count(lit(1)).as("n"))
-
-  /** Row-local threshold scoring on a stream (G15's threshold applied
-    * online). */
-  def scoreStream(scored: DataFrame, scoreCol: String, threshold: Double): DataFrame =
-    scored.withColumn("y_pred", (col(scoreCol) >= threshold).cast("int"))
 
   /** Streaming heavy hitters — the online G10 value_counts: per
     * event-time tumbling window, keys whose count reaches `minCount`.

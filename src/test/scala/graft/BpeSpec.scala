@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.TextOps
+import graft.ops.{LocalRegime, TextOps}
 
 /** BPE merge training + encoding ([[TextOps.bpeTrain]]/[[TextOps.bpeEncode]]).
   *
@@ -37,9 +37,9 @@ class BpeSpec extends SparkSpec {
 
   test("bpeTrain: local == distributed merge-for-merge") {
     val local = TextOps.bpeTrain(sennrich, col("text"), nMerges = 5)
-    // threshold 0 forces the distributed loop on the same corpus
-    val dist = TextOps.bpeTrain(sennrich, col("text"), nMerges = 5,
-      localWordThreshold = 0)
+    // distributedOnly forces the distributed loop on the same corpus
+    val dist = LocalRegime.distributedOnly(
+      TextOps.bpeTrain(sennrich, col("text"), nMerges = 5))
     assert(local == dist)
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, LocalRegime, TextOps}
 
 /** Dedup + text-analysis operator semantics on hand fixtures. */
 class DedupTextSpec extends SparkSpec {
@@ -630,9 +630,11 @@ class DedupTextSpec extends SparkSpec {
     val n = 3000
     val nodes = (0L until n.toLong).toDF("id")
     val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val comps = Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-        localEdgeThreshold = 0) // pin the DISTRIBUTED loop — this test is about pointer jumping
-      .select("component").distinct().collect().map(_.getLong(0))
+    // pin the DISTRIBUTED loop — this test is about pointer jumping
+    val comps = LocalRegime.distributedOnly {
+      Dedup.connectedComponents(nodes, edges, "id", "a", "b")
+        .select("component").distinct().collect().map(_.getLong(0))
+    }
     assert(comps.toSeq == Seq(0L))
   }
 
@@ -641,8 +643,9 @@ class DedupTextSpec extends SparkSpec {
     val nodes = (0L until 10L).toDF("id")
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-        maxIter = 1, localEdgeThreshold = 0).collect()
+      LocalRegime.distributedOnly {
+        Dedup.connectedComponents(nodes, edges, "id", "a", "b", maxIter = 1).collect()
+      }
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -655,9 +658,10 @@ class DedupTextSpec extends SparkSpec {
       .filter(e => e._1 != e._2).toDF("a", "b")
     val local = Dedup.connectedComponents(nodes, edges, "id", "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-        localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = LocalRegime.distributedOnly {
+      Dedup.connectedComponents(nodes, edges, "id", "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(local == dist)
   }
 
@@ -667,12 +671,12 @@ class DedupTextSpec extends SparkSpec {
     // String ids also pin the UTF-8 min comparison.
     val nodes = Seq("a1", "a2", "a3", "b1").toDF("id")
     val edges = Seq(("a1", "zz"), ("zz", "a3"), ("a1", "a2")).toDF("a", "b")
-    for (thr <- Seq(0, 1 << 18)) {
-      val got = Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-          localEdgeThreshold = thr)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def run() = Dedup.connectedComponents(nodes, edges, "id", "a", "b")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    for ((regime, got) <- Seq("distributed" -> LocalRegime.distributedOnly(run()),
+        "default" -> run())) {
       assert(got == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a3", "b1" -> "b1"),
-        s"threshold $thr")
+        s"regime $regime")
     }
   }
 
@@ -683,12 +687,12 @@ class DedupTextSpec extends SparkSpec {
     // the node id type before the regime split
     val nodes = (0L until 6L).toDF("id") // BIGINT
     val edges = Seq((0, 1), (1, 2), (4, 5)).toDF("a", "b") // INT
-    for (thr <- Seq(0, 1 << 18)) {
-      val got = Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-          localEdgeThreshold = thr)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def run() = Dedup.connectedComponents(nodes, edges, "id", "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((regime, got) <- Seq("distributed" -> LocalRegime.distributedOnly(run()),
+        "default" -> run())) {
       assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 4L, 5L -> 4L),
-        s"threshold $thr")
+        s"regime $regime")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Graph
+import graft.ops.{Graph, LocalRegime}
 
 /** PageRank unit semantics (the oracle query `graph_pagerank` pins the
   * distributed parity; these pin the math on graphs small enough to
@@ -34,9 +34,10 @@ class GraphSpec extends SparkSpec {
       .map(i => ((i * 37 + 11) % 23L, (i * 53 + 29) % 31L)).toDF("s", "d")
     val local = Graph.pageRank(edges, "s", "d", iterations = 4)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    val dist = Graph.pageRank(edges, "s", "d", iterations = 4,
-        localEdgeThreshold = 0)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    val dist = LocalRegime.distributedOnly {
+      Graph.pageRank(edges, "s", "d", iterations = 4)
+        .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    }
     assert(local.keySet == dist.keySet)
     local.foreach { case (k, v) => assert(approx(v, dist(k), 1e-12), s"node $k") }
     assert(approx(local.values.sum, 1.0, 1e-9))
@@ -49,9 +50,10 @@ class GraphSpec extends SparkSpec {
       (Some(3L), None), (None, Some(3L))).toDF("s", "d")
     val local = Graph.pageRank(edges, "s", "d", iterations = 3)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    val dist = Graph.pageRank(edges, "s", "d", iterations = 3,
-        localEdgeThreshold = 0)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    val dist = LocalRegime.distributedOnly {
+      Graph.pageRank(edges, "s", "d", iterations = 3)
+        .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    }
     assert(local.keySet == Set(1L, 2L))
     assert(local.keySet == dist.keySet)
     local.foreach { case (k, v) => assert(approx(v, dist(k), 1e-12), s"node $k") }
@@ -85,9 +87,10 @@ class GraphSpec extends SparkSpec {
       ++ Seq((Some(7L), Some(7L)), (Some(3L), None), (None, Some(5L)))).toDF("s", "d")
     val local = Graph.labelPropagation(edges, "s", "d", iterations = 3)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val dist = Graph.labelPropagation(edges, "s", "d", iterations = 3,
-        localEdgeThreshold = 0)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val dist = LocalRegime.distributedOnly {
+      Graph.labelPropagation(edges, "s", "d", iterations = 3)
+        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    }
     assert(local.keySet == dist.keySet)
     local.foreach { case (k, v) => assert(v == dist(k), s"node $k: $v vs ${dist(k)}") }
   }
@@ -124,8 +127,10 @@ class GraphSpec extends SparkSpec {
       ++ Seq((Some(7L), Some(7L)), (Some(3L), None), (None, Some(5L)))).toDF("s", "d")
     val local = Graph.hits(edges, "s", "d", iterations = 2)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val dist = Graph.hits(edges, "s", "d", iterations = 2, localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val dist = LocalRegime.distributedOnly {
+      Graph.hits(edges, "s", "d", iterations = 2)
+        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    }
     assert(local.keySet == dist.keySet && local.nonEmpty)
     local.foreach { case (k, (h, a)) =>
       assert(approx(h, dist(k)._1, 1e-12) && approx(a, dist(k)._2, 1e-12), s"node $k")
@@ -158,12 +163,14 @@ class GraphSpec extends SparkSpec {
       ++ Seq((Some(7L), Some(7L)), (Some(3L), None), (None, Some(5L)))).toDF("s", "d")
     val local = Graph.kCore(edges, "s", "d", k = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Graph.kCore(edges, "s", "d", k = 2, localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = LocalRegime.distributedOnly {
+      Graph.kCore(edges, "s", "d", k = 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(local.nonEmpty && local == dist)
     // empty input returns an empty (node, deg) frame in both regimes
     val empty = Seq.empty[(Long, Long)].toDF("s", "d")
     assert(Graph.kCore(empty, "s", "d", k = 2).count() == 0)
-    assert(Graph.kCore(empty, "s", "d", k = 2, localEdgeThreshold = 0).count() == 0)
+    assert(LocalRegime.distributedOnly(Graph.kCore(empty, "s", "d", k = 2).count()) == 0)
   }
 }

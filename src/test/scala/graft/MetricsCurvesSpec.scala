@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{BinaryOperational, Curves, MetricsOps, Sessionize}
+import graft.ops.{BinaryOperational, Curves, LocalRegime, MetricsOps, Sessionize}
 
 /** sklearn-parity fixtures for G9/G13/G14/G15/G16/G12/G11/G5.
   * Expected values hand-computed / cross-checked against sklearn formulas
@@ -189,13 +189,13 @@ class MetricsCurvesSpec extends SparkSpec {
       (i.toLong, yt, yp, ep)
     }
     val df = rows.toDF("idx", "yt", "yp", "ep")
-    def run(thr: Int) = Sessionize
-      .episodes(df, col("idx"), col("yt"), col("yp"), col("ep"), localRowThreshold = thr)
+    def run() = Sessionize
+      .episodes(df, col("idx"), col("yt"), col("yp"), col("ep"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3),
         if (r.isNullAt(4)) -1L else r.getLong(4))).toSet
-    val local = run(1 << 18)
-    val dist = run(0)
+    val local = run()
+    val dist = LocalRegime.distributedOnly(run())
     assert(local == dist)
     assert(local.nonEmpty && local.exists(_._4 == -1L) && local.exists(_._4 > 0L))
   }

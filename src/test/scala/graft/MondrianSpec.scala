@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Mondrian
+import graft.ops.{LocalRegime, Mondrian}
 
 /** Mondrian k-anonymization unit semantics; the `g_mondrian` dynamic
   * oracle pins the leaf table cross-engine (DuckDB re-assigns every row
@@ -62,7 +62,7 @@ class MondrianSpec extends SparkSpec {
       .map(i => (((i * 37) % 101).toDouble, ((i * 53) % 89).toDouble))
       .toDF("x", "y")
     val local = Mondrian.fit(df, Seq("x", "y"), k = 25)
-    val dist = Mondrian.fit(df, Seq("x", "y"), k = 25, localRowThreshold = 0)
+    val dist = LocalRegime.distributedOnly(Mondrian.fit(df, Seq("x", "y"), k = 25))
     assert(local.rounds == dist.rounds)
     assert(local.leaves == dist.leaves)
   }

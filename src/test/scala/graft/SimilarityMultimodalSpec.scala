@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Multimodal, Similarity}
+import graft.ops.{LocalRegime, Multimodal, Similarity}
 
 class SimilarityMultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -157,9 +157,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
     for (iters <- Seq(1, 3); byHash <- Seq(true, false)) {
       val local = collectCents(Similarity.trainIvfCentroids(
         corpus, "id", "v", nCells = 5, iters = iters, byHash = byHash))
-      val dist = collectCents(Similarity.trainIvfCentroids(
-        corpus, "id", "v", nCells = 5, iters = iters, byHash = byHash,
-        localElementBudget = 0L))
+      val dist = LocalRegime.distributedOnly(collectCents(Similarity.trainIvfCentroids(
+        corpus, "id", "v", nCells = 5, iters = iters, byHash = byHash)))
       assert(local == dist, s"iters=$iters byHash=$byHash\n$local\nvs\n$dist")
     }
   }

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.ops.Skew
+import graft.ops.{LocalRegime, Skew}
 import graft.streaming.StreamingOps
 
 /** Skew-salting transparency (salted == unsalted) + streaming exact dedup. */
@@ -200,14 +200,14 @@ class SkewStreamDedupSpec extends SparkSpec {
       Seq((8L, tA), (9L, tC), (10L, tD)))
     val sLocal = java.nio.file.Files.createTempDirectory("ndinc_l").toString + "/s"
     val sDist = java.nio.file.Files.createTempDirectory("ndinc_d").toString + "/s"
-    def run(store: String, thr: Int)(docs: Seq[(Long, String)]): Set[Long] =
+    def run(store: String)(docs: Seq[(Long, String)]): Set[Long] =
       Dedup.nearDupIncremental(docs.toDF("id", "text"), "id", "text",
-        store, 0.6, 2, 8, 2, localRowThreshold = thr)
+        store, 0.6, 2, 8, 2)
         .select("id").as[Long].collect().toSet
     batches.foreach { b =>
-      // localRowThreshold = 0 forces the distributed path on any input
-      val local = run(sLocal, 1 << 14)(b)
-      val dist = run(sDist, 0)(b)
+      // distributedOnly forces the distributed path on any input
+      val local = run(sLocal)(b)
+      val dist = LocalRegime.distributedOnly(run(sDist)(b))
       assert(local == dist, s"batch $b: local $local vs distributed $dist")
     }
   }
