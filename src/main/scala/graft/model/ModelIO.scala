@@ -12,8 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout under `dir`:
   *   model/        MLlib native save (parquet + metadata)
   *   model_class   marker naming the MLlib class for load dispatch
-  *   encoder/      the (class, y) label-encoder table as parquet
+  *   encoder.json  the label encoder as a flat {"class": y, …} object,
+  *                 in y order
   *   scaler.json   per-column (mean, std)
+  * The encoder and scaler are written from the driver: no Spark job.
+  * Pipeline 1's grid gives each artifact its own `dir` under the run
+  * directory, so a run holds `encoder/encoder.json`, `scaler/scaler.json`
+  * and `model/model/`.
   */
 object ModelIO {
 
@@ -42,18 +47,31 @@ object ModelIO {
     Scorers.wrapTransformer(ml)
   }
 
-  def saveEncoder(encoder: DataFrame, dir: String): Unit =
-    encoder.coalesce(1).write.mode("overwrite").parquet(s"$dir/encoder")
+  /** Label encoder as a flat JSON object {"class": y, …} (the analogue of
+    * the reference's label-encoder joblib); `encoder` is the (class, y)
+    * table, collected here — a local one, as pipeline 1 keeps it, runs no
+    * job. */
+  def saveEncoder(encoder: DataFrame, dir: String): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    val json = encoder.collect().map(r => (r.getString(0), r.getInt(1))).sortBy(_._2)
+      .map { case (c, y) => s"${jsonString(c)}: $y" }.mkString("{", ", ", "}")
+    Files.writeString(Paths.get(s"$dir/encoder.json"), json)
+  }
 
-  def loadEncoder(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/encoder")
+  /** The (class string, y int) table [[saveEncoder]] wrote, in y order. */
+  def loadEncoder(spark: SparkSession, dir: String): DataFrame = {
+    val json = Files.readString(Paths.get(s"$dir/encoder.json"))
+    val entry = (JsonString + """\s*:\s*(-?\d+)""").r
+    graft.ops.Labels.encoderTable(spark,
+      entry.findAllMatchIn(json).map(m => (unescape(m.group(1)), m.group(2).toInt)).toSeq)
+  }
 
   /** Scaler as a flat JSON object {"col": [mean, std], …} — the analogue
     * of the reference's scaler.joblib, but engine-portable. */
   def saveScaler(scaler: Map[String, (Double, Double)], dir: String): Unit = {
     Files.createDirectories(Paths.get(dir))
     val json = scaler.toSeq.sortBy(_._1).map { case (c, (m, s)) =>
-      s""""${c.replace("\"", "\\\"")}": [$m, $s]"""
+      s"${jsonString(c)}: [$m, $s]"
     }.mkString("{", ", ", "}")
     Files.writeString(Paths.get(s"$dir/scaler.json"), json)
   }
@@ -61,10 +79,28 @@ object ModelIO {
   def loadScaler(dir: String): Map[String, (Double, Double)] = {
     val json = Files.readString(Paths.get(s"$dir/scaler.json")).trim
     // flat {"name": [m, s], ...} parser (no JSON library needed for this
-    // fixed shape; names were escaped on write)
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*\[\s*([^,\]]+)\s*,\s*([^\]]+)\s*\]""".r
+    // fixed shape)
+    val entry = (JsonString + """\s*:\s*\[\s*([^,\]]+)\s*,\s*([^\]]+)\s*\]""").r
     entry.findAllMatchIn(json).map { m =>
-      m.group(1).replace("\\\"", "\"") -> (m.group(2).trim.toDouble, m.group(3).trim.toDouble)
+      unescape(m.group(1)) -> (m.group(2).trim.toDouble, m.group(3).trim.toDouble)
     }.toMap
   }
+
+  /** A JSON string literal, its body captured; [[jsonString]] writes it. */
+  private val JsonString = """"((?:[^"\\]|\\.)*)""""
+
+  /** `s` as a JSON string literal: quote, backslash and control
+    * characters escaped. */
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The text of a string literal [[jsonString]] wrote. */
+  private def unescape(body: String): String =
+    """\\(u[0-9a-fA-F]{4}|.)""".r.replaceAllIn(body, m => java.util.regex.Matcher.quoteReplacement(
+      if (m.group(1).length == 5) Integer.parseInt(m.group(1).drop(1), 16).toChar.toString
+      else m.group(1)))
 }

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Label-preparation operators (SURVEY §2.2 P1–P9).
   *
@@ -215,6 +216,14 @@ object Labels {
       .na.drop().distinct()
       .withColumn("y", (row_number().over(w) - 1).cast("int"))
   }
+
+  /** A label encoder's (class, y) table built on the driver from its
+    * entries — the shape [[fitLabelEncoder]] returns, as a local relation
+    * (reading it runs no job). */
+  def encoderTable(spark: SparkSession, entries: Seq[(String, Int)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(entries.map { case (c, y) => Row(c, y) }: _*),
+      StructType(Seq(StructField("class", StringType),
+        StructField("y", IntegerType, nullable = false))))
 
   /** P9 transform: broadcast-join the encoder onto `df`, adding `yCol`. */
   def encodeLabel(df: DataFrame, encoder: DataFrame, target: String, yCol: String = "y"): DataFrame =

@@ -20,8 +20,14 @@ private[graft] object LocalRegime {
     * `limit(n + 1).collect()` decides — it early-exits on big inputs, so
     * there is no separate count job; `n <= 0` answers `None` with no job. */
   def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] =
-    if (n <= 0 || forceDistributed.value) None
-    else Some(df.limit(n + 1).collect()).filter(_.length <= n)
+    if (forceDistributed.value) None else collectBounded(df, n)
+
+  /** The same probe for a table that has no distributed regime to fall
+    * back to — a small result its caller needs on the driver and refuses
+    * by name past `n` (the metric count tables of [[MetricsOps]]) — so
+    * [[distributedOnly]] does not apply to it. */
+  def collectBounded(df: DataFrame, n: Int): Option[Array[Row]] =
+    if (n <= 0) None else Some(df.limit(n + 1).collect()).filter(_.length <= n)
 
   /** Runs `body` with every probe answering `None`, so each operator
     * takes its distributed loop — the seam the regime-parity specs use. */

@@ -1,48 +1,190 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Classification-metric operators (SURVEY §2.5 G9, G11, G13, G5, G7).
   *
-  * All metrics are derived relationally from a confusion matrix or a
-  * per-row probability table — one `groupBy` over (#classes²) cells, then
-  * scalar math. This is the sklearn-parity layer:
-  * `compute_multiclass_metrics` (func_aux/func_test.py:61-171) with
-  * `zero_division=0` ⇒ every ratio is `coalesce(x/y, 0)` when the
-  * denominator can be 0.
+  * G9, G13 and F10 rest on one count table and one algebra:
+  *  - **The cell table.** One distributed aggregation counts the rows of
+  *    every (group, y_true, y_pred) cell — at most groups × k² rows, so it
+  *    is collected to the driver ([[LocalRegime.collectBounded]]). Past
+  *    `MaxCells` cells the call fails by name instead of pulling an
+  *    unbounded table onto the driver.
+  *  - **The algebra** ([[cellMetrics]]) is the sklearn-parity layer of
+  *    `compute_multiclass_metrics` (func_aux/func_test.py:61-171) with
+  *    `zero_division=0`: every ratio whose denominator can be 0 is 0
+  *    there. It runs on the driver over the cells, so [[confusionMatrix]],
+  *    [[multiclassMetrics]] and [[multiclassMetricsPerGroup]] are the same
+  *    arithmetic and their tables are local relations (reading them runs
+  *    no job). Pipeline 1 feeds its timed scoring pass straight into it.
   */
 object MetricsOps {
 
-  private def safeDiv(num: Column, den: Column): Column =
-    coalesce(num / nullif(den, lit(0.0)), lit(0.0))
+  /** One cell of a count table: `n` rows of group `group` whose true class
+    * is `yTrue` and predicted class `yPred` (`None`: the row's was null). */
+  final case class Cell(group: Any, yTrue: Option[Int], yPred: Option[Int], n: Long)
 
-  /** G9 — dense confusion matrix over a fixed label universe.
-    * Ref: pipeline_trainingmodels_power.py:200-211 (labels=range(n_classes)).
-    * Missing (y_true, y_pred) pairs are zero-filled via a cross join of the
-    * tiny label universe with itself (cells = k², never large). */
-  def confusionMatrix(df: DataFrame, yTrue: String, yPred: String, labels: Seq[Int]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val universe = labels.toDF("y_true")
-      .crossJoin(labels.toDF("y_pred"))
-    val counts = df.groupBy(col(yTrue).cast("int").as("y_true"), col(yPred).cast("int").as("y_pred"))
-      .agg(count(lit(1)).as("cnt"))
-    universe.join(counts, Seq("y_true", "y_pred"), "left")
-      .na.fill(0L, Seq("cnt"))
+  /** The G13 suite of one group. `None` where there is no value: balanced
+    * accuracy with no class present in y_true, weighted averages with no
+    * support (the zero-support group is all zeros otherwise). */
+  final case class Suite(accuracy: Double, balancedAccuracy: Option[Double],
+      precisionMacro: Double, recallMacro: Double, f1Macro: Double,
+      f2Macro: Double, f05Macro: Double, precisionWeighted: Option[Double],
+      recallWeighted: Option[Double], f1Weighted: Option[Double]) {
+    /** The suite as a row of [[SuiteSchema]] (`None` → null). */
+    def toRow: Row = Row.fromSeq(productIterator.map {
+      case o: Option[_] => o.getOrElse(null)
+      case v => v
+    }.toSeq)
   }
+
+  /** The columns of a [[Suite]], in the order every multiclass table has. */
+  val SuiteSchema: StructType = StructType(
+    StructField("accuracy", DoubleType, nullable = false) +:
+      Seq("balanced_accuracy", "precision_macro", "recall_macro", "f1_macro",
+        "f2_macro", "f0_5_macro", "precision_weighted", "recall_weighted",
+        "f1_weighted").map(StructField(_, DoubleType)))
+
+  /** One group of a count table under the algebra: `confusion(i)(j)` counts
+    * its rows with true class `labels(i)` and predicted class `labels(j)`. */
+  final case class GroupMetrics(group: Any, confusion: IndexedSeq[IndexedSeq[Long]], suite: Suite)
+
+  /** The most cells a count table may have before the driver collect is
+    * refused: 2^18 rows of (group, y_true, y_pred, n) — e.g. 10,000 groups
+    * at k = 5, or one group at k = 512. */
+  private val MaxCells = 1 << 18
+
+  /** G9/G13/F10 algebra — the one implementation behind every multiclass
+    * table, over a collected count table:
+    *  - **Label universe** (sklearn `labels=`): a cell whose y_true or
+    *    y_pred is null or outside `labels` counts toward no class, but its
+    *    group still gets a row. A null group's cells count toward no class
+    *    either (no group key ever matched null), so it gets the all-zero
+    *    row. Macro averages run over all of `labels`.
+    *  - **zero_division=0**: per class, precision = tp / predicted, recall
+    *    = tp / support, f_β = (1+β²)·P·R / (β²·P + R), each 0 when its
+    *    denominator is; accuracy = Σtp / Σsupport, 0 with no support.
+    *    Balanced accuracy is the mean recall over classes present in
+    *    y_true; weighted averages weight by support.
+    *  - **Summation order**: every double sum runs over the classes in
+    *    `labels` order, left to right from 0.0, and a mean divides that
+    *    sum by its term count. Sums of two terms (k = 2) are
+    *    order-free, so they equal any summation order bit for bit.
+    * Groups come back in the order of their first cell; an empty table
+    * or an empty `labels` has no groups. */
+  def cellMetrics(cells: Seq[Cell], labels: Seq[Int]): Seq[GroupMetrics] = {
+    if (labels.isEmpty) return Nil
+    val k = labels.length
+    val index = labels.zipWithIndex.toMap
+    // keyed as Spark groups: by equals (one NaN group), binary by content
+    val groups = new java.util.LinkedHashMap[Any, (Any, Array[Array[Long]])]
+    cells.foreach { c =>
+      val key = c.group match {
+        case bytes: Array[Byte] => java.nio.ByteBuffer.wrap(bytes)
+        case g => g
+      }
+      val m = groups.computeIfAbsent(key, _ => (c.group, Array.fill(k, k)(0L)))._2
+      if (c.group != null) for {
+        i <- c.yTrue.flatMap(index.get)
+        j <- c.yPred.flatMap(index.get)
+      } m(i)(j) += c.n
+    }
+    groups.values.asScala.toSeq.map { case (g, m) =>
+      GroupMetrics(g, m.map(_.toIndexedSeq).toIndexedSeq, suiteOf(m))
+    }
+  }
+
+  private def ratio(num: Double, den: Double): Double = if (den == 0.0) 0.0 else num / den
+
+  private def suiteOf(m: Array[Array[Long]]): Suite = {
+    val k = m.length
+    val tp = Array.tabulate(k)(i => m(i)(i))
+    val support = m.map(_.sum)
+    val predicted = Array.tabulate(k)(j => m.map(_(j)).sum)
+    val precision = Array.tabulate(k)(c => ratio(tp(c).toDouble, predicted(c).toDouble))
+    val recall = Array.tabulate(k)(c => ratio(tp(c).toDouble, support(c).toDouble))
+    def fbeta(b: Double) = Array.tabulate(k) { c =>
+      val b2 = b * b
+      ratio((1.0 + b2) * precision(c) * recall(c), b2 * precision(c) + recall(c))
+    }
+    val (f1, f2, f05) = (fbeta(1.0), fbeta(2.0), fbeta(0.5))
+    val totalSupport = support.sum
+    def mean(xs: Seq[Double]): Option[Double] =
+      if (xs.isEmpty) None else Some(xs.foldLeft(0.0)(_ + _) / xs.length)
+    def macroAvg(xs: Array[Double]): Double = mean(xs.toSeq).get
+    def weighted(xs: Array[Double]): Option[Double] =
+      if (totalSupport == 0L) None
+      else Some((0 until k).foldLeft(0.0)((s, c) => s + xs(c) * support(c)) / totalSupport)
+    Suite(
+      accuracy = ratio(tp.sum.toDouble, totalSupport.toDouble),
+      balancedAccuracy = mean((0 until k).filter(support(_) > 0).map(recall)),
+      precisionMacro = macroAvg(precision), recallMacro = macroAvg(recall),
+      f1Macro = macroAvg(f1), f2Macro = macroAvg(f2), f05Macro = macroAvg(f05),
+      precisionWeighted = weighted(precision), recallWeighted = weighted(recall),
+      f1Weighted = weighted(f1))
+  }
+
+  /** The count table of `df` — one distributed aggregation over
+    * (group, y_true as int, y_pred as int) — collected to the driver.
+    * `reads` are aggregated alongside the counts and dropped, so a timed
+    * pass over `df` computes them too (Pipeline 1 forces its `proba`
+    * column this way). Fails by name past `MaxCells` cells. */
+  private[graft] def collectCells(df: DataFrame, group: Column, yTrue: Column,
+      yPred: Column, reads: Seq[Column] = Nil): Seq[Cell] = {
+    val counts = df.groupBy(group.as("grp"), yTrue.cast("int").as("y_true"),
+        yPred.cast("int").as("y_pred"))
+      .agg(count(lit(1)).as("cnt"), reads.zipWithIndex.map { case (c, i) =>
+        sum(c).as(s"__read$i") }: _*)
+    val rows = LocalRegime.collectBounded(counts, MaxCells).getOrElse(
+      throw new IllegalArgumentException(s"metric count table has more than " +
+        s"$MaxCells (group, y_true, y_pred) cells: too many groups or classes " +
+        "to collect to the driver"))
+    def cls(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getInt(i))
+    rows.toSeq.map(r => Cell(r.get(0), cls(r, 1), cls(r, 2), r.getLong(3)))
+  }
+
+  /** G9, G13 and F10 of one count table as local tables: the dense
+    * confusion matrix and the multiclass suite over all cells, and the
+    * suite per group (`groupType`: the group column's type). */
+  final case class Tables(confusion: DataFrame, multiclass: DataFrame, perGroup: DataFrame)
+
+  private[graft] def tables(spark: SparkSession, cells: Seq[Cell], groupType: DataType,
+      labels: Seq[Int]): Tables = {
+    def local(rows: Seq[Row], schema: StructType) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val all = cellMetrics(cells.map(_.copy(group = 0)), labels).headOption
+    val confusion = all.map(_.confusion)
+      .getOrElse(IndexedSeq.fill(labels.length, labels.length)(0L))
+    Tables(
+      confusion = local(
+        for ((t, i) <- labels.zipWithIndex; (p, j) <- labels.zipWithIndex)
+          yield Row(t, p, confusion(i)(j)),
+        StructType(Seq(StructField("y_true", IntegerType, nullable = false),
+          StructField("y_pred", IntegerType, nullable = false),
+          StructField("cnt", LongType, nullable = false)))),
+      multiclass = local(all.map(_.suite.toRow).toSeq, SuiteSchema),
+      perGroup = local(
+        cellMetrics(cells, labels).map(g => Row.fromSeq(g.group +: g.suite.toRow.toSeq)),
+        StructType(StructField("grp", groupType) +: SuiteSchema.fields)))
+  }
+
+  /** G9 — dense confusion matrix over a fixed label universe, one row per
+    * (y_true, y_pred) pair of `labels` (k² rows, zero-filled).
+    * Ref: pipeline_trainingmodels_power.py:200-211 (labels=range(n_classes)). */
+  def confusionMatrix(df: DataFrame, yTrue: String, yPred: String, labels: Seq[Int]): DataFrame =
+    tables(df.sparkSession, collectCells(df, lit(0), col(yTrue), col(yPred)), IntegerType,
+      labels).confusion
 
   /** G13 — the multiclass metric suite of func_aux/func_test.py:61-171
     * (confusion-derivable part; the AUC part lives in [[Curves]]).
-    * Input: per-row `(yTrue, yPred)` int columns. Output: ONE row.
-    *
-    * sklearn parity notes: `zero_division=0`; weighted averages weight by
-    * true support; fbeta = (1+β²)·P·R / (β²·P + R). Balanced accuracy =
-    * mean of per-class recall over classes present in y_true.
-    */
+    * Input: per-row `(yTrue, yPred)` int columns. Output: ONE row ([[SuiteSchema]]),
+    * none on an empty input. */
   def multiclassMetrics(df: DataFrame, yTrue: String, yPred: String, labels: Seq[Int]): DataFrame =
-    multiclassMetricsPerGroup(df.withColumn("__g", lit(1)), "__g", yTrue, yPred, labels)
-      .drop("grp")
+    tables(df.sparkSession, collectCells(df, lit(0), col(yTrue), col(yPred)), IntegerType,
+      labels).multiclass
 
   /** G13, the reference's FULL dict (func_aux/func_test.py:61-171): from a
     * probability-matrix column. `y_pred = argmax(proba)` (first max wins,
@@ -61,87 +203,15 @@ object MetricsOps {
   }
 
   /** G13, grouped (F10 per-state slices,
-    * pipeline_trainingmodels_power.py:235-311): the full multiclass suite
-    * computed per value of `groupCol` in ONE pass — a groupBy over
-    * (group, y_true, y_pred) cells instead of a driver loop over boolean
-    * masks, so thousands of slices cost one shuffle.
-    * [[multiclassMetrics]] is the constant-group case.
-    *
-    * sklearn parity notes: `zero_division=0` ⇒ every ratio is
-    * coalesce(x/y, 0); macro averages run over ALL labels in the
-    * universe; weighted averages weight by true support; balanced
-    * accuracy averages recall over classes present in y_true;
-    * fbeta = (1+β²)·P·R / (β²·P + R). */
+    * pipeline_trainingmodels_power.py:235-311): the suite per value of
+    * `groupCol` from ONE count aggregation — a groupBy over (group,
+    * y_true, y_pred) cells instead of a driver loop over boolean masks.
+    * Output: `grp` (the group column's type) + [[SuiteSchema]], one row
+    * per group; [[multiclassMetrics]] is the constant-group case. */
   def multiclassMetricsPerGroup(df: DataFrame, groupCol: String,
-      yTrue: String, yPred: String, labels: Seq[Int]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val counts = df.groupBy(col(groupCol).as("grp"),
-        col(yTrue).cast("int").as("y_true"), col(yPred).cast("int").as("y_pred"))
-      .agg(count(lit(1)).as("cnt"))
-      // two consumers (the melt + the group universe); the lazy
-      // checkpoint pins the collapse to ONE corpus scan
-      .localCheckpoint(false)
-    // Per-(grp, cls) TP/support/predicted in ONE pass over the cell
-    // table (r12; was three separate re-aggregations of a dense cube,
-    // each re-executing the corpus groupBy — 8 corpus scans in the
-    // plan): every cell contributes its count to its TRUE class's
-    // support (and tp when the prediction matches) and to its PREDICTED
-    // class's predicted count — a 2-way explode of k² cells, then one
-    // (grp, cls) sum.
-    val contrib = counts
-      // the dense-cube join also dropped cells with EITHER class outside
-      // the label universe (sklearn labels= semantics) — keep that
-      .where(col("y_true").isin(labels: _*) && col("y_pred").isin(labels: _*))
-      .select(col("grp"), explode(array(
-        struct(col("y_true").as("cls"), col("cnt").as("support"),
-          when(col("y_true") === col("y_pred"), col("cnt")).otherwise(0L)
-            .as("tp"), lit(0L).as("predicted")),
-        struct(col("y_pred").as("cls"), lit(0L).as("support"),
-          lit(0L).as("tp"), col("cnt").as("predicted")))).as("__c"))
-      .select(col("grp"), col("__c.cls").as("cls"), col("__c.support"),
-        col("__c.tp"), col("__c.predicted"))
-      .groupBy("grp", "cls")
-      .agg(sum("support").as("support"), sum("tp").as("tp"),
-        sum("predicted").as("predicted"))
-    // zero-fill the label universe per group; groups are derived from
-    // the SAME cell aggregation (its exchange is reused at runtime)
-    // instead of a second corpus-wide distinct. The key columns are
-    // re-aliased so the left-join condition is explicit (universe and
-    // contrib share the counts lineage).
-    val universe = counts.select(col("grp").as("__gu")).distinct()
-      .crossJoin(labels.toDF("__cu"))
-    def fbeta(b: Double): Column = {
-      val b2 = lit(b * b)
-      safeDiv((lit(1.0) + b2) * col("precision") * col("recall"),
-        b2 * col("precision") + col("recall"))
-    }
-    // plain equality (not <=>): the old USING join never matched a null
-    // group either — a null grp keeps its zero-filled row
-    val stats = universe.join(contrib,
-        col("__gu") === col("grp") && col("__cu") === col("cls"), "left")
-      .drop("grp", "cls")
-      .withColumnRenamed("__gu", "grp").withColumnRenamed("__cu", "cls")
-      .na.fill(0L, Seq("support", "tp", "predicted"))
-      .withColumn("fn", col("support") - col("tp"))
-      .withColumn("fp", col("predicted") - col("tp"))
-      .withColumn("precision", safeDiv(col("tp"), col("tp") + col("fp")))
-      .withColumn("recall", safeDiv(col("tp"), col("tp") + col("fn")))
-      .withColumn("f1", fbeta(1.0))
-      .withColumn("f2", fbeta(2.0))
-      .withColumn("f0_5", fbeta(0.5))
-    stats.groupBy("grp").agg(
-      safeDiv(sum("tp"), sum("support")).as("accuracy"),
-      avg(when(col("support") > 0, col("recall"))).as("balanced_accuracy"),
-      avg("precision").as("precision_macro"),
-      avg("recall").as("recall_macro"),
-      avg("f1").as("f1_macro"),
-      avg("f2").as("f2_macro"),
-      avg("f0_5").as("f0_5_macro"),
-      (sum(col("precision") * col("support")) / sum("support")).as("precision_weighted"),
-      (sum(col("recall") * col("support")) / sum("support")).as("recall_weighted"),
-      (sum(col("f1") * col("support")) / sum("support")).as("f1_weighted"))
-  }
+      yTrue: String, yPred: String, labels: Seq[Int]): DataFrame =
+    tables(df.sparkSession, collectCells(df, col(groupCol), col(yTrue), col(yPred)),
+      df.select(col(groupCol)).schema.head.dataType, labels).perGroup
 
   /** G11 — weighted log-loss with probability clipping.
     * Ref: compute_weighted_logloss, pipelines_host/pipeline_host_importance.py:128-151:

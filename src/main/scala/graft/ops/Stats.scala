@@ -17,16 +17,25 @@ object Stats {
     * second shuffle. Columns with std == 0 pass through unscaled shifted
     * (sklearn maps them to 0 by dividing by 1.0). */
   def fitStandardScaler(train: DataFrame, cols: Seq[String]): Map[String, (Double, Double)] = {
-    val aggs = cols.flatMap(c => Seq(
-      avg(col(c)).as(s"${c}__mean"), stddev_pop(col(c)).as(s"${c}__std")))
-    val row = train.agg(aggs.head, aggs.tail: _*).head()
+    val aggs = standardScalerAggs(cols, lit(true))
+    standardScalerFrom(train.agg(aggs.head, aggs.tail: _*).head(), cols)
+  }
+
+  /** [[fitStandardScaler]]'s moments as aggregate columns over the rows
+    * where `train` holds, so a caller can fit the scaler inside an
+    * aggregation it runs anyway; [[standardScalerFrom]] reads them back. */
+  private[graft] def standardScalerAggs(cols: Seq[String], train: Column): Seq[Column] =
+    cols.flatMap(c => Seq(
+      avg(when(train, col(c))).as(s"${c}__mean"),
+      stddev_pop(when(train, col(c))).as(s"${c}__std")))
+
+  private[graft] def standardScalerFrom(row: Row, cols: Seq[String]): Map[String, (Double, Double)] =
     cols.map { c =>
       val m = Option(row.getAs[Any](s"${c}__mean")).fold(0.0)(_.toString.toDouble)
       val s0 = Option(row.getAs[Any](s"${c}__std")).fold(1.0)(_.toString.toDouble)
       val s = if (s0 == 0.0 || s0.isNaN) 1.0 else s0 // sklearn: zero-variance scale_ = 1.0
       c -> (m, s)
     }.toMap
-  }
 
   /** Apply a fitted scaler as projections. */
   def applyStandardScaler(df: DataFrame, scaler: Map[String, (Double, Double)]): DataFrame =

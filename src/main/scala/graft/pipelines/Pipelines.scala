@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.model.{Scorers, WindowScorer}
 import graft.ops._
 
@@ -15,12 +16,17 @@ import graft.ops._
   *  - pipeline3A robustness: pipeline_tests_power.py:172-477 → [[Pipeline3.robustness]]
   *  - pipeline3B generalization: pipeline_tests_power.py:484-785 → [[Pipeline3.leaveOneAttackOut]]
   *
-  * Every stage is ONE lazy DataFrame plan up to its sink: scan → labels →
-  * split (one shuffle) → scale (one collected agg row) → windows (one
-  * ordered exchange) → score → metric aggregations. Driver loops exist
-  * only where the reference's semantics are inherently iterative (grid
-  * cells, severity sweeps, held-out attacks) and each iteration is a
-  * distributed job.
+  * Every stage is a lazy DataFrame plan that ends in few, small collects.
+  * Pipeline 1 per grid key: scan → labels → split (one shuffle) → ONE
+  * collected aggregation that fits the label encoder and the scaler →
+  * windows (one ordered exchange, cached by one counting job); then per
+  * scorer: fit → ONE timed scoring pass whose collected (state slice, y,
+  * y_pred) count table yields every test metric on the driver → the val
+  * threshold and the test operational cells. metrics.json, the encoder
+  * and the scaler are written from the driver; of the artifacts only the
+  * MLlib model save runs Spark jobs. Driver loops exist only where the reference's
+  * semantics are inherently iterative (grid cells, severity sweeps,
+  * held-out attacks) and each iteration is a distributed job.
   */
 object Pipeline1 {
 
@@ -36,7 +42,8 @@ object Pipeline1 {
   /** Wall-clock measurements the reference records into every run's
     * metrics.json (pipeline_trainingmodels_power.py:160-192,328-329;
     * func_test.py:317-327 divides predict wall-clock by n test windows;
-    * latency is NaN when the test split is empty, as there). */
+    * latency is NaN without test windows, as there — a key [[prepare]]
+    * refuses). */
   final case class Timing(
       trainingTimeSeconds: Double,
       avgInferenceLatencyPerWindowSec: Double,
@@ -89,21 +96,24 @@ object Pipeline1 {
       case other => throw new IllegalArgumentException(s"unknown task $other")
     }
 
-    // 2. encode y (P9, lexicographic) — collected once (k rows) and
-    //    broadcast joined from a local table, so no later job re-derives
-    //    the distinct classes from the input
-    val fitted = Labels.fitLabelEncoder(filtered, target)
-    val encoder = spark.createDataFrame(
-      java.util.Arrays.asList(fitted.collect(): _*), fitted.schema)
-    val encoded = Labels.encodeLabel(filtered, encoder, target, "y")
-
-    // 3. per-(Attack, State) chronological split (G1) — one shuffle
-    val split = ChronoSplit.withSplit(encoded, Seq(attackCol, stateCol), orderCols,
+    // 2. per-(Attack, State) chronological split (G1) — one shuffle
+    val split = ChronoSplit.withSplit(filtered, Seq(attackCol, stateCol), orderCols,
       config.trainFrac, config.valFrac)
 
-    // 4. standardize on train stats only (P10)
-    val scaler = Stats.fitStandardScaler(split.where(col("split") === "train"), features)
-    val scaled = Stats.applyStandardScaler(split, scaler)
+    // 3. ONE collected aggregation over the split fits both the label
+    //    encoder (P9: the distinct classes in Spark's string order, the
+    //    order fitLabelEncoder's row_number gives) and the scaler (P10:
+    //    mean/std over the train rows only)
+    val fits = (array_sort(collect_set(col(target).cast("string"))).as("__classes") +:
+      Stats.standardScalerAggs(features, col("split") === "train"))
+    val fitted = split.agg(fits.head, fits.tail: _*).head()
+    val encoder = Labels.encoderTable(spark, fitted.getSeq[String](0).zipWithIndex)
+    val scaler = Stats.standardScalerFrom(fitted, features)
+
+    // 4. encode y (a broadcast join of the local encoder) and standardize
+    //    with the train stats
+    val scaled = Stats.applyStandardScaler(
+      Labels.encodeLabel(split, encoder, target, "y"), scaler)
 
     // 5. sliding windows per split (W1/W2): label/state/attack from the
     //    window's LAST row; within a split, windows slide over the
@@ -124,14 +134,19 @@ object Pipeline1 {
       // its fit alone (the reference fits on pre-materialized npz arrays,
       // func_models.py:339).
       .cache()
-    // the materializing job counts the train windows: a key without any
-    // fails here, by name, instead of inside every scorer's fit
-    val nTrain = windows.agg(count(when(col("split") === "train", true)))
-      .head().getLong(0)
-    if (nTrain == 0L) windows.unpersist()
-    require(nTrain > 0L, s"no train windows for task=${config.task} " +
-      s"seqLen=${config.seqLen} step=${config.step}: the train split has " +
-      s"${split.where(col("split") === "train").count()} rows")
+    // the materializing job counts the train and test windows: a key
+    // without either fails here, by name, instead of inside every
+    // scorer's fit or evaluation
+    val n = windows.agg(count(when(col("split") === "train", true)),
+      count(when(col("split") === "test", true))).head()
+    def requireWindows(nWindows: Long, role: String): Unit = {
+      if (nWindows == 0L) windows.unpersist()
+      require(nWindows > 0L, s"no $role windows for task=${config.task} " +
+        s"seqLen=${config.seqLen} step=${config.step}: the $role split has " +
+        s"${split.where(col("split") === role).count()} rows")
+    }
+    requireWindows(n.getLong(0), "train")
+    requireWindows(n.getLong(1), "test")
     Prepared(windows, encoder, scaler)
   }
 
@@ -147,23 +162,26 @@ object Pipeline1 {
     val trainingTimeSeconds = (System.nanoTime() - tTrain0) / 1e9
     val scored = model.transform(windows)
 
-    // 7. metrics: G9/G13 on test; G16 operational for binary; F10 per-state
-    //    (the encoder is local: reading it runs no job)
+    // 7. metrics: G9/G13/F10 on test, G16 operational for binary (the
+    //    encoder is local: reading it runs no job)
     val classes = prepared.encoder.collect()
     val k = classes.length
     val test = scored.where(col("split") === "test")
     // Inference latency: wall-clock of ONE forced scoring pass over the
-    // test windows / their count (func_test.py:317-327). The aggregate
-    // reads proba so Catalyst cannot prune the scoring expressions away
-    // (a bare count() would).
+    // test windows / their count (func_test.py:317-327). The pass is the
+    // metrics' count table — (state slice, y, y_pred) cells, at most 2·k²
+    // rows, collected once — and it also sums proba so Catalyst cannot
+    // prune the scoring expressions away. Confusion, multiclass and
+    // per-state all derive from those cells on the driver.
+    val stateSlice = when(col("state_bin_last") >= 0.5, "charging").otherwise("idle")
     val tPred0 = System.nanoTime()
-    val nTestWindows = test
-      .agg(count(lit(1)), sum(element_at(col("proba"), 1))).head().getLong(0)
+    val cells = MetricsOps.collectCells(test, stateSlice, col("y"), col("y_pred"),
+      reads = Seq(element_at(col("proba"), 1)))
     val predSeconds = (System.nanoTime() - tPred0) / 1e9
+    val nTestWindows = cells.map(_.n).sum
     val avgLatency =
       if (nTestWindows > 0) predSeconds / nTestWindows else Double.NaN
-    val confusion = MetricsOps.confusionMatrix(test, "y", "y_pred", 0 until k)
-    val multiclass = MetricsOps.multiclassMetrics(test, "y", "y_pred", 0 until k)
+    val metrics = MetricsOps.tables(windows.sparkSession, cells, StringType, 0 until k)
     val operational =
       if (config.task == "binary" && k == 2) {
         // attack-class proba: class id of "attack" under lexicographic
@@ -178,13 +196,10 @@ object Pipeline1 {
           when(col("y") === attackId, 1).otherwise(0), score,
           config.fprTarget, config.hopSeconds))
       } else None
-    val perState = MetricsOps.multiclassMetricsPerGroup(
-      test.withColumn("state_slice",
-        when(col("state_bin_last") >= 0.5, "charging").otherwise("idle")),
-      "state_slice", "y", "y_pred", 0 until k)
 
-    Result(windows, scored, prepared.encoder, model, multiclass, confusion, operational,
-      perState, Timing(trainingTimeSeconds, avgLatency, nTestWindows), prepared.scaler)
+    Result(windows, scored, prepared.encoder, model, metrics.multiclass, metrics.confusion,
+      operational, metrics.perGroup,
+      Timing(trainingTimeSeconds, avgLatency, nTestWindows), prepared.scaler)
   }
 
   /** Train pipeline on a labeled time series: [[prepare]] then
@@ -276,18 +291,17 @@ object Pipeline1 {
   /** One cell's run directory: metrics.json, config.json and the S7
     * artifacts (the reference persists model + encoder + scaler alongside
     * metrics); models that don't expose an MLlib transformer (custom
-    * scorers) have nothing portable to save. */
-  private def writeArtifacts(runDir: java.nio.file.Path, res: Result, task: String,
+    * scorers) have nothing portable to save. Everything but the MLlib
+    * model is written from the driver: the multiclass row is a local
+    * table, so no Spark job renders metrics.json. */
+  private[graft] def writeArtifacts(runDir: java.nio.file.Path, res: Result, task: String,
       scorerName: String, seqLen: Int, step: Int, fprTarget: Double): Unit = {
     java.nio.file.Files.createDirectories(runDir)
-    val metricsDoc = graft.sources.Sources.sanitizeDoubles(
-      res.multiclass
-        .withColumn("training_time_seconds",
-          lit(res.timing.trainingTimeSeconds))
-        .withColumn("avg_inference_latency_per_window_sec",
-          lit(res.timing.avgInferenceLatencyPerWindowSec))
-        .withColumn("n_test_windows", lit(res.timing.nTestWindows)))
-      .toJSON.head()
+    val row = res.multiclass.head()
+    val metricsDoc = flatJson(row.schema.fieldNames.toSeq.zip(row.toSeq) ++ Seq(
+      "training_time_seconds" -> res.timing.trainingTimeSeconds,
+      "avg_inference_latency_per_window_sec" -> res.timing.avgInferenceLatencyPerWindowSec,
+      "n_test_windows" -> res.timing.nTestWindows))
     java.nio.file.Files.writeString(runDir.resolve("metrics.json"),
       s"""{"metrics": $metricsDoc}""")
     java.nio.file.Files.writeString(runDir.resolve("config.json"),
@@ -299,6 +313,16 @@ object Pipeline1 {
     if (res.model.isInstanceOf[graft.model.HasMlModel])
       graft.model.ModelIO.saveModel(res.model, runDir.resolve("model").toString)
   }
+
+  /** A flat row of numbers as the JSON object Spark's writer renders for
+    * it after [[graft.sources.Sources.sanitizeDoubles]]: a null, NaN or
+    * infinite value omits its field, a double prints as
+    * `Double.toString` (Jackson's default), an integer as its digits. */
+  private[graft] def flatJson(fields: Seq[(String, Any)]): String =
+    fields.collect {
+      case (k, d: Double) if java.lang.Double.isFinite(d) => s""""$k":$d"""
+      case (k, v @ (_: Long | _: Int)) => s""""$k":$v"""
+    }.mkString("{", ",", "}")
 }
 
 /** Pipeline2 — surrogate explainability (pipeline_expl_power.py:55-233):

@@ -62,4 +62,13 @@ class LocalRegimeSpec extends SparkSpec {
       assert(LocalRegime.collectAtMost(df, 1).isEmpty)
     }
   }
+
+  test("collectBounded: the same probe, unaffected by distributedOnly") {
+    val df = spark.range(1, 4).toDF("x")
+    for (probe <- Seq(LocalRegime.collectBounded(df, 3),
+        LocalRegime.distributedOnly(LocalRegime.collectBounded(df, 3))))
+      assert(probe.map(_.map(_.getLong(0)).sorted.toSeq) == Some(Seq(1L, 2L, 3L)))
+    assert(LocalRegime.distributedOnly(LocalRegime.collectBounded(df, 2)).isEmpty)
+    assert(LocalRegime.collectBounded(df, 0).isEmpty)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.{BinaryOperational, Curves, LocalRegime, MetricsOps, Sessionize}
 
@@ -142,6 +143,152 @@ class MetricsCurvesSpec extends SparkSpec {
     val cm = MetricsOps.confusionMatrix(df, "yt", "yp", Seq(0, 1, 2))
     assert(cm.count() == 9)
     assert(cm.where(col("cnt") === 0).count() == 7)
+  }
+
+  /** The relational G13/F10 algebra `MetricsOps.multiclassMetricsPerGroup`
+    * had before its cell-level form: the parity reference for
+    * [[MetricsOps.cellMetrics]]. One groupBy over (group, y_true, y_pred)
+    * cells, a 2-way explode into per-(group, class) support / tp /
+    * predicted, a left join against the per-group label universe, then
+    * per-group averages — Spark's summation order, which the cell form
+    * replaces with a fixed one. */
+  private def relationalPerGroup(df: DataFrame, groupCol: String,
+      yTrue: String, yPred: String, labels: Seq[Int]): DataFrame = {
+    def safeDiv(num: Column, den: Column): Column =
+      coalesce(num / nullif(den, lit(0.0)), lit(0.0))
+    val counts = df.groupBy(col(groupCol).as("grp"),
+        col(yTrue).cast("int").as("y_true"), col(yPred).cast("int").as("y_pred"))
+      .agg(count(lit(1)).as("cnt"))
+      .localCheckpoint(false)
+    val contrib = counts
+      .where(col("y_true").isin(labels: _*) && col("y_pred").isin(labels: _*))
+      .select(col("grp"), explode(array(
+        struct(col("y_true").as("cls"), col("cnt").as("support"),
+          when(col("y_true") === col("y_pred"), col("cnt")).otherwise(0L)
+            .as("tp"), lit(0L).as("predicted")),
+        struct(col("y_pred").as("cls"), lit(0L).as("support"),
+          lit(0L).as("tp"), col("cnt").as("predicted")))).as("__c"))
+      .select(col("grp"), col("__c.cls").as("cls"), col("__c.support"),
+        col("__c.tp"), col("__c.predicted"))
+      .groupBy("grp", "cls")
+      .agg(sum("support").as("support"), sum("tp").as("tp"),
+        sum("predicted").as("predicted"))
+    val universe = counts.select(col("grp").as("__gu")).distinct()
+      .crossJoin(labels.toDF("__cu"))
+    def fbeta(b: Double): Column = {
+      val b2 = lit(b * b)
+      safeDiv((lit(1.0) + b2) * col("precision") * col("recall"),
+        b2 * col("precision") + col("recall"))
+    }
+    val stats = universe.join(contrib,
+        col("__gu") === col("grp") && col("__cu") === col("cls"), "left")
+      .drop("grp", "cls")
+      .withColumnRenamed("__gu", "grp").withColumnRenamed("__cu", "cls")
+      .na.fill(0L, Seq("support", "tp", "predicted"))
+      .withColumn("fn", col("support") - col("tp"))
+      .withColumn("fp", col("predicted") - col("tp"))
+      .withColumn("precision", safeDiv(col("tp"), col("tp") + col("fp")))
+      .withColumn("recall", safeDiv(col("tp"), col("tp") + col("fn")))
+      .withColumn("f1", fbeta(1.0))
+      .withColumn("f2", fbeta(2.0))
+      .withColumn("f0_5", fbeta(0.5))
+    stats.groupBy("grp").agg(
+      safeDiv(sum("tp"), sum("support")).as("accuracy"),
+      avg(when(col("support") > 0, col("recall"))).as("balanced_accuracy"),
+      avg("precision").as("precision_macro"),
+      avg("recall").as("recall_macro"),
+      avg("f1").as("f1_macro"),
+      avg("f2").as("f2_macro"),
+      avg("f0_5").as("f0_5_macro"),
+      (sum(col("precision") * col("support")) / sum("support")).as("precision_weighted"),
+      (sum(col("recall") * col("support")) / sum("support")).as("recall_weighted"),
+      (sum(col("f1") * col("support")) / sum("support")).as("f1_weighted"))
+  }
+
+  /** Runs `body` with ANSI arithmetic off: the relational reference
+    * divides by a zero support sum on a zero-support group, which ANSI
+    * turns into DIVIDE_BY_ZERO and non-ANSI into the null the cell form
+    * returns. */
+  private def nonAnsi[T](body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, before)
+  }
+
+  test("cell-level metric algebra == the relational reference over generated cell tables") {
+    for (k <- Seq(2, 3, 5); nGroups <- Seq(1, 3)) {
+      val rnd = new scala.util.Random(1000L * k + nGroups)
+      val labels = 0 until k
+      // a class id: mostly inside the universe, sometimes outside or null
+      def cls(): Option[Int] = rnd.nextInt(10) match {
+        case 0 => None
+        case 1 => Some(k + rnd.nextInt(3))
+        case 2 => Some(-1)
+        case _ => Some(rnd.nextInt(k))
+      }
+      val inside = for {
+        g <- 0 until nGroups
+        _ <- 0 until 4 * k * k
+      } yield MetricsOps.Cell(s"g$g", cls(), cls(), 1L + rnd.nextInt(50))
+      // one group whose every cell falls outside the universe, and a null group
+      val outside = Seq(MetricsOps.Cell("out", Some(k), Some(0), 3L),
+        MetricsOps.Cell("out", None, Some(1), 2L), MetricsOps.Cell("out", Some(0), Some(-1), 4L))
+      val nullGroup = Seq(MetricsOps.Cell(null, Some(0), Some(0), 5L))
+      val cells = inside ++ outside ++ nullGroup
+      val rows = cells.flatMap(c => Seq.fill(c.n.toInt)((Option(c.group.asInstanceOf[String]),
+        c.yTrue, c.yPred)))
+      val df = rnd.shuffle(rows).toDF("grp", "yt", "yp").repartition(4)
+      val clue = s"k=$k groups=$nGroups"
+
+      val want = nonAnsi(relationalPerGroup(df, "grp", "yt", "yp", labels).collect())
+        .map(r => Option(r.get(0)) -> r.toSeq.tail).toMap
+      val cellForm = MetricsOps.cellMetrics(cells, labels)
+        .map(g => Option(g.group) -> g.suite.toRow.toSeq).toMap
+      val face = MetricsOps.multiclassMetricsPerGroup(df, "grp", "yt", "yp", labels).collect()
+        .map(r => Option(r.get(0)) -> r.toSeq.tail).toMap
+      assert(want.keySet == (0 until nGroups).map(g => Some(s"g$g")).toSet ++
+        Set(Some("out"), None), clue)
+      for (got <- Seq(cellForm, face)) {
+        assert(got.keySet == want.keySet, clue)
+        for ((g, w) <- want; i <- w.indices) {
+          val name = MetricsOps.SuiteSchema.fieldNames(i)
+          (w(i), got(g)(i)) match {
+            case (null, null) =>
+            case (x: Double, y: Double) =>
+              if (k == 2) assert(x == y, s"$clue group=$g $name: $x vs $y")
+              else assert(approx(x, y, 1e-12), s"$clue group=$g $name: $x vs $y")
+            case (a, b) => fail(s"$clue group=$g $name: $a vs $b")
+          }
+        }
+      }
+      // the all-outside and null groups carry no support
+      Seq(Some("out"), None).foreach { g =>
+        assert(cellForm(g) == Seq(0.0, null, 0.0, 0.0, 0.0, 0.0, 0.0, null, null, null), s"$clue $g")
+      }
+    }
+  }
+
+  test("multiclassMetricsPerGroup: NaN and binary group keys group as Spark groups them") {
+    // two cells per group: (0,0) and (0,1) → accuracy 1/2 in each group
+    val byDouble = Seq((Double.NaN, 0, 0), (Double.NaN, 0, 1), (1.0, 0, 0), (1.0, 0, 1))
+      .toDF("grp", "yt", "yp")
+    val byBinary = Seq((Array[Byte](1), 0, 0), (Array[Byte](1), 0, 1),
+      (Array[Byte](2), 0, 0), (Array[Byte](2), 0, 1)).toDF("grp", "yt", "yp")
+    for (df <- Seq(byDouble, byBinary)) {
+      val m = MetricsOps.multiclassMetricsPerGroup(df, "grp", "yt", "yp", Seq(0, 1)).collect()
+      assert(m.length == 2, m.toSeq)
+      assert(m.forall(_.getAs[Double]("accuracy") == 0.5), m.toSeq)
+    }
+  }
+
+  test("metric count table: more cells than the driver limit fails by name") {
+    // 2^18 + 1 groups of one cell each: one past the cell limit
+    val df = spark.range(0, (1L << 18) + 1).select(col("id").as("grp"),
+      lit(0).as("yt"), lit(0).as("yp"))
+    val e = intercept[IllegalArgumentException](
+      MetricsOps.multiclassMetricsPerGroup(df, "grp", "yt", "yp", Seq(0, 1)))
+    assert(e.getMessage.contains("more than 262144 (group, y_true, y_pred) cells"), e.getMessage)
   }
 
   test("classWeights: n/(k*n_c) capped") {

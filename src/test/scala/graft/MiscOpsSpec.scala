@@ -106,4 +106,23 @@ class MiscOpsSpec extends SparkSpec {
     ModelIO.saveScaler(scaler, dir)
     assert(ModelIO.loadScaler(dir) == scaler)
   }
+
+  test("S7 encoder.json: a flat {\"class\": y} object; escaped class names round-trip") {
+    import graft.model.ModelIO
+    val dir = Files.createTempDirectory("graft_s7_enc").toString
+    val classes = Seq("attack", "be\"nign", "back\\slash", "tab\tnew\nline", "ünï")
+    val enc = spark.createDataFrame(java.util.Arrays.asList(
+      classes.zipWithIndex.map { case (c, y) => org.apache.spark.sql.Row(c, y) }: _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("class", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("y", org.apache.spark.sql.types.IntegerType))))
+    ModelIO.saveEncoder(enc, dir)
+    val json = new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "encoder.json")), "UTF-8")
+    assert(json.startsWith("{\"attack\": 0, \"be\\\"nign\": 1, "), json)
+    // the file is one valid JSON object of the classes
+    val parsed = spark.read.json(Seq(json).toDS).head()
+    assert(classes.zipWithIndex.forall { case (c, y) => parsed.getAs[Long](c) == y }, json)
+    assert(ModelIO.loadEncoder(spark, dir).collect().map(r => (r.getString(0), r.getInt(1))).toSeq ==
+      classes.zipWithIndex)
+  }
 }

@@ -184,6 +184,102 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("pipeline1 grid: a key with train windows but no test windows fails in prepare, by name") {
+    // seqLen 300 > the 180 test rows (per (Attack, State) group: 30, 30,
+    // 60, 60) but < the 840 train rows: train windows exist, test ones not
+    import graft.model.{WindowModel, WindowScorer}
+    var fits = 0
+    final case class Counting() extends WindowScorer {
+      def fit(train: DataFrame, wc: String, yc: String): WindowModel = {
+        fits += 1
+        Scorers.Logistic(maxIter = 5).fit(train, wc, yc)
+      }
+    }
+    val cells = Pipeline1.runGrid(spark, power, Seq("current_ma", "power_mw"),
+      "Attack", "State", Seq(col("t")), tasks = Seq("binary"),
+      scorers = Seq("counting" -> Counting()), seqLens = Seq(300), stepsFor = _ => Seq(300),
+      base = Pipeline1.Config(fprTarget = 0.05))
+    val e = cells.head.outcome.failed.get
+    assert(e.isInstanceOf[IllegalArgumentException], e.toString)
+    assert(e.getMessage.contains(
+      "no test windows for task=binary seqLen=300 step=300: the test split has 180 rows"),
+      e.getMessage)
+    assert(fits == 0, "the scorer was fit on a key that cannot be evaluated")
+  }
+
+  test("pipeline1 job budget: one binary cell's evaluation and artifact write run at most 7 Spark jobs") {
+    import graft.model.{WindowModel, WindowScorer}
+    // a precomputed non-MLlib model: scoring is a column expression, so
+    // neither its fit nor a model save runs a job
+    object Fixed extends WindowModel {
+      def transform(df: DataFrame, wc: String): DataFrame = {
+        val p = lit(1.0) / (lit(1.0) + exp(-element_at(element_at(col(wc), -1), 1)))
+        df.withColumn("proba", array(p, lit(1.0) - p))
+          .withColumn("y_pred", Scorers.argmax(col("proba")))
+      }
+    }
+    object FixedScorer extends WindowScorer {
+      def fit(train: DataFrame, wc: String, yc: String): WindowModel = Fixed
+    }
+    val config = Pipeline1.Config(task = "binary", seqLen = 10, step = 5, fprTarget = 0.05)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.ProfileBus.drain(sc)
+      val j0 = jobs.get
+      body
+      org.apache.spark.ProfileBus.drain(sc)
+      jobs.get - j0
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the cell's jobs: a one-scorer grid of the key minus its prepare
+      val prepareJobs = jobsOf {
+        Pipeline1.prepare(spark, power, Seq("current_ma", "power_mw"), "Attack", "State",
+          Seq(col("t")), config).windows.unpersist(blocking = true)
+      }
+      val root = java.nio.file.Files.createTempDirectory("graft_budget")
+      var cells = Seq.empty[Pipeline1.GridCell]
+      val gridJobs = jobsOf {
+        cells = Pipeline1.runGrid(spark, power, Seq("current_ma", "power_mw"),
+          "Attack", "State", Seq(col("t")), tasks = Seq("binary"),
+          scorers = Seq("fixed" -> FixedScorer), seqLens = Seq(10), stepsFor = _ => Seq(5),
+          outputRoot = Some(root.toString), base = config)
+      }
+      assert(cells.head.outcome.isSuccess, cells.head.outcome.toString)
+      assert(cells.head.outcome.get.operational.isDefined)
+      assert(java.nio.file.Files.exists(root.resolve("binary_fixed_seq10_step5/metrics.json")))
+      val cellJobs = gridJobs - prepareJobs
+      info(s"cell jobs $cellJobs, prepare jobs $prepareJobs")
+      assert(prepareJobs > 0 && cellJobs <= 7,
+        s"cell jobs $cellJobs (grid $gridJobs, prepare $prepareJobs)")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("metrics.json is rendered on the driver exactly as Spark's JSON writer renders the row") {
+    import graft.sources.Sources
+    val rnd = new scala.util.Random(17)
+    val edge = Seq(0.0, -0.0, 1.0, 0.1 + 0.2, 1.0 / 3, 2e-3, 1e-7, 1.0e23, 9.999999999999999e22,
+      123456789.0, 1e7, 1e-3, Double.MinPositiveValue, Double.MaxValue, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    val values = edge ++ Seq.fill(200)(rnd.nextDouble() * math.pow(10, rnd.nextInt(30) - 15))
+    values.grouped(5).foreach { ds =>
+      val fields = ds.zipWithIndex.map { case (d, i) => s"f$i" -> d } :+ ("n" -> 35L)
+      val row = org.apache.spark.sql.Row.fromSeq(fields.map(_._2))
+      val schema = org.apache.spark.sql.types.StructType(fields.map { case (n, v) =>
+        org.apache.spark.sql.types.StructField(n,
+          if (v.isInstanceOf[Long]) org.apache.spark.sql.types.LongType
+          else org.apache.spark.sql.types.DoubleType)
+      })
+      val df = spark.createDataFrame(java.util.Arrays.asList(row), schema)
+      assert(Pipeline1.flatJson(fields) == Sources.sanitizeDoubles(df).toJSON.head(), ds)
+    }
+  }
+
   test("pipeline2: surrogate tree imitates the base model above chance") {
     val p2 = Pipeline2.run(result.scored, nFeatures = 2)
     val agreement = p2.agreement.head().getAs[Double]("agreement")
