@@ -78,13 +78,13 @@ object BinaryOperational {
     // (distributed — nothing numeric happens on the driver but the final
     // scalar algebra on 6 fetched values).
     val (cpLo, cpHi) = clopperPearsonCols(col("fp"), col("tn") + col("fp"))
+    // An empty test frame sums to null: its cells count 0, and the rates
+    // and CIs below take their nNeg = 0 branches (NaN).
+    def cell(y: Int, p: Int, name: String) =
+      coalesce(sum(when(col("y") === y && col("p") === p, 1).otherwise(0)), lit(0L)).as(name)
     val cells = testDf
       .select(label.cast("int").as("y"), (score >= thr).cast("int").as("p"))
-      .agg(
-        sum(when(col("y") === 0 && col("p") === 0, 1).otherwise(0)).as("tn"),
-        sum(when(col("y") === 0 && col("p") === 1, 1).otherwise(0)).as("fp"),
-        sum(when(col("y") === 1 && col("p") === 0, 1).otherwise(0)).as("fn"),
-        sum(when(col("y") === 1 && col("p") === 1, 1).otherwise(0)).as("tp"))
+      .agg(cell(0, 0, "tn"), cell(0, 1, "fp"), cell(1, 0, "fn"), cell(1, 1, "tp"))
       .select(col("tn"), col("fp"), col("fn"), col("tp"),
         cpLo.as("fpr_ci_cp_low"), cpHi.as("fpr_ci_cp_high"))
       .head()

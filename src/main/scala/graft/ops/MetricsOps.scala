@@ -215,10 +215,13 @@ object MetricsOps {
 
   /** G11 — weighted log-loss with probability clipping.
     * Ref: compute_weighted_logloss, pipelines_host/pipeline_host_importance.py:128-151:
-    * `Σ w_i · (−log clip(p_true_i, ε, 1−ε)) / Σ w_i`, ε = 1e-12. */
-  def weightedLogLoss(df: DataFrame, pTrue: Column, weight: Column, eps: Double = 1e-12): DataFrame = {
+    * `Σ w_i · (−log clip(p_true_i, ε, 1−ε)) / Σ w_i`, ε = 1e-12. With
+    * `groupCols`, one row per group: the group columns, then the loss. */
+  def weightedLogLoss(df: DataFrame, pTrue: Column, weight: Column, eps: Double = 1e-12,
+      groupCols: Seq[Column] = Nil): DataFrame = {
     val clipped = greatest(least(pTrue, lit(1.0 - eps)), lit(eps))
-    df.agg((sum(-log(clipped) * weight) / sum(weight)).as("weighted_logloss"))
+    df.groupBy(groupCols: _*)
+      .agg((sum(-log(clipped) * weight) / sum(weight)).as("weighted_logloss"))
   }
 
   /** G5 — "balanced" class weights capped: w_c = min(n / (k · n_c), cap).

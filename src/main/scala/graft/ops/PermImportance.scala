@@ -14,57 +14,82 @@ import org.apache.spark.storage.StorageLevel
   * by mean drop descending.
   *
   * Distributed permutation: "shuffle one column independently" has no
-  * Spark built-in (SURVEY §4.2). We explode windows to (cell_id, value)
-  * for the target feature, assign each cell a random rank by ordering on
-  * a deterministic hash-uniform, and join ranks-to-ranks — i.e. value at
-  * permuted position k replaces value at position k. Both rank
-  * assignments use [[SlidingWindows.withGlobalIndex]] (range-repartition
-  * + partition offsets), so there is NO single-partition row_number
-  * stage anywhere — every step is fully parallel. Cost: two range
-  * exchanges + one shuffle join per (feature × repeat) — the reference's
-  * own algorithmic cost, made explicit. Callers batch features per pass
-  * when F is large.
+  * Spark built-in (SURVEY §4.2). A trial (feature, seed) ranks the cells
+  * (window, t) in (winId, t) order and, separately, ranks the feature's
+  * values by a deterministic hash-uniform; the value of permuted rank k
+  * replaces the value of the cell of rank k. Every trial is one segment
+  * of ONE [[SlidingWindows.withGlobalIndex]] pass (range exchange +
+  * partition offsets, no single-partition row_number stage): the cells
+  * are one more segment whose uniform is the constant 0, so the same
+  * order (u, winId, t) ranks them in (winId, t) order. Cost for any
+  * number of trials: that one range exchange (sized by the number of
+  * segments, so no sort partition holds more than about one trial's
+  * cells per shuffle partition), one shuffle that brings each rank's cell
+  * and values together, one that regroups them by window, and the join
+  * back onto the windows.
   */
 object PermImportance {
 
   /** Permute feature `featureIdx` of the `window` column across all rows
-    * and timesteps. `winId` must be a unique long per row. Returns the
-    * input with `window` rebuilt. */
+    * and timesteps — the one-trial face of [[permuteFeatures]]. `winId`
+    * must be a unique long per row. Returns the input with `window`
+    * rebuilt, `winId` first. */
   def permuteFeature(df: DataFrame, winId: String, window: String,
-      featureIdx: Int, seed: Long): DataFrame = {
-    // THREE consumers re-derive the input (both global-index passes read
-    // the exploded cells; the reassembly join reads the windows again) —
-    // and each withGlobalIndex call EAGERLY collects its partition
-    // counts, so an unpinned input lineage (often a full sliding-window
-    // op) re-executes per call. Pin both faces once (r13) — the input
-    // only when the caller has not cached it already (a cached input is
-    // read from its cache; a pinned copy would only duplicate it).
+      featureIdx: Int, seed: Long): DataFrame =
+    permuteFeatures(df, winId, window, Seq(featureIdx -> seed)).drop("trial")
+
+  /** One copy of `df` per trial `(featureIdx, seed)`, tagged with the
+    * trial's position in `trials` as the int column `trial`: in copy k,
+    * feature `trials(k)._1` of `window` is permuted across all rows and
+    * timesteps under seed `trials(k)._2` — each copy equals what
+    * [[permuteFeature]] returns for that trial. `winId` must be a unique
+    * long per row, and `df` must not carry columns named `trial`, `feat`
+    * or `perm_map`; rows whose window has no cells are dropped. */
+  def permuteFeatures(df: DataFrame, winId: String, window: String,
+      trials: Seq[(Int, Long)]): DataFrame = {
+    require(trials.nonEmpty, "at least one trial")
+    // The exchange's two jobs read the cells and the final join reads the
+    // windows, and withGlobalIndex collects its partition counts eagerly —
+    // an unpinned input lineage (often a full sliding-window op) would
+    // re-execute per read. Pin it once, unless the caller has cached it
+    // (a cached input is read from its cache; a pin would duplicate it).
     val dfP =
       if (df.storageLevel != StorageLevel.NONE) df else df.localCheckpoint(false)
-    val exploded = dfP.select(col(winId),
-      posexplode(transform(col(window), r => element_at(r, featureIdx + 1)))
-        .as(Seq("t", "v")))
-      .localCheckpoint(false)
-    val cells = SlidingWindows.withGlobalIndex(exploded,
-      Seq(col(winId), col("t")), "cell_rank")
-    // Random permutation: rank cells by a deterministic hash-uniform, then
-    // carry the value from permuted rank k to the cell holding rank k.
-    // (Same total order as a global row_number — ties broken by (id, t) —
-    // but computed with the parallel global index.)
-    val permuted = SlidingWindows.withGlobalIndex(
-        exploded.withColumn("__u",
-          Robustness.seededUniform(seed, col(winId), col("t"))),
-        Seq(col("__u"), col(winId), col("t")), "cell_rank")
-      .select(col("cell_rank"), col("v").as("v_perm"))
-    val replaced = cells.drop("v").join(permuted, Seq("cell_rank"))
-    // Re-assemble the permuted series per window, ordered by timestep.
-    val series = replaced.groupBy(winId)
-      .agg(map_from_entries(collect_list(struct(col("t"), col("v_perm")))).as("perm_map"))
+    val spark = df.sparkSession
+    // segment -1: the cells, uniform 0; segment k: trial k's values
+    val segments = (-1, -1, 0L) +: trials.zipWithIndex.map { case ((f, s), k) => (k, f, s) }
+    val isCell = col("trial") === -1
+    val tagged = dfP.select(col(winId), posexplode(col(window)).as(Seq("t", "row")))
+      .select(col(winId), col("t"), col("row"), inline(array(segments.map { case (k, f, s) =>
+        struct(lit(k).as("trial"), lit(f).as("feat"), lit(s).as("seed"))
+      }: _*)))
+      .select(col("trial"), col(winId), col("t"),
+        when(isCell, lit(0.0))
+          .otherwise(Robustness.seededUniformC(col("seed"), col(winId), col("t"))).as("__u"),
+        when(!isCell, element_at(col("row"), col("feat") + 1)).as("v"))
+    val ranked = SlidingWindows.withGlobalIndex(tagged,
+      Seq(col("__u"), col(winId), col("t")), "cell_rank",
+      numPartitions = segments.size * spark.sessionState.conf.numShufflePartitions,
+      partitionCols = Seq("trial"))
+    // rank k: the cell holding it receives every trial's value of rank k
+    // (one value per trial: a fixed-width aggregation, no per-group lists)
+    val moved = ranked.groupBy("cell_rank").agg(
+      max(when(isCell, col(winId))).as(winId),
+      max(when(isCell, col("t"))).as("t"),
+      array(trials.indices.map(k => max(when(col("trial") === k, col("v")))): _*).as("vs"))
+    // per window: t → every trial's permuted value at t
+    val series = moved.groupBy(winId)
+      .agg(map_from_entries(collect_list(struct(col("t"), col("vs")))).as("perm_map"))
+    val copies = array(trials.zipWithIndex.map { case ((f, _), k) =>
+      struct(lit(k).as("trial"), lit(f).as("feat"))
+    }: _*)
     dfP.join(series, Seq(winId))
+      .select(col("*"), inline(copies))
       .withColumn(window,
         transform(col(window), (row, i) =>
           transform(row, (x, j) =>
-            when(j === lit(featureIdx), element_at(col("perm_map"), i)).otherwise(x))))
-      .drop("perm_map")
+            when(j === col("feat"), element_at(element_at(col("perm_map"), i), col("trial") + 1))
+              .otherwise(x))))
+      .drop("perm_map", "feat")
   }
 }

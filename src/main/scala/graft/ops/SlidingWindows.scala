@@ -208,10 +208,13 @@ object SlidingWindows {
   /** Distributed global row index `out` (1..n in `orderCols` order) — the
     * classic parallel zipWithIndex on [[prefixScan]]: pass 1 counts rows
     * per range partition, pass 2 adds the partition offset to the local
-    * position. Both jobs share the one range exchange; NOT cached. */
+    * position. Both jobs share the one range exchange; NOT cached. With
+    * `partitionCols`, every segment (distinct partition-column values) is
+    * indexed on its own, from 1 — the union of per-segment calls in one
+    * pass. */
   def withGlobalIndex(df: DataFrame, orderCols: Seq[Column], out: String,
-      numPartitions: Int = 0): DataFrame =
-    prefixScan(df, Nil, orderCols, numPartitions,
+      numPartitions: Int = 0, partitionCols: Seq[String] = Nil): DataFrame =
+    prefixScan(df, partitionCols, orderCols, numPartitions,
         Seq(StructField(out, LongType, nullable = false))) { (k, _) => Some(Seq(k)) }
 
   /** Distributed running total `out` of `value` (cast to long) in global

@@ -1,8 +1,8 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types._
 import graft.model.{Scorers, WindowScorer}
 import graft.ops._
 
@@ -24,9 +24,11 @@ import graft.ops._
   * y_pred) count table yields every test metric on the driver → the val
   * threshold and the test operational cells. metrics.json, the encoder
   * and the scaler are written from the driver; of the artifacts only the
-  * MLlib model save runs Spark jobs. Driver loops exist only where the reference's
-  * semantics are inherently iterative (grid cells, severity sweeps,
-  * held-out attacks) and each iteration is a distributed job.
+  * MLlib model save runs Spark jobs. Driver loops remain only where each
+  * iteration fits a model (grid cells, the (held-out attack, seed)
+  * retrains); sweeps that only re-score — 3A's severity grid, 3B's
+  * evaluation of every retrained model, the permutation-importance trials
+  * — run as one plan each, and the driver reduces their repeats.
   */
 object Pipeline1 {
 
@@ -352,17 +354,22 @@ object Pipeline2 {
   }
 }
 
-/** Pipeline3 — robustness (3A) and generalization (3B). */
+/** Pipeline3 — robustness (3A) and generalization (3B). Each call ends in
+  * one collected aggregation with a row per (configuration, repeat), and
+  * the driver reduces the repeats (G7, [[repeatStats]]); its result is a
+  * local table (reading it runs no job). */
 object Pipeline3 {
 
   /** 3A: severity sweep of seeded degradations over the test windows,
     * re-scored per (kind, severity, repeat); G7 mean/std across repeats
     * (70 evaluations in the reference, pipeline_tests_power.py:255-379).
     *
-    * ONE plan (SURVEY §3.2): broadcast the (kind, severity, rep, seed)
-    * grid, cross join it against the test windows, degrade with
-    * column-parameterized severity/seed, score once, aggregate once — 2
-    * jobs instead of one job per evaluation. The data grows by the grid
+    * ONE plan (SURVEY §3.2): copy every test window once per (kind,
+    * severity, rep, seed) of the grid (a literal array, inlined), degrade with
+    * column-parameterized severity/seed, score once, and collect the
+    * accuracy of every (kind, severity, rep) — at most kinds × nSev ×
+    * nRepeats rows — from one aggregation; the driver reduces the repeats
+    * and orders the rows by (kind, severity). The data grows by the grid
     * size within the plan (kinds × severities × repeats copies of the
     * test windows — the point: the whole sweep parallelizes across the
     * cluster); batch the kinds or repeats if windows × grid exceeds
@@ -372,8 +379,6 @@ object Pipeline3 {
       kinds: Seq[String] = Seq("packet_loss", "missing_variables"),
       maxSev: Double = 0.6, nSev: Int = 7, nRepeats: Int = 5,
       baseSeed: Long = 123L): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
     kinds.filterNot(Robustness.Kinds.contains).foreach(k =>
       throw new IllegalArgumentException(s"unknown kind $k"))
     val test = scored.where(col("split") === "test")
@@ -381,9 +386,10 @@ object Pipeline3 {
     val grid = for {
       kind <- kinds
       (sev, rep, seed) <- Robustness.severityGrid(maxSev, nSev, nRepeats, baseSeed)
-    } yield (kind, sev, rep, seed)
-    val gridDf = grid.toDF("kind", "severity", "rep", "seed")
-    val degraded = test.crossJoin(broadcast(gridDf))
+    } yield struct(lit(kind).as("kind"), lit(sev).as("severity"), lit(rep).as("rep"),
+      lit(seed).as("seed"))
+    // an empty grid has no evaluations (and an empty array no struct type)
+    lazy val degraded = test.select(col("*"), inline(array(grid: _*)))
       .withColumn("window",
         when(col("kind") === "packet_loss",
           Robustness.packetLoss(col("window"), col("win_id"), col("severity"), col("seed")))
@@ -393,13 +399,24 @@ object Pipeline3 {
           Robustness.clockOffset(col("window"), col("win_id"), col("severity"), col("seed")))
         .otherwise(
           Robustness.drift(col("window"), col("win_id"), col("severity"), col("seed"))))
-    model.transform(degraded)
+    val accuracies = if (grid.isEmpty) Nil else model.transform(degraded)
       .groupBy("kind", "severity", "rep")
       .agg(avg((col("y_pred") === col("y")).cast("double")).as("accuracy"))
-      .groupBy("kind", "severity")
-      .agg(avg("accuracy").as("accuracy_mean"),
-        coalesce(stddev_samp(col("accuracy")), lit(0.0)).as("accuracy_std"))
-      .orderBy("kind", "severity")
+      .collect().toSeq
+    val rows = accuracies.groupBy(r => (r.getString(0), r.getDouble(1))).toSeq
+      .sortWith { case (((ka, sa), _), ((kb, sb), _)) =>
+        ka < kb || (ka == kb && compareDoubles(sa, sb) < 0)
+      }
+      .map { case ((kind, sev), reps) =>
+        val (mean, std) =
+          repeatStats(reps.map(r => if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+        Row(kind, sev, mean.getOrElse(null), std)
+      }
+    local(scored.sparkSession, rows, StructType(Seq(
+      StructField("kind", StringType),
+      StructField("severity", DoubleType, nullable = false),
+      StructField("accuracy_mean", DoubleType),
+      StructField("accuracy_std", DoubleType, nullable = false))))
   }
 
   /** 3B: leave-one-attack-out generalization — drop one attack from
@@ -413,33 +430,71 @@ object Pipeline3 {
     * accuracies are aggregated mean ± std (ddof=1, 0.0 for a single
     * repeat — G7 semantics). Deterministic scorers (Logistic) make the
     * repeats identical (std 0); stochastic ones (GBT seed, future
-    * stand-ins) get real error bars. */
+    * stand-ins) get real error bars.
+    *
+    * The fits run one after another; then ONE plan scores the test
+    * windows with every (attack, seed) model (a union of their
+    * transforms) and one grouped aggregation yields both slices'
+    * accuracies of every run — NaN for a slice without windows. Rows come
+    * in `attacks` order (one per distinct attack). */
   def leaveOneAttackOut(windows: DataFrame, scorer: WindowScorer,
       attacks: Seq[String], seeds: Seq[Long] = Seq(42L)): DataFrame = {
     val spark = windows.sparkSession
-    import spark.implicits._
     require(seeds.nonEmpty, "at least one seed")
-    val rows = for (held <- attacks; seed <- seeds) yield {
+    val runs = for (held <- attacks; seed <- seeds) yield {
       val train = windows.where(col("split") === "train" && col("attack") =!= held)
-      val model = scorer.seeded(seed).fit(train)
-      val test = model.transform(windows.where(col("split") === "test"))
-      // both slices in ONE aggregation job (conditional averages) — the
-      // test windows are scored once per (held-out attack, seed), not twice
-      val hit = (col("y_pred") === col("y")).cast("double")
-      val r = test.agg(
-        avg(when(col("attack") === held, hit)).as("held"),
-        avg(when(col("attack") =!= held, hit)).as("rest")).head()
-      (held, seed,
-        if (r.isNullAt(0)) Double.NaN else r.getDouble(0),
-        if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+      held -> scorer.seeded(seed).fit(train)
     }
-    rows.toDF("held_out_attack", "seed", "acc_held", "acc_rest")
-      .groupBy("held_out_attack")
-      .agg(
-        avg("acc_held").as("accuracy_on_held_out"),
-        coalesce(stddev_samp(col("acc_held")), lit(0.0)).as("accuracy_on_held_out_std"),
-        avg("acc_rest").as("accuracy_on_rest"),
-        coalesce(stddev_samp(col("acc_rest")), lit(0.0)).as("accuracy_on_rest_std"),
-        count(lit(1)).as("n_repeats"))
+    val test = windows.where(col("split") === "test")
+    val hit = (col("y_pred") === col("y")).cast("double")
+    val accuracies = if (runs.isEmpty) Map.empty[Int, (Double, Double)] else {
+      def acc(r: Row, i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+      runs.zipWithIndex.map { case ((held, model), k) =>
+        model.transform(test).select(lit(k).as("run"),
+          when(col("attack") === held, hit).as("held"),
+          when(col("attack") =!= held, hit).as("rest"))
+      }.reduce(_ unionByName _)
+        .groupBy("run").agg(avg("held"), avg("rest"))
+        .collect().map(r => r.getInt(0) -> (acc(r, 1), acc(r, 2))).toMap
+    }
+    val byAttack = runs.indices.groupBy(k => runs(k)._1)
+    val rows = attacks.distinct.map { held =>
+      val accs = byAttack(held).map(accuracies.getOrElse(_, (Double.NaN, Double.NaN)))
+      val (heldMean, heldStd) = repeatStats(accs.map(a => Some(a._1)))
+      val (restMean, restStd) = repeatStats(accs.map(a => Some(a._2)))
+      Row(held, heldMean.get, heldStd, restMean.get, restStd, accs.size.toLong)
+    }
+    local(spark, rows, StructType(Seq(
+      StructField("held_out_attack", StringType),
+      StructField("accuracy_on_held_out", DoubleType),
+      StructField("accuracy_on_held_out_std", DoubleType, nullable = false),
+      StructField("accuracy_on_rest", DoubleType),
+      StructField("accuracy_on_rest_std", DoubleType, nullable = false),
+      StructField("n_repeats", LongType, nullable = false))))
   }
+
+  /** G7 over one configuration's repeats, with the semantics of Spark's
+    * `avg` and `coalesce(stddev_samp, 0.0)` (equal up to rounding): nulls
+    * (None) are skipped; the mean of the rest (None without any), their
+    * sample std (ddof 1), 0.0 with fewer than two. A NaN makes the mean
+    * NaN, and the std from two repeats on. (Unlike
+    * [[MetricsOps.aggregateRuns]], which drops NaN runs.) */
+  private[pipelines] def repeatStats(xs: Seq[Option[Double]]): (Option[Double], Double) = {
+    val vs = xs.flatten
+    if (vs.isEmpty) (None, 0.0)
+    else {
+      val mean = vs.sum / vs.size
+      val std = if (vs.size < 2) 0.0
+        else math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / (vs.size - 1))
+      (Some(mean), std)
+    }
+  }
+
+  /** Spark's double order: NaN above every number, −0.0 equal to 0.0. */
+  private[pipelines] def compareDoubles(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** `rows` as a local table (reading it runs no job). */
+  private[pipelines] def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 }

@@ -370,4 +370,16 @@ class MetricsCurvesSpec extends SparkSpec {
     assert(approx(m.falsePositivesPerHour, 0.0))
     assert(m.fprCiCpHigh > 0 && m.fprCiCpHigh < 1)
   }
+
+  test("binary operational on an empty test frame: zero counts, NaN rates") {
+    val valDf = Seq((1, 0.9), (1, 0.8), (0, 0.6), (0, 0.4), (0, 0.2)).toDF("y", "s")
+    val testDf = Seq.empty[(Int, Double)].toDF("y", "s")
+    val m = BinaryOperational.evaluate(valDf, testDf, col("y"), col("s"),
+      fprTarget = 0.0, hopSeconds = 3600.0)
+    assert(m.threshold == 0.8)
+    assert(m.tn == 0 && m.fp == 0 && m.fn == 0 && m.tp == 0)
+    Seq(m.fpr, m.tnr, m.balancedAccuracy, m.fprCiNormalLow, m.fprCiNormalHigh,
+      m.fprCiCpLow, m.fprCiCpHigh, m.falsePositivesPerHour).foreach(v => assert(v.isNaN, m))
+    assert(m.tpr == 0.0 && m.precision == 0.0 && m.totalHoursTest == 0.0)
+  }
 }

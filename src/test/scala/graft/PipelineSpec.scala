@@ -379,6 +379,59 @@ class PipelineSpec extends SparkSpec {
     assert(sto.getAs[Double]("accuracy_on_rest") > 0.5) // 30% flips, mean still informative
   }
 
+  /** Parity oracle for [[Pipeline3.leaveOneAttackOut]]: the reference's
+    * repeat loop (pipeline_tests_power.py:569) — per (held-out attack,
+    * seed) a fit and one aggregation job over its scored test windows,
+    * reduced with Spark's avg/stddev_samp. */
+  private def loaoLoop(windows: DataFrame, scorer: graft.model.WindowScorer,
+      attacks: Seq[String], seeds: Seq[Long]): DataFrame = {
+    val rows = for (held <- attacks; seed <- seeds) yield {
+      val train = windows.where(col("split") === "train" && col("attack") =!= held)
+      val model = scorer.seeded(seed).fit(train)
+      val test = model.transform(windows.where(col("split") === "test"))
+      val hit = (col("y_pred") === col("y")).cast("double")
+      val r = test.agg(
+        avg(when(col("attack") === held, hit)).as("held"),
+        avg(when(col("attack") =!= held, hit)).as("rest")).head()
+      (held, seed,
+        if (r.isNullAt(0)) Double.NaN else r.getDouble(0),
+        if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+    }
+    rows.toDF("held_out_attack", "seed", "acc_held", "acc_rest")
+      .groupBy("held_out_attack")
+      .agg(
+        avg("acc_held").as("accuracy_on_held_out"),
+        coalesce(stddev_samp(col("acc_held")), lit(0.0)).as("accuracy_on_held_out_std"),
+        avg("acc_rest").as("accuracy_on_rest"),
+        coalesce(stddev_samp(col("acc_rest")), lit(0.0)).as("accuracy_on_rest_std"),
+        count(lit(1)).as("n_repeats"))
+  }
+
+  /** Equal within `tol`, or both NaN. */
+  private def same(a: Double, b: Double, tol: Double): Boolean =
+    (a.isNaN && b.isNaN) || approx(a, b, tol)
+
+  test("pipeline3B one scoring plan equals the per-run driver loop (2 seeds, seeded GBT)") {
+    // "port-scan" has no windows: nothing is held out of training, and
+    // its held-out accuracy is NaN (a NaN std over two repeats)
+    val attacks = Seq("syn-flood", "port-scan")
+    val scorer = Scorers.GBT(maxIter = 3, maxDepth = 2)
+    def byAttack(df: DataFrame) = df.collect().map(r => r.getString(0) ->
+      ((1 to 4).map(r.getDouble), r.getLong(5))).toMap
+    val loop = byAttack(loaoLoop(result.windows, scorer, attacks, Seq(1L, 2L)))
+    val out = Pipeline3.leaveOneAttackOut(result.windows, scorer, attacks, Seq(1L, 2L))
+    assert(out.columns.toSeq == Seq("held_out_attack", "accuracy_on_held_out",
+      "accuracy_on_held_out_std", "accuracy_on_rest", "accuracy_on_rest_std", "n_repeats"))
+    assert(out.collect().map(_.getString(0)).toSeq == attacks)
+    val plan = byAttack(out)
+    assert(plan.keySet == loop.keySet)
+    loop.foreach { case (held, (vs, n)) =>
+      assert(plan(held)._2 == n, held)
+      vs.zip(plan(held)._1).foreach { case (e, a) => assert(same(a, e, 1e-12), s"$held: $a vs $e") }
+    }
+    assert(plan("port-scan")._1(0).isNaN && !plan("syn-flood")._1(0).isNaN)
+  }
+
   test("corpus curation pipeline: exact dups, near-dup clusters, contamination, junk, packing") {
     import graft.pipelines.CorpusPipeline
     val prose = "the quick brown fox jumps over the lazy dog near a quiet river bank today"
@@ -477,5 +530,145 @@ class PipelineSpec extends SparkSpec {
     assert(math.abs(byFeature(2)) < 1e-9)
     assert(byFeature(0) > byFeature(2) || byFeature(1) > byFeature(2))
     assert(HostImportance.topK(imp, 2).toSet.subsetOf(Set(0, 1, 2)))
+  }
+
+  /** Importance fixture: the pipeline-1 windows with a constant third
+    * feature, unique long win_ids and non-uniform weights, and a model fit
+    * on its train split. */
+  private lazy val impWindows = result.windows
+    .withColumn("window", transform(col("window"), r => concat(r, array(lit(1.0)))))
+    .withColumn("weight", lit(0.5) + pmod(col("win_id"), lit(3)).cast("double") * 0.75)
+    .withColumn("win_id",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy("split", "win_id"))
+        .cast("long"))
+  private lazy val impModel =
+    Scorers.Logistic(maxIter = 30).fit(impWindows.where(col("split") === "train"))
+
+  /** Parity oracle for [[HostImportance.permutationImportance]]: the
+    * reference's driver loop (pipeline_host_importance.py:154-221) — per
+    * (feature, repeat) one permutation and one loss job, the repeats
+    * reduced with Spark's avg/stddev_samp. */
+  private def importanceLoop(windows: DataFrame, model: graft.model.WindowModel,
+      nFeatures: Int, nRepeats: Int, baseSeed: Long = 42L, eps: Double = 1e-12): DataFrame = {
+    def loss(df: DataFrame): Double =
+      graft.ops.MetricsOps.weightedLogLoss(model.transform(df),
+        element_at(col("proba"), col("y") + 1), col("weight"), eps).head().getDouble(0)
+    val baseline = loss(windows)
+    val rows = for (j <- 0 until nFeatures; r <- 0 until nRepeats) yield {
+      val permuted = graft.ops.PermImportance.permuteFeature(
+        windows, "win_id", "window", j, baseSeed + 1000L * j + r)
+      (j, r, loss(permuted) - baseline)
+    }
+    rows.toDF("feature_idx", "rep", "drop")
+      .groupBy("feature_idx")
+      .agg(avg("drop").as("mean_drop"),
+        coalesce(stddev_samp(col("drop")), lit(0.0)).as("std_drop"))
+      .orderBy(col("mean_drop").desc, col("feature_idx").asc)
+  }
+
+  test("host importance: the one-plan trials equal the per-trial driver loop") {
+    val test = impWindows.where(col("split") === "test").cache()
+    try Seq(1, 2).foreach { nRepeats =>
+      val loop = importanceLoop(test, impModel, nFeatures = 3, nRepeats = nRepeats, baseSeed = 9L)
+      val plan = HostImportance.permutationImportance(test, impModel, nFeatures = 3,
+        nRepeats = nRepeats, baseSeed = 9L)
+      assert(plan.schema == loop.schema)
+      val (l, p) = (loop.collect(), plan.collect())
+      assert(p.map(_.getInt(0)).sorted.toSeq == Seq(0, 1, 2))
+      val byFeature = l.map(r => r.getInt(0) -> r).toMap
+      p.foreach { r =>
+        val e = byFeature(r.getInt(0))
+        assert(approx(r.getDouble(1), e.getDouble(1), 1e-12) &&
+          approx(r.getDouble(2), e.getDouble(2), 1e-12), s"$nRepeats: $r vs $e")
+      }
+      // ordered by mean_drop desc, then feature_idx
+      p.sliding(2).foreach { case Array(a, b) =>
+        assert(a.getDouble(1) > b.getDouble(1) ||
+          (a.getDouble(1) == b.getDouble(1) && a.getInt(0) < b.getInt(0)))
+      }
+    } finally test.unpersist(blocking = true)
+  }
+
+  test("host importance keeps the caller's cache of its input") {
+    val test = impWindows.where(col("split") === "test").cache()
+    try {
+      test.count()
+      HostImportance.permutationImportance(test, impModel, nFeatures = 1, nRepeats = 1)
+      assert(test.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally test.unpersist(blocking = true)
+  }
+
+  test("host importance job budget: 3 features x 2 repeats run at most 20 Spark jobs") {
+    val test = impWindows.where(col("split") === "test").cache()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    try {
+      test.count()
+      impModel // fit outside the count
+      sc.addSparkListener(listener)
+      org.apache.spark.ProfileBus.drain(sc)
+      val j0 = jobs.get
+      HostImportance.permutationImportance(test, impModel, nFeatures = 3, nRepeats = 2).collect()
+      org.apache.spark.ProfileBus.drain(sc)
+      val n = jobs.get - j0
+      info(s"importance jobs $n")
+      assert(n <= 20, s"importance jobs $n")
+    } finally {
+      sc.removeSparkListener(listener)
+      test.unpersist(blocking = true)
+    }
+  }
+
+  /** The two-pass permutation of one trial (cells ranked in (winId, t)
+    * order, values by the seeded uniform, one global-index pass each,
+    * joined on rank) — the reference for the one-pass segmented form. */
+  private def permuteTwoPass(df: DataFrame, featureIdx: Int, seed: Long): DataFrame = {
+    import graft.ops.{Robustness, SlidingWindows}
+    val exploded = df.select(col("win_id"),
+      posexplode(transform(col("window"), r => element_at(r, featureIdx + 1))).as(Seq("t", "v")))
+    val cells = SlidingWindows.withGlobalIndex(exploded, Seq(col("win_id"), col("t")), "cell_rank")
+    val permuted = SlidingWindows.withGlobalIndex(
+        exploded.withColumn("__u", Robustness.seededUniform(seed, col("win_id"), col("t"))),
+        Seq(col("__u"), col("win_id"), col("t")), "cell_rank")
+      .select(col("cell_rank"), col("v").as("v_perm"))
+    val series = cells.drop("v").join(permuted, Seq("cell_rank")).groupBy("win_id")
+      .agg(map_from_entries(collect_list(struct(col("t"), col("v_perm")))).as("perm_map"))
+    df.join(series, Seq("win_id"))
+      .withColumn("window", transform(col("window"), (row, i) =>
+        transform(row, (x, j) =>
+          when(j === lit(featureIdx), element_at(col("perm_map"), i)).otherwise(x))))
+      .drop("perm_map")
+  }
+
+  test("permuteFeatures: every trial equals its one-trial permutation, exactly") {
+    import graft.ops.PermImportance
+    // 12 windows of 5 timesteps x 3 features; window 7 has only 3 timesteps
+    val df = (1 to 12).map { w =>
+      val steps = if (w == 7) 3 else 5
+      (w.toLong, (0 until steps).map(t => Seq(w * 10.0 + t, -w - t * 0.5, (w * t) % 4 * 1.0)),
+        w % 2)
+    }.toDF("win_id", "window", "y")
+    val trials = Seq(0 -> 11L, 2 -> 5L, 0 -> 12L, 1 -> 11L)
+    def byWin(d: DataFrame) =
+      d.collect().map(r => r.getLong(0) -> r.toSeq.tail).sortBy(_._1).toSeq
+    val all = PermImportance.permuteFeatures(df, "win_id", "window", trials)
+    assert(all.columns.toSeq == Seq("win_id", "window", "y", "trial"))
+    trials.zipWithIndex.foreach { case ((f, seed), k) =>
+      val one = PermImportance.permuteFeature(df, "win_id", "window", f, seed)
+      val got = byWin(all.where(col("trial") === k).drop("trial"))
+      assert(got == byWin(one), s"trial $k")
+      assert(got == byWin(permuteTwoPass(df, f, seed)), s"trial $k vs two-pass")
+    }
+    // the permutation moved values of its feature only
+    val orig = byWin(df).toMap
+    byWin(all.where(col("trial") === 1).drop("trial")).foreach { case (w, row) =>
+      def firstTwo(x: Any) =
+        x.asInstanceOf[collection.Seq[collection.Seq[Double]]].map(_.take(2))
+      assert(firstTwo(row.head) == firstTwo(orig(w).head))
+    }
   }
 }
