@@ -237,11 +237,36 @@ object MetricsOps {
 
   /** G7 — mean/std across repeated runs, nan-aware, std with ddof=1 (0.0
     * for a single run). Ref: aggregate_metric_list, func_aux/func_test.py:513-527.
-    * Input: long-format `(keyCols…, metric, value)`. */
+    * Input: long-format `(keyCols…, metric, value)`. The two G7 reducers
+    * differ on NaN: this one drops NaN runs (the reference's nan-aware
+    * list aggregation, for metric tables); [[repeatStats]] keeps them. */
   def aggregateRuns(df: DataFrame, keyCols: Seq[String], value: String): DataFrame =
     df.where(!isnan(col(value)) && col(value).isNotNull)
       .groupBy(keyCols.map(col): _*)
       .agg(
         avg(value).as("mean"),
         coalesce(stddev_samp(col(value)), lit(0.0)).as("std"))
+
+  /** G7 on the driver, over the repeats of one configuration (pipeline 3's
+    * robustness, leave-one-attack-out and permutation importance). The
+    * semantics are those of Spark's `avg` and `coalesce(stddev_samp, 0.0)`,
+    * equal up to rounding: nulls (None) are skipped; the mean of the rest
+    * (None without any), their sample std (ddof 1), 0.0 with fewer than
+    * two. Unlike [[aggregateRuns]], NaN is kept: it makes the mean NaN,
+    * and the std from two repeats on. */
+  private[graft] def repeatStats(xs: Seq[Option[Double]]): (Option[Double], Double) = {
+    val vs = xs.flatten
+    if (vs.isEmpty) (None, 0.0)
+    else {
+      val mean = vs.sum / vs.size
+      val std = if (vs.size < 2) 0.0
+        else math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / (vs.size - 1))
+      (Some(mean), std)
+    }
+  }
+
+  /** Spark's double order, in which the driver sorts [[repeatStats]]
+    * tables: NaN above every number, −0.0 equal to 0.0. */
+  private[graft] def compareDoubles(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
 }

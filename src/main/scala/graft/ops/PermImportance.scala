@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,12 +22,14 @@ import org.apache.spark.storage.StorageLevel
   * of ONE [[SlidingWindows.withGlobalIndex]] pass (range exchange +
   * partition offsets, no single-partition row_number stage): the cells
   * are one more segment whose uniform is the constant 0, so the same
-  * order (u, winId, t) ranks them in (winId, t) order. Cost for any
-  * number of trials: that one range exchange (sized by the number of
-  * segments, so no sort partition holds more than about one trial's
-  * cells per shuffle partition), one shuffle that brings each rank's cell
-  * and values together, one that regroups them by window, and the join
-  * back onto the windows.
+  * order (u, winId, t) ranks them in (winId, t) order. Then one window
+  * over the rank hands each trial's value of rank k the (winId, t) of
+  * the cell of rank k, one regroup by (trial, winId) rebuilds each
+  * copy's series and one join puts them back into the windows. Every
+  * step works on one row per (trial, cell) or per (trial, window), so
+  * the cost grows linearly with the number of trials F·R; the range
+  * exchange is sized by it (no sort partition holds more than about one
+  * trial's cells per shuffle partition).
   */
 object PermImportance {
 
@@ -63,7 +66,7 @@ object PermImportance {
       .select(col(winId), col("t"), col("row"), inline(array(segments.map { case (k, f, s) =>
         struct(lit(k).as("trial"), lit(f).as("feat"), lit(s).as("seed"))
       }: _*)))
-      .select(col("trial"), col(winId), col("t"),
+      .select(col("trial"), col("feat"), col(winId), col("t"),
         when(isCell, lit(0.0))
           .otherwise(Robustness.seededUniformC(col("seed"), col(winId), col("t"))).as("__u"),
         when(!isCell, element_at(col("row"), col("feat") + 1)).as("v"))
@@ -71,25 +74,21 @@ object PermImportance {
       Seq(col("__u"), col(winId), col("t")), "cell_rank",
       numPartitions = segments.size * spark.sessionState.conf.numShufflePartitions,
       partitionCols = Seq("trial"))
-    // rank k: the cell holding it receives every trial's value of rank k
-    // (one value per trial: a fixed-width aggregation, no per-group lists)
-    val moved = ranked.groupBy("cell_rank").agg(
-      max(when(isCell, col(winId))).as(winId),
-      max(when(isCell, col("t"))).as("t"),
-      array(trials.indices.map(k => max(when(col("trial") === k, col("v")))): _*).as("vs"))
-    // per window: t → every trial's permuted value at t
-    val series = moved.groupBy(winId)
-      .agg(map_from_entries(collect_list(struct(col("t"), col("vs")))).as("perm_map"))
-    val copies = array(trials.zipWithIndex.map { case ((f, _), k) =>
-      struct(lit(k).as("trial"), lit(f).as("feat"))
-    }: _*)
+    // rank k: every trial's value of rank k moves to the cell of rank k,
+    // then each (trial, window) gathers its series t → permuted value
+    val cellOf = Window.partitionBy("cell_rank")
+    val series = ranked
+      .select(col("trial"), col("feat"), col("v"),
+        max(when(isCell, col(winId))).over(cellOf).as(winId),
+        max(when(isCell, col("t"))).over(cellOf).as("t"))
+      .where(!isCell)
+      .groupBy("trial", "feat", winId)
+      .agg(map_from_entries(collect_list(struct(col("t"), col("v")))).as("perm_map"))
     dfP.join(series, Seq(winId))
-      .select(col("*"), inline(copies))
       .withColumn(window,
         transform(col(window), (row, i) =>
           transform(row, (x, j) =>
-            when(j === col("feat"), element_at(element_at(col("perm_map"), i), col("trial") + 1))
-              .otherwise(x))))
+            when(j === col("feat"), element_at(col("perm_map"), i)).otherwise(x))))
       .drop("perm_map", "feat")
   }
 }

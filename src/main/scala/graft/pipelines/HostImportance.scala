@@ -45,14 +45,14 @@ object HostImportance {
       def drop(trial: Int) = losses.getOrElse(trial, Double.NaN) - losses.getOrElse(-1, Double.NaN)
       (0 until nFeatures).map { j =>
         val drops = (0 until nRepeats).map(r => Some(drop(j * nRepeats + r)))
-        val (mean, std) = Pipeline3.repeatStats(drops)
+        val (mean, std) = MetricsOps.repeatStats(drops)
         Row(j, mean.get, std)
       }.sortWith { (a, b) =>
-        val c = Pipeline3.compareDoubles(a.getDouble(1), b.getDouble(1))
+        val c = MetricsOps.compareDoubles(a.getDouble(1), b.getDouble(1))
         c > 0 || (c == 0 && a.getInt(0) < b.getInt(0))
       }
     }
-    Pipeline3.local(spark, rows, Schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schema)
   }
 
   /** The weighted log-loss of every trial's permuted copy and (key -1) of

@@ -356,8 +356,8 @@ object Pipeline2 {
 
 /** Pipeline3 — robustness (3A) and generalization (3B). Each call ends in
   * one collected aggregation with a row per (configuration, repeat), and
-  * the driver reduces the repeats (G7, [[repeatStats]]); its result is a
-  * local table (reading it runs no job). */
+  * the driver reduces the repeats (G7, [[MetricsOps.repeatStats]]); its
+  * result is a local table (reading it runs no job). */
 object Pipeline3 {
 
   /** 3A: severity sweep of seeded degradations over the test windows,
@@ -405,14 +405,14 @@ object Pipeline3 {
       .collect().toSeq
     val rows = accuracies.groupBy(r => (r.getString(0), r.getDouble(1))).toSeq
       .sortWith { case (((ka, sa), _), ((kb, sb), _)) =>
-        ka < kb || (ka == kb && compareDoubles(sa, sb) < 0)
+        ka < kb || (ka == kb && MetricsOps.compareDoubles(sa, sb) < 0)
       }
       .map { case ((kind, sev), reps) =>
         val (mean, std) =
-          repeatStats(reps.map(r => if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+          MetricsOps.repeatStats(reps.map(r => if (r.isNullAt(3)) None else Some(r.getDouble(3))))
         Row(kind, sev, mean.getOrElse(null), std)
       }
-    local(scored.sparkSession, rows, StructType(Seq(
+    scored.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       StructField("kind", StringType),
       StructField("severity", DoubleType, nullable = false),
       StructField("accuracy_mean", DoubleType),
@@ -460,11 +460,11 @@ object Pipeline3 {
     val byAttack = runs.indices.groupBy(k => runs(k)._1)
     val rows = attacks.distinct.map { held =>
       val accs = byAttack(held).map(accuracies.getOrElse(_, (Double.NaN, Double.NaN)))
-      val (heldMean, heldStd) = repeatStats(accs.map(a => Some(a._1)))
-      val (restMean, restStd) = repeatStats(accs.map(a => Some(a._2)))
+      val (heldMean, heldStd) = MetricsOps.repeatStats(accs.map(a => Some(a._1)))
+      val (restMean, restStd) = MetricsOps.repeatStats(accs.map(a => Some(a._2)))
       Row(held, heldMean.get, heldStd, restMean.get, restStd, accs.size.toLong)
     }
-    local(spark, rows, StructType(Seq(
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       StructField("held_out_attack", StringType),
       StructField("accuracy_on_held_out", DoubleType),
       StructField("accuracy_on_held_out_std", DoubleType, nullable = false),
@@ -472,29 +472,4 @@ object Pipeline3 {
       StructField("accuracy_on_rest_std", DoubleType, nullable = false),
       StructField("n_repeats", LongType, nullable = false))))
   }
-
-  /** G7 over one configuration's repeats, with the semantics of Spark's
-    * `avg` and `coalesce(stddev_samp, 0.0)` (equal up to rounding): nulls
-    * (None) are skipped; the mean of the rest (None without any), their
-    * sample std (ddof 1), 0.0 with fewer than two. A NaN makes the mean
-    * NaN, and the std from two repeats on. (Unlike
-    * [[MetricsOps.aggregateRuns]], which drops NaN runs.) */
-  private[pipelines] def repeatStats(xs: Seq[Option[Double]]): (Option[Double], Double) = {
-    val vs = xs.flatten
-    if (vs.isEmpty) (None, 0.0)
-    else {
-      val mean = vs.sum / vs.size
-      val std = if (vs.size < 2) 0.0
-        else math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / (vs.size - 1))
-      (Some(mean), std)
-    }
-  }
-
-  /** Spark's double order: NaN above every number, −0.0 equal to 0.0. */
-  private[pipelines] def compareDoubles(a: Double, b: Double): Int =
-    if (a == b) 0 else java.lang.Double.compare(a, b)
-
-  /** `rows` as a local table (reading it runs no job). */
-  private[pipelines] def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 }

@@ -671,4 +671,31 @@ class PipelineSpec extends SparkSpec {
       assert(firstTwo(row.head) == firstTwo(orig(w).head))
     }
   }
+
+  test("permuteFeatures: 120 trials in one pass, each a permutation of its feature") {
+    import graft.ops.PermImportance
+    val df = (1 to 12).map { w =>
+      (w.toLong, (0 until 5).map(t => Seq(w * 10.0 + t, -w - t * 0.5, (w * t) % 4 * 1.0)))
+    }.toDF("win_id", "window")
+    val trials = (0 until 120).map(k => (k % 3, 100L + k))
+    type Win = collection.Seq[collection.Seq[Double]]
+    val orig = df.collect().map(r => r.getLong(0) -> r.getAs[Win](1)).toMap
+    val copies = PermImportance.permuteFeatures(df, "win_id", "window", trials).collect()
+      .groupBy(_.getInt(2))
+    assert(copies.keySet == trials.indices.toSet)
+    trials.zipWithIndex.foreach { case ((f, _), k) =>
+      val got = copies(k).map(r => r.getLong(0) -> r.getAs[Win](1)).toMap
+      assert(got.keySet == orig.keySet, s"trial $k")
+      def column(ws: Iterable[Win], j: Int) = ws.toSeq.flatMap(_.map(_(j))).sorted
+      (0 until 3).foreach { j =>
+        if (j == f) assert(column(got.values, j) == column(orig.values, j), s"trial $k")
+        else got.foreach { case (w, win) => assert(win.map(_(j)) == orig(w).map(_(j))) }
+      }
+    }
+    Seq(0, 61, 119).foreach { k =>
+      val expected = permuteTwoPass(df, trials(k)._1, trials(k)._2).collect()
+        .map(r => r.getLong(0) -> r.getAs[Win](1)).toMap
+      assert(copies(k).map(r => r.getLong(0) -> r.getAs[Win](1)).toMap == expected, s"trial $k")
+    }
+  }
 }
