@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.commons.math3.distribution.BetaDistribution
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** G16 — binary operational evaluation composite.
   *
@@ -13,16 +12,14 @@ import org.apache.spark.sql.functions._
   * func_test.py:358-361), balanced accuracy, F1/F2/F0.5, normal and
   * Clopper–Pearson CIs on FPR, FP-per-hour conversions, plus TTD (G12).
   *
-  * Distributed shape: ONE aggregation over the thresholded test scores
-  * yields the four confusion cells AND the Clopper–Pearson Beta quantiles
-  * (native graft_beta_inv expression, evaluated on executors); the
-  * remaining scalar algebra runs on the driver over 6 fetched values.
+  * Distributed shape: ONE collected aggregation over val ∪ test, grouped
+  * by (split, score) ([[Curves.operationalCells]]), yields the val
+  * threshold and the four test confusion cells; the Clopper–Pearson Beta
+  * quantiles and the rest of the scalar algebra run on the driver.
   */
 object BinaryOperational {
 
-  /** Clopper–Pearson CI on a binomial proportion via Beta quantiles —
-    * driver-side scalar form, kept as the cross-check for the distributed
-    * column form below.
+  /** Clopper–Pearson CI on a binomial proportion via Beta quantiles.
     * Ref: clopper_pearson_ci, func_aux/func_test.py:179-193 (scipy
     * beta.ppf ≡ commons-math3 inverseCumulativeProbability). */
   def clopperPearson(fp: Long, nNeg: Long, alpha: Double = 0.05): (Double, Double) = {
@@ -38,24 +35,6 @@ object BinaryOperational {
     (lower, upper)
   }
 
-  /** Column form of [[clopperPearson]] via the native `graft_beta_inv`
-    * expression — the bounds evaluate on executors, so a per-group CI
-    * (one row per detector/tenant/day) needs no driver loop. Returns
-    * (lower, upper) columns; edge cases mirror the scalar form:
-    * `nNeg = 0 → NaN`, `fp = 0 → lower 0`, `fp = nNeg → upper 1`. */
-  def clopperPearsonCols(fp: Column, nNeg: Column, alpha: Double = 0.05): (Column, Column) = {
-    import graft.functions.VectorFunctions.betaInv
-    val fpD = fp.cast("double")
-    val nD = nNeg.cast("double")
-    val lower = when(nNeg === 0, lit(Double.NaN))
-      .when(fp === 0, lit(0.0))
-      .otherwise(betaInv(lit(alpha / 2.0), fpD, nD - fpD + 1.0))
-    val upper = when(nNeg === 0, lit(Double.NaN))
-      .when(fp === nNeg, lit(1.0))
-      .otherwise(betaInv(lit(1.0 - alpha / 2.0), fpD + 1.0, nD - fpD))
-    (lower, upper)
-  }
-
   final case class OperationalMetrics(
       threshold: Double, tn: Long, fp: Long, fn: Long, tp: Long,
       fpr: Double, tpr: Double, tnr: Double,
@@ -66,33 +45,16 @@ object BinaryOperational {
       falsePositivesPerHour: Double, totalHoursTest: Double)
 
   /** Threshold `score >= thr → 1` and compute the operational document.
-    * `val_` calibrates (G15), `test` is scored. Label columns are 0/1. */
+    * `val_` calibrates (G15), `test` is scored. Label columns are 0/1. A
+    * one-class val split gives NaN rates on its curve (sklearn's answer):
+    * with no negatives no point meets the FPR target and the threshold is
+    * +inf. */
   def evaluate(valDf: DataFrame, testDf: DataFrame, label: Column, score: Column,
       fprTarget: Double, hopSeconds: Double): OperationalMetrics = {
-    val curve = Curves.dropIntermediate(Curves.rocCurve(valDf, label, score))
-    val thrRow = Curves.thresholdAtFpr(curve, fprTarget).head()
-    val thr = thrRow.getDouble(0)
-
-    // One aggregation yields the confusion cells; the Clopper–Pearson Beta
-    // quantiles ride the same plan via the native graft_beta_inv expression
-    // (distributed — nothing numeric happens on the driver but the final
-    // scalar algebra on 6 fetched values).
-    val (cpLo, cpHi) = clopperPearsonCols(col("fp"), col("tn") + col("fp"))
-    // An empty test frame sums to null: its cells count 0, and the rates
-    // and CIs below take their nNeg = 0 branches (NaN).
-    def cell(y: Int, p: Int, name: String) =
-      coalesce(sum(when(col("y") === y && col("p") === p, 1).otherwise(0)), lit(0L)).as(name)
-    val cells = testDf
-      .select(label.cast("int").as("y"), (score >= thr).cast("int").as("p"))
-      .agg(cell(0, 0, "tn"), cell(0, 1, "fp"), cell(1, 0, "fn"), cell(1, 1, "tp"))
-      .select(col("tn"), col("fp"), col("fn"), col("tp"),
-        cpLo.as("fpr_ci_cp_low"), cpHi.as("fpr_ci_cp_high"))
-      .head()
-    val (tn, fp, fn, tp) =
-      (cells.getLong(0), cells.getLong(1), cells.getLong(2), cells.getLong(3))
-    val (ciLowCp, ciHighCp) = (cells.getDouble(4), cells.getDouble(5))
-
+    val (thr, tn, fp, fn, tp) =
+      Curves.operationalCells(valDf, testDf, label, score, fprTarget)
     val nNeg = tn + fp
+    val (ciLowCp, ciHighCp) = clopperPearson(fp, nNeg)
     val eps = 1e-12 // smoothing constants exactly as func_test.py:358-361
     val fpr = if (nNeg > 0) fp.toDouble / nNeg else Double.NaN
     val tprv = tp / (tp + fn + eps)

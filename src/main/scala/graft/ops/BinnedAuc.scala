@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * `Aggregator[(label, score), histogram, auc]` binning scores into a
   * fixed grid, then trapezoid over the binned curve.
   *
-  * vs [[Curves.rocAuc]] (exact, groupBy-distinct-scores + window cumsum):
+  * vs [[Curves.rocAuc]] (exact, groupBy-distinct-scores + driver cumsum):
   * this needs NO shuffle of distinct scores — the buffer is 2·bins longs,
   * merged associatively, so the whole computation is one partial-agg
   * pass. Error is bounded by bin resolution (ties within a bin average

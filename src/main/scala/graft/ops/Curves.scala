@@ -1,20 +1,30 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** G14/G15 — ROC / PR curves, AUC, average precision, threshold selection
   * (SURVEY §2.5), replacing the reference's sklearn calls
   * (`roc_curve` / `precision_recall_curve` / `roc_auc_score` /
   * `average_precision_score`, func_aux/func_test.py:257,306,339,430-448).
   *
-  * Distributed shape: first `groupBy(score)` — the only pass over the full
-  * data, shrinking N rows to D = #distinct scores — then cumulative sums
-  * over the D-row curve with a global-order window. D is bounded by score
-  * resolution (model probabilities), so the single-partition cumsum runs on
-  * a small aggregate, not the data; at 100 TB the heavy lifting is the
-  * map-side-combined groupBy.
+  * One curve algebra behind every op:
+  *  - **The collapse** ([[collapse]]) is the only pass over the data: one
+  *    map-side-combined aggregation over (keys…, threshold = score as
+  *    double) that counts pos = Σy and neg = Σ(1−y), y the label as int.
+  *    Its D points are collected to the driver
+  *    ([[LocalRegime.collectBounded]]). D is bounded by the score
+  *    resolution, not the data; past `MaxPoints` points the op fails by
+  *    name, and the caller rounds its score first.
+  *  - **The driver pass** walks each key's points in descending threshold
+  *    order, NaN first and nulls last (Spark's `desc` order): cumulative
+  *    tps/fps, fpr = fps / max fps and tpr = tps / max tps, the trapezoid
+  *    AUC and AP summed left to right from 0.0, sklearn's
+  *    `drop_intermediate` thinning and the threshold at a target FPR.
+  *    With no negatives fpr is NaN, with no positives tpr is NaN (sklearn
+  *    `roc_curve`'s answer). Class means run in class order. Every face
+  *    returns a local table: reading it runs no job.
   *
   * Curve convention: one point per distinct threshold, thresholds strictly
   * descending, cumulative tps/fps INCLUSIVE of the threshold (score >= thr
@@ -26,73 +36,174 @@ import org.apache.spark.sql.functions._
   */
 object Curves {
 
+  /** The most (keys…, threshold) points an op collects to the driver.
+    * g14's scored events (scores rounded to 4 dp) have under 10^4. */
+  private val MaxPoints = 1 << 20
+
+  /** One collapsed point: the rows of `key` whose score is `threshold`
+    * (None: null), pos = Σy and neg = Σ(1−y) (None where every label is
+    * null, as Spark's sum of nulls). */
+  private final case class Point(key: Seq[Any], threshold: Option[Double],
+      pos: Option[Long], neg: Option[Long])
+
+  /** The collapse's distributed plan: columns (key0…, threshold, pos, neg). */
+  private[graft] def collapse(df: DataFrame, keys: Seq[Column], label: Column,
+      score: Column): DataFrame = {
+    val names = keys.indices.map(i => s"key$i")
+    df.select(keys.zip(names).map { case (k, n) => k.as(n) } ++
+        Seq(score.cast("double").as("threshold"), label.cast("int").as("y")): _*)
+      .groupBy((names :+ "threshold").map(col): _*)
+      .agg(sum(col("y")).as("pos"), sum(lit(1) - col("y")).as("neg"))
+  }
+
+  /** [[collapse]] collected to the driver; fails by name past `MaxPoints`. */
+  private def points(op: String, df: DataFrame, keys: Seq[Column], label: Column,
+      score: Column): Seq[Point] = {
+    val rows = LocalRegime.collectBounded(collapse(df, keys, label, score), MaxPoints)
+      .getOrElse(throw new IllegalArgumentException(s"Curves.$op: more than " +
+        s"$MaxPoints distinct (key, score) points to collect to the driver; " +
+        "round the score first (e.g. round(score, 4))"))
+    val k = keys.length
+    def opt[T](r: Row, i: Int, get: Int => T) = if (r.isNullAt(i)) None else Some(get(i))
+    rows.toSeq.map(r => Point(Seq.tabulate(k)(r.get), opt(r, k, r.getDouble),
+      opt(r, k + 1, r.getLong), opt(r, k + 2, r.getLong)))
+  }
+
+  /** Spark's `desc` order on a nullable double: NaN first, null last. */
+  private def descNullsLast(a: Option[Double], b: Option[Double]): Int = (a, b) match {
+    case (Some(x), Some(y)) => MetricsOps.compareDoubles(y, x)
+    case (None, None) => 0
+    case (None, _) => 1
+    case _ => -1
+  }
+
+  /** a / b, NaN for a zero b — the ratio of an empty class. */
+  private def ratio(a: Double, b: Double): Double = if (b == 0.0) Double.NaN else a / b
+
+  /** Spark's `sum`: the non-null terms added left to right from 0, None
+    * without any. */
+  private def total[T](terms: Iterable[Option[T]])(implicit num: Numeric[T]): Option[T] =
+    terms.foldLeft(Option.empty[T])((acc, t) => t.map(num.plus(acc.getOrElse(num.zero), _)).orElse(acc))
+
+  /** Spark's `avg`: the non-null terms summed in order over their count. */
+  private def mean(terms: Seq[Option[Double]]): Option[Double] = {
+    val xs = terms.flatten
+    if (xs.isEmpty) None else Some(xs.foldLeft(0.0)(_ + _) / xs.length)
+  }
+
+  /** One key's curve: its points in descending threshold order. */
+  private final case class Curve(threshold: IndexedSeq[Option[Double]],
+      tps: IndexedSeq[Option[Long]], fps: IndexedSeq[Option[Long]],
+      fpr: IndexedSeq[Option[Double]], tpr: IndexedSeq[Option[Double]]) {
+
+    /** The previous point's value, 0.0 at the start or where it is null. */
+    private def prev(xs: IndexedSeq[Option[Double]], i: Int) =
+      if (i == 0) 0.0 else xs(i - 1).getOrElse(0.0)
+
+    /** Trapezoid ROC-AUC: Σ (fpr_i − fpr_{i−1}) · (tpr_i + tpr_{i−1}) / 2. */
+    def auc: Option[Double] = total(fpr.indices.map(i =>
+      for (f <- fpr(i); t <- tpr(i)) yield (f - prev(fpr, i)) * (t + prev(tpr, i)) / 2))
+
+    /** sklearn AP: Σ (R_i − R_{i−1}) · P_i, P = tps / (tps + fps). */
+    def ap: Option[Double] = total(tpr.indices.map(i =>
+      for (r <- tpr(i); t <- tps(i); f <- fps(i))
+        yield (r - prev(tpr, i)) * ratio(t.toDouble, (t + f).toDouble)))
+  }
+
+  private def curveOf(pts: Seq[Point]): Curve = {
+    val sorted = pts.sortWith((a, b) => descNullsLast(a.threshold, b.threshold) < 0)
+    def running(xs: Seq[Option[Long]]) = xs.scanLeft(Option.empty[Long])(
+      (acc, x) => x.map(acc.getOrElse(0L) + _).orElse(acc)).tail.toIndexedSeq
+    def rate(xs: IndexedSeq[Option[Long]]) = {
+      val top = xs.flatten.maxOption
+      xs.map(x => for (v <- x; t <- top) yield ratio(v.toDouble, t.toDouble))
+    }
+    val tps = running(sorted.map(_.pos))
+    val fps = running(sorted.map(_.neg))
+    Curve(sorted.map(_.threshold).toIndexedSeq, tps, fps, rate(fps), rate(tps))
+  }
+
+  /** sklearn `drop_intermediate`: the indices of the points kept — the
+    * endpoints and every point where fps or tps bends (its step in differs
+    * from its step out). A null fps step keeps its point. */
+  private def thinned(fps: IndexedSeq[Option[Long]], tps: IndexedSeq[Option[Long]]): IndexedSeq[Int] = {
+    def step(xs: IndexedSeq[Option[Long]], i: Int, j: Int) =
+      if (i < 0 || j >= xs.length) None else for (a <- xs(i); b <- xs(j)) yield b - a
+    def bends(xs: IndexedSeq[Option[Long]], i: Int) = (step(xs, i - 1, i), step(xs, i, i + 1)) match {
+      case (Some(in), Some(out)) => in != out
+      case _ => false
+    }
+    fps.indices.filter(i => step(fps, i - 1, i).isEmpty || step(fps, i, i + 1).isEmpty ||
+      bends(fps, i) || bends(tps, i))
+  }
+
+  /** select_threshold_at_fpr: among the points with fpr <= target, the one
+    * with the largest fpr, ties to the lowest threshold (null lowest). None
+    * when no point qualifies. */
+  private def atFpr(threshold: IndexedSeq[Option[Double]], fpr: IndexedSeq[Option[Double]],
+      target: Double): Option[Int] = {
+    val candidates = fpr.indices.filter(i => fpr(i).exists(MetricsOps.compareDoubles(_, target) <= 0))
+    candidates.sortWith { (i, j) =>
+      val byFpr = MetricsOps.compareDoubles(fpr(j).get, fpr(i).get)
+      if (byFpr != 0) byFpr < 0 else descNullsLast(threshold(j), threshold(i)) < 0
+    }.headOption
+  }
+
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private def doubles(names: String*): StructType =
+    StructType(names.map(StructField(_, DoubleType)))
+
+  private def v(o: Option[Any]): Any = o.getOrElse(null)
+
+  /** The rows of a curve table in descending threshold order. */
+  private def curveRows(op: String, curve: DataFrame): IndexedSeq[Row] = {
+    val rows = LocalRegime.collectBounded(curve, MaxPoints).getOrElse(throw new
+      IllegalArgumentException(s"Curves.$op: a curve of more than $MaxPoints points"))
+    val at = curve.schema.fieldIndex("threshold")
+    def thr(r: Row) = if (r.isNullAt(at)) None else Some(r.getAs[Number](at).doubleValue)
+    rows.toIndexedSeq.sortWith((a, b) => descNullsLast(thr(a), thr(b)) < 0)
+  }
+
+  private def column[T](rows: IndexedSeq[Row], name: String)(get: Number => T): IndexedSeq[Option[T]] =
+    rows.map(r => Option(r.getAs[Number](name)).map(get))
+
   /** ROC curve table: (threshold, fps, tps, fpr, tpr), thresholds descending.
     * `label` must be 0/1 ints; `score` the attack-class score. */
   def rocCurve(df: DataFrame, label: Column, score: Column): DataFrame = {
-    val byScore = df
-      .select(score.cast("double").as("threshold"), label.cast("int").as("y"))
-      .groupBy("threshold")
-      .agg(sum(col("y")).as("pos"), sum(lit(1) - col("y")).as("neg"))
-    val w = Window.orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val totals = Window.partitionBy()
-    byScore
-      .withColumn("tps", sum("pos").over(w))
-      .withColumn("fps", sum("neg").over(w))
-      .withColumn("fpr", col("fps") / max("fps").over(totals))
-      .withColumn("tpr", col("tps") / max("tps").over(totals))
-      .select("threshold", "fps", "tps", "fpr", "tpr")
+    val c = curveOf(points("rocCurve", df, Nil, label, score))
+    local(df.sparkSession, c.threshold.indices.map(i =>
+      Row(v(c.threshold(i)), v(c.fps(i)), v(c.tps(i)), v(c.fpr(i)), v(c.tpr(i)))),
+      StructType(Seq(StructField("threshold", DoubleType), StructField("fps", LongType),
+        StructField("tps", LongType), StructField("fpr", DoubleType),
+        StructField("tpr", DoubleType))))
   }
 
   /** ROC-AUC by trapezoid over the full (unthinned) curve — equals
     * sklearn `roc_auc_score` exactly (ties handled by the per-threshold
     * grouping). Returns a 1-row DataFrame (roc_auc). */
-  def rocAuc(df: DataFrame, label: Column, score: Column): DataFrame = {
-    val curve = rocCurve(df, label, score)
-    val w = Window.orderBy(col("threshold").desc)
-    curve
-      .withColumn("fpr_prev", coalesce(lag("fpr", 1).over(w), lit(0.0)))
-      .withColumn("tpr_prev", coalesce(lag("tpr", 1).over(w), lit(0.0)))
-      .agg(sum((col("fpr") - col("fpr_prev")) * (col("tpr") + col("tpr_prev")) / 2)
-        .as("roc_auc"))
-  }
-
-  /** PR curve table: (threshold, precision, recall), thresholds descending
-    * (recall increasing). sklearn's final (P=1, R=0) anchor point is implied
-    * by the AP sum below and omitted from the table. */
-  def prCurve(df: DataFrame, label: Column, score: Column): DataFrame = {
-    val roc = rocCurve(df, label, score)
-    roc.select(
-      col("threshold"),
-      (col("tps") / (col("tps") + col("fps"))).as("precision"),
-      col("tpr").as("recall"))
-  }
+  def rocAuc(df: DataFrame, label: Column, score: Column): DataFrame =
+    local(df.sparkSession, Seq(Row(v(curveOf(points("rocAuc", df, Nil, label, score)).auc))),
+      doubles("roc_auc"))
 
   /** Average precision — sklearn `average_precision_score`:
     * AP = Σ_i (R_i − R_{i−1}) · P_i over thresholds descending (R_0 = 0). */
-  def averagePrecision(df: DataFrame, label: Column, score: Column): DataFrame = {
-    val pr = prCurve(df, label, score)
-    val w = Window.orderBy(col("threshold").desc)
-    pr.withColumn("recall_prev", coalesce(lag("recall", 1).over(w), lit(0.0)))
-      .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("average_precision"))
-  }
+  def averagePrecision(df: DataFrame, label: Column, score: Column): DataFrame =
+    local(df.sparkSession,
+      Seq(Row(v(curveOf(points("averagePrecision", df, Nil, label, score)).ap))),
+      doubles("average_precision"))
 
   /** sklearn `roc_curve(drop_intermediate=True)` point thinning: keep a
     * curve point iff it is an endpoint or either cumulative series bends
     * there (second difference of fps or tps nonzero) — collinear interior
-    * points add nothing to the polyline. One window pass over the D-row
-    * curve (D = #distinct scores), no pass over the data.
+    * points add nothing to the polyline. The curve's own columns, its
+    * points in descending threshold order.
     * Ref consumer: select_threshold_at_fpr, func_aux/func_test.py:257. */
   def dropIntermediate(curve: DataFrame): DataFrame = {
-    val w = Window.orderBy(col("threshold").desc)
-    curve
-      .withColumn("__dfp", col("fps") - lag("fps", 1).over(w))
-      .withColumn("__dfn", lead("fps", 1).over(w) - col("fps"))
-      .withColumn("__dtp", col("tps") - lag("tps", 1).over(w))
-      .withColumn("__dtn", lead("tps", 1).over(w) - col("tps"))
-      .where(col("__dfp").isNull || col("__dfn").isNull ||
-        col("__dfp") =!= col("__dfn") || col("__dtp") =!= col("__dtn"))
-      .drop("__dfp", "__dfn", "__dtp", "__dtn")
+    val rows = curveRows("dropIntermediate", curve)
+    val kept = thinned(column(rows, "fps")(_.longValue), column(rows, "tps")(_.longValue))
+    local(curve.sparkSession, kept.map(rows), curve.schema)
   }
 
   /** G15 — threshold at target FPR. Ref: select_threshold_at_fpr,
@@ -103,210 +214,92 @@ object Curves {
     * [[rocCurve]] omits the anchor from the table, so when no REAL point
     * satisfies the target we return the anchor itself — threshold=+inf,
     * i.e. "predict nothing", which honors the FPR budget exactly as the
-    * reference would. Pass the curve through [[dropIntermediate]] first for
-    * sklearn parity (the reference selects on roc_curve's thinned points).
+    * reference would. A NaN fpr (no negatives) never satisfies the target.
+    * Pass the curve through [[dropIntermediate]] first for sklearn parity
+    * (the reference selects on roc_curve's thinned points).
     * Returns 1 row (threshold, fpr, tpr). */
   def thresholdAtFpr(curve: DataFrame, fprTarget: Double): DataFrame = {
-    // "last index with fpr <= target" on a curve ordered by descending
-    // threshold == max fpr among candidates, ties broken by the latest
-    // (lowest-threshold) point, matching np.where(...)[−1]. Real points
-    // always beat the virtual anchor (they have lower thresholds).
-    val candidates = curve.where(col("fpr") <= fprTarget)
-      .orderBy(col("fpr").desc, col("threshold").asc).limit(1)
-      .select(col("threshold"), col("fpr"), col("tpr"))
-    // driver-side collect is bounded by the limit(1) above — at most ONE
-    // row crosses, regardless of curve size (same loud-guard convention
-    // as the PQ maxQueries / all-pairs maxDomain caps)
-    val picked = candidates.collect()
-    val rows =
-      if (picked.nonEmpty) picked
-      else Array(org.apache.spark.sql.Row(Double.PositiveInfinity, 0.0, 0.0))
-    curve.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), candidates.schema)
+    val rows = curveRows("thresholdAtFpr", curve)
+    val picked = atFpr(column(rows, "threshold")(_.doubleValue),
+      column(rows, "fpr")(_.doubleValue), fprTarget)
+    val out = curve.select("threshold", "fpr", "tpr").schema
+    local(curve.sparkSession, Seq(picked.fold(Row(Double.PositiveInfinity, 0.0, 0.0))(i =>
+      Row.fromSeq(out.fieldNames.toSeq.map(rows(i).getAs[Any](_))))), out)
   }
 
-  /** Macro one-vs-rest ROC-AUC over a probability array column —
-    * `roc_auc_score(y_onehot, proba, average="macro")`
-    * (func_aux/func_test.py:92-97): mean over classes of the binary AUC of
-    * class-k indicator vs proba[k]. ONE pass over the data via the shared
-    * [[ovrCurve]] (posexplode → per-class cumulative curve), trapezoid per
-    * class, then the unweighted class mean — k never multiplies the data
-    * scans. `nClasses` kept for signature stability (the explode derives
-    * classes from the array itself). */
-  def rocAucMacro(df: DataFrame, yTrue: Column, proba: Column, nClasses: Int): DataFrame = {
-    val w = Window.partitionBy("cls").orderBy(col("threshold").desc)
-    val tot = Window.partitionBy("cls")
-    ovrCurve(df, yTrue, proba)
-      .withColumn("fpr", col("fps") / max("fps").over(tot))
-      .withColumn("fpr_prev", coalesce(lag("fpr", 1).over(w), lit(0.0)))
-      .withColumn("tpr_prev", coalesce(lag("recall", 1).over(w), lit(0.0)))
-      .groupBy("cls")
-      .agg(sum((col("fpr") - col("fpr_prev")) * (col("recall") + col("tpr_prev")) / 2)
-        .as("auc"))
-      .agg(avg("auc").as("roc_auc_macro"))
+  /** G15 and the test confusion of G16 (BinaryOperational) from ONE
+    * collected aggregation: the points of `valDf` and `testDf`, keyed by
+    * split. The val points give the threshold at `fprTarget` on the
+    * thinned val curve; the test points with score >= it are predicted
+    * positive. Labels are 0/1; rows with a null label or score count in no
+    * cell. Returns (threshold, tn, fp, fn, tp). */
+  private[ops] def operationalCells(valDf: DataFrame, testDf: DataFrame, label: Column,
+      score: Column, fprTarget: Double): (Double, Long, Long, Long, Long) = {
+    def tagged(df: DataFrame, isVal: Boolean) =
+      df.select(lit(isVal).as("is_val"), label.as("y"), score.as("s"))
+    val (valPts, testPts) = points("operationalCells",
+      tagged(valDf, isVal = true).union(tagged(testDf, isVal = false)),
+      Seq(col("is_val")), col("y"), col("s")).partition(_.key.head == true)
+    val c = curveOf(valPts)
+    val kept = thinned(c.fps, c.tps)
+    val thresholds = kept.map(c.threshold)
+    val thr = atFpr(thresholds, kept.map(c.fpr), fprTarget)
+      .fold(Double.PositiveInfinity)(i => thresholds(i).getOrElse(
+        throw new IllegalArgumentException("operationalCells: the val split's " +
+          s"null-score point is its threshold at fpr <= $fprTarget; drop null scores first")))
+    def cell(predicted: Boolean, count: Point => Option[Long]) = total(testPts
+      .filter(_.threshold.exists(s => (MetricsOps.compareDoubles(s, thr) >= 0) == predicted))
+      .map(count)).getOrElse(0L)
+    (thr, cell(false, _.neg), cell(true, _.neg), cell(false, _.pos), cell(true, _.pos))
   }
 
-  /** One-vs-rest per-class cumulative curve over a proba array in ONE pass
-    * over the data: posexplode the k probabilities to (class, score,
-    * indicator) pairs, groupBy (class, threshold), then cumulative windows
-    * PARTITIONED BY class — the window input is the D·k curve table, never
-    * the data, and the per-class partitions parallelize. */
-  private def ovrCurve(df: DataFrame, yTrue: Column, proba: Column): DataFrame = {
-    val pairs = df.select(yTrue.as("yt"), posexplode(proba))
-      .select(col("pos").as("cls"), col("col").cast("double").as("threshold"),
-        (col("yt") === col("pos")).cast("int").as("y"))
-    val byScore = pairs.groupBy("cls", "threshold")
-      .agg(sum(col("y")).as("pos_n"), sum(lit(1) - col("y")).as("neg_n"))
-    val w = Window.partitionBy("cls").orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = Window.partitionBy("cls")
-    byScore
-      .withColumn("tps", sum("pos_n").over(w))
-      .withColumn("fps", sum("neg_n").over(w))
-      .withColumn("recall", col("tps") / max("tps").over(tot))
+  /** pr_auc_micro, pr_auc_macro and roc_auc_macro of every `group` value
+    * from ONE collapse of the exploded (group, class, score) pairs: the
+    * micro curve sums the classes' points per threshold, the macro fields
+    * are class means in class order. A null group has no row. */
+  private def multiclassAuc(op: String, df: DataFrame, group: Column, yTrue: Column,
+      proba: Column): Seq[Row] = {
+    val pairs = df.select(group.as("grp"), yTrue.as("yt"), posexplode(proba))
+    val pts = points(op, pairs, Seq(col("grp"), col("pos")), col("yt") === col("pos"), col("col"))
+    MetricsOps.groupOn(pts)(_.key.head).collect { case (g, gp) if g != null =>
+      val micro = MetricsOps.groupOn(gp)(_.threshold.map(Double.box).orNull).map { case (_, ps) =>
+        Point(Nil, ps.head.threshold, total(ps.map(_.pos)), total(ps.map(_.neg)))
+      }
+      val classes = MetricsOps.groupOn(gp)(_.key(1)).sortBy(_._1.asInstanceOf[Int]).map(c => curveOf(c._2))
+      Row(g, v(curveOf(micro).ap), v(mean(classes.map(_.ap))), v(mean(classes.map(_.auc))))
+    }
   }
 
-  /** `average_precision_score(y_onehot, proba, average="macro")`
-    * (func_aux/func_test.py:84-88): per-class AP over the one-vs-rest
-    * curves, then the unweighted class mean. Returns 1 row (pr_auc_macro). */
-  def prAucMacro(df: DataFrame, yTrue: Column, proba: Column): DataFrame = {
-    val w = Window.partitionBy("cls").orderBy(col("threshold").desc)
-    ovrCurve(df, yTrue, proba)
-      .withColumn("precision", col("tps") / (col("tps") + col("fps")))
-      .withColumn("recall_prev", coalesce(lag("recall", 1).over(w), lit(0.0)))
-      .groupBy("cls")
-      .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("ap"))
-      .agg(avg("ap").as("pr_auc_macro"))
-  }
+  private val MulticlassAucFields = Seq("pr_auc_micro", "pr_auc_macro", "roc_auc_macro")
 
-  /** `average_precision_score(y_onehot, proba, average="micro")`
-    * (func_aux/func_test.py:80-83): ALL (row, class) pairs ranked as one
-    * binary problem. Returns 1 row (pr_auc_micro). */
-  def prAucMicro(df: DataFrame, yTrue: Column, proba: Column): DataFrame = {
-    val pairs = df.select(yTrue.as("yt"), posexplode(proba))
-      .select(col("col").cast("double").as("score"),
-        (col("yt") === col("pos")).cast("int").as("y"))
-    averagePrecision(pairs, col("y"), col("score"))
-      .select(col("average_precision").as("pr_auc_micro"))
-  }
-
-  /** All three probability-ranked G13 fields from ONE corpus pass (r12):
-    * the separate [[prAucMicro]] + [[prAucMacro]] + [[rocAucMacro]]
-    * crossJoin paid three posexplode scans over the data for curves that
-    * all derive from the same (class, threshold, pos, neg) cell table.
-    * Here that table is built once (one map-side-combined groupBy over
-    * the exploded pairs) and lazily checkpointed — bounded by
-    * k·|distinct scores|, never the data — and the macro windows and the
-    * micro re-collapse (Σ over classes per threshold, an exact integer
-    * regroup of the same cells) both read it. Per-field arithmetic is
-    * expression-identical to the singleton ops. Returns one row
-    * (pr_auc_micro, pr_auc_macro, roc_auc_macro). */
+  /** The three probability-ranked G13 fields of
+    * func_aux/func_test.py:80-97 over a probability array column:
+    * `average_precision_score` micro (all (row, class) pairs ranked as one
+    * binary problem) and macro, and the one-vs-rest `roc_auc_score` macro
+    * — the constant-group case of [[multiclassAucPerGroup]]. Returns one
+    * row (pr_auc_micro, pr_auc_macro, roc_auc_macro), nulls on an empty
+    * input. */
   def multiclassAucSuite(df: DataFrame, yTrue: Column, proba: Column): DataFrame = {
-    val pairs = df.select(yTrue.as("yt"), posexplode(proba))
-      .select(col("pos").as("cls"), col("col").cast("double").as("threshold"),
-        (col("yt") === col("pos")).cast("int").as("y"))
-    val cells = pairs.groupBy("cls", "threshold")
-      .agg(sum(col("y")).as("pos_n"), sum(lit(1) - col("y")).as("neg_n"))
-      .localCheckpoint(false) // macro + micro both read it; built once
-
-    val w = Window.partitionBy("cls").orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = Window.partitionBy("cls")
-    val lagW = Window.partitionBy("cls").orderBy(col("threshold").desc)
-    val macroDf = cells
-      .withColumn("tps", sum("pos_n").over(w))
-      .withColumn("fps", sum("neg_n").over(w))
-      .withColumn("recall", col("tps") / max("tps").over(tot))
-      .withColumn("fpr", col("fps") / max("fps").over(tot))
-      .withColumn("precision", col("tps") / (col("tps") + col("fps")))
-      .withColumn("recall_prev", coalesce(lag("recall", 1).over(lagW), lit(0.0)))
-      .withColumn("fpr_prev", coalesce(lag("fpr", 1).over(lagW), lit(0.0)))
-      .groupBy("cls")
-      .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("ap"),
-        sum((col("fpr") - col("fpr_prev")) * (col("recall") + col("recall_prev")) / 2).as("auc"))
-      .agg(avg("ap").as("pr_auc_macro"), avg("auc").as("roc_auc_macro"))
-
-    // micro: regroup the SAME cells by threshold (exact integer sums ==
-    // grouping the raw pairs by score), then rocCurve/averagePrecision's
-    // window arithmetic verbatim
-    val mw = Window.orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val mtot = Window.partitionBy()
-    val mlag = Window.orderBy(col("threshold").desc)
-    val micro = cells.groupBy("threshold")
-      .agg(sum("pos_n").as("pos"), sum("neg_n").as("neg"))
-      .withColumn("tps", sum("pos").over(mw))
-      .withColumn("fps", sum("neg").over(mw))
-      .withColumn("recall", col("tps") / max("tps").over(mtot))
-      .withColumn("precision", col("tps") / (col("tps") + col("fps")))
-      .withColumn("recall_prev", coalesce(lag("recall", 1).over(mlag), lit(0.0)))
-      .agg(sum((col("recall") - col("recall_prev")) * col("precision"))
-        .as("pr_auc_micro"))
-
-    micro.crossJoin(macroDf)
+    val row = multiclassAuc("multiclassAucSuite", df, lit(0), yTrue, proba).headOption
+      .fold(Row(null, null, null))(r => Row(r.toSeq.tail: _*))
+    local(df.sparkSession, Seq(row), doubles(MulticlassAucFields: _*))
   }
 
   /** The probability-ranked G13 fields PER GROUP (F10 slices call the full
     * metric dict per state, pipeline_trainingmodels_power.py:235-311):
     * one row per `groupCol` value with `pr_auc_micro` / `pr_auc_macro` /
-    * `roc_auc_macro`. Same shape as the global forms with the group key
-    * prepended to every aggregation and window partition — thousands of
-    * slices cost the same two passes over the exploded pairs, never a
-    * driver loop. */
+    * `roc_auc_macro` — thousands of slices cost the same one collapse,
+    * never a driver loop over the data. */
   def multiclassAucPerGroup(df: DataFrame, groupCol: String,
-      yTrue: Column, proba: Column): DataFrame = {
-    val pairs = df.select(col(groupCol).as("grp"), yTrue.as("yt"), posexplode(proba))
-      .select(col("grp"), col("pos").as("cls"),
-        col("col").cast("double").as("threshold"),
-        (col("yt") === col("pos")).cast("int").as("y"))
-    // ONE corpus-sized collapse feeds both legs (r12; micro and macro
-    // each re-exploded the corpus before): the per-(grp, cls, threshold)
-    // cells are checkpointed, and the micro leg's per-(grp, threshold)
-    // totals are an exact integer regroup of them
-    val cells = pairs.groupBy("grp", "cls", "threshold")
-      .agg(sum(col("y")).as("pos_n"), sum(lit(1) - col("y")).as("neg_n"))
-      .localCheckpoint(false)
+      yTrue: Column, proba: Column): DataFrame =
+    local(df.sparkSession, multiclassAuc("multiclassAucPerGroup", df, col(groupCol), yTrue, proba),
+      StructType(StructField("grp", df.select(col(groupCol)).schema.head.dataType) +:
+        doubles(MulticlassAucFields: _*).fields))
 
-    // micro: all of a group's (row, class) pairs as one binary problem
-    val mw = Window.partitionBy("grp").orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val mtot = Window.partitionBy("grp")
-    val mlag = Window.partitionBy("grp").orderBy(col("threshold").desc)
-    val micro = cells.groupBy("grp", "threshold")
-      .agg(sum("pos_n").as("pos_n"), sum("neg_n").as("neg_n"))
-      .withColumn("tps", sum("pos_n").over(mw))
-      .withColumn("fps", sum("neg_n").over(mw))
-      .withColumn("recall", col("tps") / max("tps").over(mtot))
-      .withColumn("precision", col("tps") / (col("tps") + col("fps")))
-      .withColumn("recall_prev", coalesce(lag("recall", 1).over(mlag), lit(0.0)))
-      .groupBy("grp")
-      .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("pr_auc_micro"))
-
-    // macro: per-(group, class) curves, AP + trapezoid AUC, class means
-    val cw = Window.partitionBy("grp", "cls").orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val ctot = Window.partitionBy("grp", "cls")
-    val clag = Window.partitionBy("grp", "cls").orderBy(col("threshold").desc)
-    val macroDf = cells
-      .withColumn("tps", sum("pos_n").over(cw))
-      .withColumn("fps", sum("neg_n").over(cw))
-      .withColumn("recall", col("tps") / max("tps").over(ctot))
-      .withColumn("fpr", col("fps") / max("fps").over(ctot))
-      .withColumn("precision", col("tps") / (col("tps") + col("fps")))
-      .withColumn("recall_prev", coalesce(lag("recall", 1).over(clag), lit(0.0)))
-      .withColumn("fpr_prev", coalesce(lag("fpr", 1).over(clag), lit(0.0)))
-      .groupBy("grp", "cls")
-      .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("ap"),
-        sum((col("fpr") - col("fpr_prev")) * (col("recall") + col("recall_prev")) / 2).as("auc"))
-      .groupBy("grp")
-      .agg(avg("ap").as("pr_auc_macro"), avg("auc").as("roc_auc_macro"))
-
-    // both legs share the cells lineage: re-alias the macro key so the
-    // join condition is explicit
-    val macroR = macroDf.select(col("grp").as("__gmk"),
-      col("pr_auc_macro"), col("roc_auc_macro"))
-    micro.join(macroR, col("grp") === col("__gmk")).drop("__gmk")
-  }
+  /** Spark's `greatest` / `least` of two nullable doubles: nulls skipped,
+    * NaN above every number. */
+  private def extreme(a: Option[Double], b: Option[Double], sign: Int): Option[Double] =
+    (a ++ b).reduceOption((x, y) => if (sign * MetricsOps.compareDoubles(x, y) >= 0) x else y)
 
   /** DeLong variance + confidence interval for the ROC AUC (DeLong,
     * DeLong & Clarke-Pearson 1988 — the standard nonparametric AUC CI;
@@ -318,50 +311,40 @@ object Curves {
     *   Var = S10/m + S01/n   (S = ddof-1 sample variances),
     *   CI  = AUC ± z·√Var.
     *
-    * Scale shape — the g14 curve discipline: rows collapse to the
-    * DISTINCT-score table first (one map-side-combined groupBy; equal
-    * scores share their V values exactly, so grouping is lossless);
-    * the cumulative below/above counts are windows over that SMALL
-    * table, and the weighted moments fold in ONE aggregation. Returns
-    * one row (auc, var_auc, ci_lo, ci_hi), CI clipped to [0, 1]. */
+    * Scale shape — the curve collapse: rows collapse to the distinct-score
+    * table first (equal scores share their V values exactly, so grouping
+    * is lossless); the below/above counts and the weighted moments run on
+    * the driver over it. Rows with a null label or score are dropped, and
+    * a label other than 1 is a negative. A ratio over an empty class is
+    * NaN. Returns one row (auc, var_auc, ci_lo, ci_hi), CI clipped to
+    * [0, 1]. */
   def aucDeLong(df: DataFrame, y: Column, score: Column,
       z: Double = 1.959963984540054): DataFrame = {
-    // null scores/labels out BEFORE the collapse: Spark windows order
-    // nulls first, so a null-score group would silently count as the
-    // lowest score (and DuckDB orders nulls last — the spearman
-    // divergence shape)
-    val byScore = df
-      .where(y.isNotNull && score.isNotNull)
-      .select(y.cast("int").as("y"), score.cast("double").as("s"))
-      .groupBy("s")
-      .agg(sum(when(col("y") === 1, 1L).otherwise(0L)).as("np"),
-        sum(when(col("y") =!= 1, 1L).otherwise(0L)).as("nn"))
-    val asc = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    val desc = Window.orderBy(col("s").desc).rowsBetween(Window.unboundedPreceding, -1)
-    val tot = Window.partitionBy()
-    val v = byScore
-      .withColumn("negBelow", coalesce(sum("nn").over(asc), lit(0L)))
-      .withColumn("posAbove", coalesce(sum("np").over(desc), lit(0L)))
-      .withColumn("m", sum("np").over(tot))
-      .withColumn("n", sum("nn").over(tot))
-      .withColumn("v10",
-        (col("negBelow") + col("nn") * 0.5) / col("n"))
-      .withColumn("v01",
-        (col("posAbove") + col("np") * 0.5) / col("m"))
-    v.agg(
-        (sum(col("np") * col("v10")) / first("m")).as("auc"),
-        first("m").as("m"), first("n").as("n"),
-        sum(col("np") * col("v10") * col("v10")).as("ss10"),
-        sum(col("nn") * col("v01") * col("v01")).as("ss01"))
-      .select(col("auc"),
-        // ddof-1 sample variances of V10 (weighted by np) and V01:
-        // S = (Σ w v² − m·auc²) / (m − 1); Var(AUC) = S10/m + S01/n
-        (((col("ss10") - col("m") * col("auc") * col("auc")) / (col("m") - 1)) / col("m") +
-          ((col("ss01") - col("n") * col("auc") * col("auc")) / (col("n") - 1)) / col("n"))
-          .as("var_auc"))
-      .select(col("auc"), col("var_auc"),
-        greatest(lit(0.0), col("auc") - lit(z) * sqrt(col("var_auc"))).as("ci_lo"),
-        least(lit(1.0), col("auc") + lit(z) * sqrt(col("var_auc"))).as("ci_hi"))
+    val pts = points("aucDeLong", df.where(y.isNotNull && score.isNotNull), Nil,
+      when(y.cast("int") === 1, 1).otherwise(0), score)
+    val c = curveOf(pts)
+    val np = c.tps.indices.map(i => c.tps(i).get - (if (i == 0) 0L else c.tps(i - 1).get))
+    val nn = c.fps.indices.map(i => c.fps(i).get - (if (i == 0) 0L else c.fps(i - 1).get))
+    val (m, n) = (np.sum, nn.sum)
+    // descending order: the positives above a point precede it, the
+    // negatives below it follow it
+    val v10 = np.indices.map(i => ratio(n - c.fps(i).get + nn(i) * 0.5, n.toDouble))
+    val v01 = np.indices.map(i => ratio(c.tps(i).get - np(i) + np(i) * 0.5, m.toDouble))
+    val stats = if (np.isEmpty) None else {
+      val auc = ratio(np.indices.foldLeft(0.0)((s, i) => s + np(i) * v10(i)), m.toDouble)
+      val ss10 = np.indices.foldLeft(0.0)((s, i) => s + np(i) * v10(i) * v10(i))
+      val ss01 = np.indices.foldLeft(0.0)((s, i) => s + nn(i) * v01(i) * v01(i))
+      // ddof-1 sample variances of V10 (weighted by np) and V01:
+      // S = (Σ w v² − m·auc²) / (m − 1); Var(AUC) = S10/m + S01/n
+      Some((auc, ratio(ratio(ss10 - m * auc * auc, (m - 1).toDouble), m.toDouble) +
+        ratio(ratio(ss01 - n * auc * auc, (n - 1).toDouble), n.toDouble)))
+    }
+    val half = stats.map { case (_, vr) => z * math.sqrt(vr) }
+    val auc = stats.map(_._1)
+    local(df.sparkSession, Seq(Row(v(auc), v(stats.map(_._2)),
+      v(extreme(Some(0.0), for (a <- auc; h <- half) yield a - h, 1)),
+      v(extreme(Some(1.0), for (a <- auc; h <- half) yield a + h, -1)))),
+      doubles("auc", "var_auc", "ci_lo", "ci_hi"))
   }
 
   /** Lift / cumulative-gains table (the direct-marketing model readout —
@@ -369,35 +352,27 @@ object Curves {
     * ties share a bucket and no raw-row window is needed), per bucket
     * the response rate, lift vs the base rate, and walking from the
     * BEST bucket down the cumulative population and response shares
-    * (the gains curve). One bin aggregation; windows over the bounded
-    * bucket table. */
+    * (the gains curve). One bin collapse (0/1 labels), then the driver
+    * walks the at most `buckets` points. */
   def liftCurve(df: DataFrame, label: Column, score: Column,
       buckets: Int = 10): DataFrame = {
     require(buckets >= 2 && buckets <= 1000, "buckets in [2, 1000]")
-    import graft.ops.Stats
     val bounds = Stats.fitQuantileBins(df, score, buckets)
-    val y = label.cast("double")
     // null scores out: applyQuantileBins would fold them into bucket 0
     // (every `null > bound` is 0) while the fit ignored them
-    val byB = df.where(y.isNotNull && score.isNotNull)
-      .groupBy(Stats.applyQuantileBins(score, bounds).as("bucket"))
-      .agg(count(lit(1)).as("n"), sum(y).as("__resp"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val wDesc = Window.orderBy(col("bucket").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byB
-      .withColumn("__N", sum("n").over(wAll))
-      .withColumn("__R", sum("__resp").over(wAll))
-      .withColumn("rate", col("__resp") / col("n"))
-      .withColumn("lift", when(col("__R") > 0,
-        col("rate") / (col("__R") / col("__N"))))
-      .withColumn("cum_pop_share", sum("n").over(wDesc) / col("__N"))
-      .withColumn("cum_gain", when(col("__R") > 0,
-        sum("__resp").over(wDesc) / col("__R")))
-      .select(col("bucket"), col("n"),
-        col("__resp").cast("long").as("n_resp"), col("rate"), col("lift"),
-        col("cum_pop_share"), col("cum_gain"))
-      .orderBy(col("bucket").desc)
+    val c = curveOf(points("liftCurve", df.where(label.isNotNull && score.isNotNull), Nil,
+      label, Stats.applyQuantileBins(score, bounds)))
+    val (cumR, cumN) = (c.tps.map(_.get), c.tps.indices.map(i => c.tps(i).get + c.fps(i).get))
+    val (r, n) = (cumR.lastOption.getOrElse(0L).toDouble, cumN.lastOption.getOrElse(0L))
+    def prev(xs: IndexedSeq[Long], i: Int) = if (i == 0) 0L else xs(i - 1)
+    val rows = c.threshold.indices.map { i =>
+      val (ni, resp) = (cumN(i) - prev(cumN, i), cumR(i) - prev(cumR, i))
+      val rate = resp.toDouble / ni
+      Row(c.threshold(i).get.toInt, ni, resp, rate, if (r > 0) rate / (r / n) else null,
+        cumN(i).toDouble / n, if (r > 0) cumR(i) / r else null)
+    }
+    local(df.sparkSession, rows, StructType(Seq(StructField("bucket", IntegerType),
+      StructField("n", LongType), StructField("n_resp", LongType)) ++
+      doubles("rate", "lift", "cum_pop_share", "cum_gain").fields))
   }
 }

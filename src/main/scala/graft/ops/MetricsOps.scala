@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Classification-metric operators (SURVEY §2.5 G9, G11, G13, G5, G7).
@@ -79,22 +80,30 @@ object MetricsOps {
     if (labels.isEmpty) return Nil
     val k = labels.length
     val index = labels.zipWithIndex.toMap
-    // keyed as Spark groups: by equals (one NaN group), binary by content
-    val groups = new java.util.LinkedHashMap[Any, (Any, Array[Array[Long]])]
-    cells.foreach { c =>
-      val key = c.group match {
-        case bytes: Array[Byte] => java.nio.ByteBuffer.wrap(bytes)
-        case g => g
-      }
-      val m = groups.computeIfAbsent(key, _ => (c.group, Array.fill(k, k)(0L)))._2
-      if (c.group != null) for {
+    groupOn(cells)(_.group).map { case (g, cs) =>
+      val m = Array.fill(k, k)(0L)
+      if (g != null) for {
+        c <- cs
         i <- c.yTrue.flatMap(index.get)
         j <- c.yPred.flatMap(index.get)
       } m(i)(j) += c.n
-    }
-    groups.values.asScala.toSeq.map { case (g, m) =>
       GroupMetrics(g, m.map(_.toIndexedSeq).toIndexedSeq, suiteOf(m))
     }
+  }
+
+  /** `items` grouped by `key` in first-seen order, keys compared as Spark
+    * groups them: by equals (one NaN group), binary by content. */
+  private[graft] def groupOn[T](items: Seq[T])(key: T => Any): Seq[(Any, Seq[T])] = {
+    val groups = new java.util.LinkedHashMap[Any, (Any, ArrayBuffer[T])]
+    items.foreach { x =>
+      val k = key(x)
+      val norm = k match {
+        case bytes: Array[Byte] => java.nio.ByteBuffer.wrap(bytes)
+        case o => o
+      }
+      groups.computeIfAbsent(norm, _ => (k, ArrayBuffer.empty[T]))._2 += x
+    }
+    groups.values.asScala.toSeq.map { case (k, xs) => (k, xs.toSeq) }
   }
 
   private def ratio(num: Double, den: Double): Double = if (den == 0.0) 0.0 else num / den

@@ -21,14 +21,16 @@ import graft.ops._
   * collected aggregation that fits the label encoder and the scaler →
   * windows (one ordered exchange, cached by one counting job); then per
   * scorer: fit → ONE timed scoring pass whose collected (state slice, y,
-  * y_pred) count table yields every test metric on the driver → the val
-  * threshold and the test operational cells. metrics.json, the encoder
-  * and the scaler are written from the driver; of the artifacts only the
-  * MLlib model save runs Spark jobs. Driver loops remain only where each
-  * iteration fits a model (grid cells, the (held-out attack, seed)
-  * retrains); sweeps that only re-score — 3A's severity grid, 3B's
-  * evaluation of every retrained model, the permutation-importance trials
-  * — run as one plan each, and the driver reduces their repeats.
+  * y_pred) count table yields every test metric on the driver → for
+  * binary cells, one collected (split, score) aggregation of the val and
+  * test windows yields the val threshold and the test operational cells.
+  * metrics.json, the encoder and the scaler are written from the driver;
+  * of the artifacts only the MLlib model save runs Spark jobs. Driver
+  * loops remain only where each iteration fits a model (grid cells, the
+  * (held-out attack, seed) retrains); sweeps that only re-score — 3A's
+  * severity grid, 3B's evaluation of every retrained model, the
+  * permutation-importance trials — run as one plan each, and the driver
+  * reduces their repeats.
   */
 object Pipeline1 {
 

@@ -179,7 +179,14 @@ class ExtensionsSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.BinaryOperational
     val cases = Seq((0L, 50L), (5L, 100L), (50L, 50L), (3L, 7L), (0L, 0L))
-    val (lo, hi) = BinaryOperational.clopperPearsonCols(col("fp"), col("n"))
+    // the Clopper–Pearson bounds as columns over the native graft_beta_inv,
+    // with the scalar form's edge cases
+    import graft.functions.VectorFunctions.betaInv
+    val (fpD, nD) = (col("fp").cast("double"), col("n").cast("double"))
+    val lo = when(col("n") === 0, lit(Double.NaN)).when(col("fp") === 0, lit(0.0))
+      .otherwise(betaInv(lit(0.025), fpD, nD - fpD + 1.0))
+    val hi = when(col("n") === 0, lit(Double.NaN)).when(col("fp") === col("n"), lit(1.0))
+      .otherwise(betaInv(lit(0.975), fpD + 1.0, nD - fpD))
     val got = cases.toDF("fp", "n").select(col("fp"), col("n"), lo.as("lo"), hi.as("hi"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     got.foreach { case (fp, n, gLo, gHi) =>

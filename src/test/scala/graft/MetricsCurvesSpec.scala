@@ -97,6 +97,322 @@ class MetricsCurvesSpec extends SparkSpec {
     assert(Curves.thresholdAtFpr(full, 0.5).head().getDouble(0) == 0.7)
   }
 
+  /** The window forms `Curves` had before its driver algebra — the parity
+    * reference for the collapse-and-collect faces. Each is the old
+    * operator verbatim: a groupBy(score) collapse, then cumulative windows
+    * ordered by descending threshold (single-partition without a key). */
+  private object WindowCurves {
+    import org.apache.spark.sql.expressions.Window
+
+    def rocCurve(df: DataFrame, label: Column, score: Column): DataFrame = {
+      val byScore = df
+        .select(score.cast("double").as("threshold"), label.cast("int").as("y"))
+        .groupBy("threshold")
+        .agg(sum(col("y")).as("pos"), sum(lit(1) - col("y")).as("neg"))
+      val w = Window.orderBy(col("threshold").desc)
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val totals = Window.partitionBy()
+      byScore
+        .withColumn("tps", sum("pos").over(w))
+        .withColumn("fps", sum("neg").over(w))
+        .withColumn("fpr", col("fps") / max("fps").over(totals))
+        .withColumn("tpr", col("tps") / max("tps").over(totals))
+        .select("threshold", "fps", "tps", "fpr", "tpr")
+    }
+
+    def rocAuc(df: DataFrame, label: Column, score: Column): DataFrame = {
+      val w = Window.orderBy(col("threshold").desc)
+      rocCurve(df, label, score)
+        .withColumn("fpr_prev", coalesce(lag("fpr", 1).over(w), lit(0.0)))
+        .withColumn("tpr_prev", coalesce(lag("tpr", 1).over(w), lit(0.0)))
+        .agg(sum((col("fpr") - col("fpr_prev")) * (col("tpr") + col("tpr_prev")) / 2)
+          .as("roc_auc"))
+    }
+
+    def averagePrecision(df: DataFrame, label: Column, score: Column): DataFrame = {
+      val w = Window.orderBy(col("threshold").desc)
+      rocCurve(df, label, score)
+        .select(col("threshold"),
+          (col("tps") / (col("tps") + col("fps"))).as("precision"), col("tpr").as("recall"))
+        .withColumn("recall_prev", coalesce(lag("recall", 1).over(w), lit(0.0)))
+        .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("average_precision"))
+    }
+
+    def dropIntermediate(curve: DataFrame): DataFrame = {
+      val w = Window.orderBy(col("threshold").desc)
+      curve
+        .withColumn("__dfp", col("fps") - lag("fps", 1).over(w))
+        .withColumn("__dfn", lead("fps", 1).over(w) - col("fps"))
+        .withColumn("__dtp", col("tps") - lag("tps", 1).over(w))
+        .withColumn("__dtn", lead("tps", 1).over(w) - col("tps"))
+        .where(col("__dfp").isNull || col("__dfn").isNull ||
+          col("__dfp") =!= col("__dfn") || col("__dtp") =!= col("__dtn"))
+        .drop("__dfp", "__dfn", "__dtp", "__dtn")
+    }
+
+    def thresholdAtFpr(curve: DataFrame, fprTarget: Double): DataFrame = {
+      val candidates = curve.where(col("fpr") <= fprTarget)
+        .orderBy(col("fpr").desc, col("threshold").asc).limit(1)
+        .select(col("threshold"), col("fpr"), col("tpr"))
+      val picked = candidates.collect()
+      val rows =
+        if (picked.nonEmpty) picked
+        else Array(org.apache.spark.sql.Row(Double.PositiveInfinity, 0.0, 0.0))
+      curve.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), candidates.schema)
+    }
+
+    def multiclassAucPerGroup(df: DataFrame, groupCol: String,
+        yTrue: Column, proba: Column): DataFrame = {
+      val pairs = df.select(col(groupCol).as("grp"), yTrue.as("yt"), posexplode(proba))
+        .select(col("grp"), col("pos").as("cls"),
+          col("col").cast("double").as("threshold"),
+          (col("yt") === col("pos")).cast("int").as("y"))
+      val cells = pairs.groupBy("grp", "cls", "threshold")
+        .agg(sum(col("y")).as("pos_n"), sum(lit(1) - col("y")).as("neg_n"))
+        .localCheckpoint(false)
+      val mw = Window.partitionBy("grp").orderBy(col("threshold").desc)
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val mtot = Window.partitionBy("grp")
+      val mlag = Window.partitionBy("grp").orderBy(col("threshold").desc)
+      val micro = cells.groupBy("grp", "threshold")
+        .agg(sum("pos_n").as("pos_n"), sum("neg_n").as("neg_n"))
+        .withColumn("tps", sum("pos_n").over(mw))
+        .withColumn("fps", sum("neg_n").over(mw))
+        .withColumn("recall", col("tps") / max("tps").over(mtot))
+        .withColumn("precision", col("tps") / (col("tps") + col("fps")))
+        .withColumn("recall_prev", coalesce(lag("recall", 1).over(mlag), lit(0.0)))
+        .groupBy("grp")
+        .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("pr_auc_micro"))
+      val cw = Window.partitionBy("grp", "cls").orderBy(col("threshold").desc)
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val ctot = Window.partitionBy("grp", "cls")
+      val clag = Window.partitionBy("grp", "cls").orderBy(col("threshold").desc)
+      val macroDf = cells
+        .withColumn("tps", sum("pos_n").over(cw))
+        .withColumn("fps", sum("neg_n").over(cw))
+        .withColumn("recall", col("tps") / max("tps").over(ctot))
+        .withColumn("fpr", col("fps") / max("fps").over(ctot))
+        .withColumn("precision", col("tps") / (col("tps") + col("fps")))
+        .withColumn("recall_prev", coalesce(lag("recall", 1).over(clag), lit(0.0)))
+        .withColumn("fpr_prev", coalesce(lag("fpr", 1).over(clag), lit(0.0)))
+        .groupBy("grp", "cls")
+        .agg(sum((col("recall") - col("recall_prev")) * col("precision")).as("ap"),
+          sum((col("fpr") - col("fpr_prev")) * (col("recall") + col("recall_prev")) / 2).as("auc"))
+        .groupBy("grp")
+        .agg(avg("ap").as("pr_auc_macro"), avg("auc").as("roc_auc_macro"))
+      val macroR = macroDf.select(col("grp").as("__gmk"),
+        col("pr_auc_macro"), col("roc_auc_macro"))
+      micro.join(macroR, col("grp") === col("__gmk")).drop("__gmk")
+    }
+
+    def aucDeLong(df: DataFrame, y: Column, score: Column,
+        z: Double = 1.959963984540054): DataFrame = {
+      val byScore = df
+        .where(y.isNotNull && score.isNotNull)
+        .select(y.cast("int").as("y"), score.cast("double").as("s"))
+        .groupBy("s")
+        .agg(sum(when(col("y") === 1, 1L).otherwise(0L)).as("np"),
+          sum(when(col("y") =!= 1, 1L).otherwise(0L)).as("nn"))
+      val asc = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
+      val desc = Window.orderBy(col("s").desc).rowsBetween(Window.unboundedPreceding, -1)
+      val tot = Window.partitionBy()
+      val v = byScore
+        .withColumn("negBelow", coalesce(sum("nn").over(asc), lit(0L)))
+        .withColumn("posAbove", coalesce(sum("np").over(desc), lit(0L)))
+        .withColumn("m", sum("np").over(tot))
+        .withColumn("n", sum("nn").over(tot))
+        .withColumn("v10", (col("negBelow") + col("nn") * 0.5) / col("n"))
+        .withColumn("v01", (col("posAbove") + col("np") * 0.5) / col("m"))
+      v.agg(
+          (sum(col("np") * col("v10")) / first("m")).as("auc"),
+          first("m").as("m"), first("n").as("n"),
+          sum(col("np") * col("v10") * col("v10")).as("ss10"),
+          sum(col("nn") * col("v01") * col("v01")).as("ss01"))
+        .select(col("auc"),
+          (((col("ss10") - col("m") * col("auc") * col("auc")) / (col("m") - 1)) / col("m") +
+            ((col("ss01") - col("n") * col("auc") * col("auc")) / (col("n") - 1)) / col("n"))
+            .as("var_auc"))
+        .select(col("auc"), col("var_auc"),
+          greatest(lit(0.0), col("auc") - lit(z) * sqrt(col("var_auc"))).as("ci_lo"),
+          least(lit(1.0), col("auc") + lit(z) * sqrt(col("var_auc"))).as("ci_hi"))
+    }
+  }
+
+  /** Seeded binary inputs for the parity oracle: scores on a coarse grid
+    * (ties across classes), plus one null-score and one null-label row
+    * when `nulls`, or no rows at all when `n` is 0. */
+  private def binaryInput(seed: Long, n: Int, nulls: Boolean): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val rows = Seq.fill(n)((Option(rnd.nextInt(2)), Option(rnd.nextInt(25) / 25.0))) ++
+      (if (nulls) Seq((Some(1), None), (None, Some(0.5)), (None, Some(0.987))) else Nil)
+    rows.toDF("y", "s").repartition(3)
+  }
+
+  /** Equal as Spark values: doubles bit for bit (NaN equal to NaN). */
+  private def sameRows(got: Seq[org.apache.spark.sql.Row], want: Seq[org.apache.spark.sql.Row],
+      clue: String): Unit = {
+    assert(got.length == want.length, s"$clue: ${got.length} vs ${want.length} rows")
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.length == w.length, clue)
+      for (i <- 0 until g.length) (g.get(i), w.get(i)) match {
+        case (a: Double, b: Double) =>
+          assert(java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b),
+            s"$clue field $i: $a vs $b")
+        case (a, b) => assert(a == b, s"$clue field $i: $a vs $b")
+      }
+    }
+  }
+
+  private def byThreshold(df: DataFrame) =
+    df.orderBy(col("threshold").desc_nulls_last).collect().toSeq
+
+  test("curve algebra == the window forms: rocCurve, dropIntermediate, thresholdAtFpr, rocAuc, averagePrecision, aucDeLong") {
+    val inputs = Seq(("ties", binaryInput(1L, 300, nulls = false)),
+      ("ties+nulls", binaryInput(2L, 300, nulls = true)),
+      ("small", binaryInput(3L, 7, nulls = true)),
+      ("empty", binaryInput(4L, 0, nulls = false)))
+    for ((name, df) <- inputs) {
+      val (y, s) = (col("y"), col("s"))
+      val curve = Curves.rocCurve(df, y, s)
+      val refCurve = WindowCurves.rocCurve(df, y, s)
+      sameRows(byThreshold(curve), byThreshold(refCurve), s"$name rocCurve")
+      val thin = Curves.dropIntermediate(curve)
+      sameRows(byThreshold(thin), byThreshold(WindowCurves.dropIntermediate(refCurve)),
+        s"$name dropIntermediate")
+      for (c <- Seq(curve, thin); t <- Seq(0.0, 0.1, 0.3, 0.5, 1.0))
+        sameRows(Curves.thresholdAtFpr(c, t).collect().toSeq,
+          WindowCurves.thresholdAtFpr(c, t).collect().toSeq, s"$name thresholdAtFpr($t)")
+      sameRows(Curves.rocAuc(df, y, s).collect().toSeq,
+        WindowCurves.rocAuc(df, y, s).collect().toSeq, s"$name rocAuc")
+      sameRows(Curves.averagePrecision(df, y, s).collect().toSeq,
+        WindowCurves.averagePrecision(df, y, s).collect().toSeq, s"$name averagePrecision")
+      sameRows(Curves.aucDeLong(df, y, s).collect().toSeq,
+        WindowCurves.aucDeLong(df, y, s).collect().toSeq, s"$name aucDeLong")
+    }
+  }
+
+  test("curve algebra == the window form: multiclassAucPerGroup over 1 and 3 groups, 2 and 5 classes") {
+    for (k <- Seq(2, 5); nGroups <- Seq(1, 3)) {
+      val rnd = new scala.util.Random(100L * k + nGroups)
+      // probabilities on a coarse grid (ties), every class present in
+      // every group, one null label and one null probability
+      val rows = (0 until 60 * k).map { i =>
+        (s"g${i % nGroups}", Option(i % k),
+          Seq.fill(k)(Option(rnd.nextInt(12) / 12.0)))
+      } ++ Seq(("g0", None, Seq.fill(k)(Option(0.5))),
+        ("g0", Some(0), None +: Seq.fill(k - 1)(Option(0.25))))
+      val df = rows.toDF("grp", "yt", "p").repartition(3)
+      val clue = s"k=$k groups=$nGroups"
+      val got = Curves.multiclassAucPerGroup(df, "grp", col("yt"), col("p"))
+        .orderBy("grp").collect().toSeq
+      val want = WindowCurves.multiclassAucPerGroup(df, "grp", col("yt"), col("p"))
+        .orderBy("grp").collect().toSeq
+      assert(got.map(_.get(0)) == want.map(_.get(0)) && got.length == nGroups, clue)
+      if (nGroups == 1)
+        assert(Curves.multiclassAucSuite(df, col("yt"), col("p")).collect().toSeq ==
+          got.map(r => org.apache.spark.sql.Row(r.toSeq.tail: _*)), clue)
+      // micro: one curve per group, summed in the same order — bit-equal.
+      // macro: Spark's avg adds the class terms in shuffle order and the
+      // algebra in class order, which agree bit for bit on two terms only
+      sameRows(got.map(r => org.apache.spark.sql.Row(r.get(1))),
+        want.map(r => org.apache.spark.sql.Row(r.get(1))), s"$clue pr_auc_micro")
+      for ((g, w) <- got.zip(want); i <- Seq(2, 3))
+        if (k == 2) sameRows(Seq(org.apache.spark.sql.Row(g.get(i))),
+          Seq(org.apache.spark.sql.Row(w.get(i))), s"$clue field $i")
+        else assert(approx(g.getDouble(i), w.getDouble(i), 1e-12), s"$clue field $i: $g vs $w")
+    }
+    val empty = Seq.empty[(String, Int, Seq[Double])].toDF("grp", "yt", "p")
+    assert(Curves.multiclassAucPerGroup(empty, "grp", col("yt"), col("p")).count() == 0)
+    // the suite is the constant-group case: one row, nulls on no input
+    assert(Curves.multiclassAucSuite(empty, col("yt"), col("p")).collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(null, null, null)))
+  }
+
+  test("multiclassAucSuite: micro/macro AP and macro ROC-AUC equal their pairwise definitions") {
+    val k = 3
+    val df = spark.range(300).select(
+      (col("id") % k).cast("int").as("y"),
+      array((0 until k).map(j =>
+        (col("id") * (2 * j + 3) % 97) / 97.0 +
+          when(col("id") % k === j, 0.6).otherwise(0.0)): _*).as("p"))
+    val rows = df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Double](1)))
+    // AP as the mean over positives of the precision at their score;
+    // ROC-AUC as the pair count P(s_pos > s_neg) + ½ P(tie)
+    def ap(pairs: Seq[(Boolean, Double)]): Double = {
+      val pos = pairs.filter(_._1)
+      pos.map { case (_, s) =>
+        pairs.count(p => p._1 && p._2 >= s).toDouble / pairs.count(_._2 >= s)
+      }.sum / pos.size
+    }
+    def auc(pairs: Seq[(Boolean, Double)]): Double = {
+      val (pos, neg) = pairs.partition(_._1)
+      pos.map { case (_, sp) =>
+        neg.map { case (_, sn) => if (sp > sn) 1.0 else if (sp == sn) 0.5 else 0.0 }.sum
+      }.sum / (pos.size.toDouble * neg.size)
+    }
+    val perClass = (0 until k).map(c => rows.map { case (y, p) => (y == c, p(c)) })
+    val got = Curves.multiclassAucSuite(df, col("y"), col("p")).head()
+    assert(approx(got.getAs[Double]("pr_auc_micro"), ap(perClass.flatten), 1e-12), got)
+    assert(approx(got.getAs[Double]("pr_auc_macro"), perClass.map(ap).sum / k, 1e-12), got)
+    assert(approx(got.getAs[Double]("roc_auc_macro"), perClass.map(auc).sum / k, 1e-12), got)
+  }
+
+  test("binary operational: a val split with no attack windows calibrates on fpr alone") {
+    // val tpr is NaN (no positives, sklearn's answer); the thinned val
+    // curve keeps .9 (fpr 1/3) and .3 (fpr 1), so fpr <= .34 picks .9
+    val valDf = Seq((0, 0.9), (0, 0.5), (0, 0.3)).toDF("y", "s")
+    val testDf = Seq((1, 0.95), (1, 0.5), (0, 0.7), (0, 0.3)).toDF("y", "s")
+    val m = BinaryOperational.evaluate(valDf, testDf, col("y"), col("s"),
+      fprTarget = 0.34, hopSeconds = 1.0)
+    assert(m.threshold == 0.9, m)
+    assert(m.tp == 1 && m.fn == 1 && m.fp == 0 && m.tn == 2, m)
+    val curve = Curves.rocCurve(valDf, col("y"), col("s")).collect()
+    assert(curve.forall(_.getAs[Double]("tpr").isNaN), curve.toSeq)
+  }
+
+  test("binary operational: a val split with no benign windows takes the +inf anchor") {
+    // val fpr is NaN (no negatives), which meets no FPR target: the
+    // threshold is the +inf anchor, where sklearn's argmin fallback lands
+    val valDf = Seq((1, 0.9), (1, 0.5)).toDF("y", "s")
+    val testDf = Seq((1, 0.95), (1, 0.5), (0, 0.7), (0, 0.3)).toDF("y", "s")
+    val m = BinaryOperational.evaluate(valDf, testDf, col("y"), col("s"),
+      fprTarget = 0.1, hopSeconds = 1.0)
+    assert(m.threshold.isPosInfinity, m)
+    assert(m.tp == 0 && m.fn == 2 && m.fp == 0 && m.tn == 2, m)
+    assert(m.fpr == 0.0 && m.fprCiCpLow == 0.0, m)
+  }
+
+  test("binary operational job budget: one collected aggregation, at most 2 Spark jobs") {
+    val valDf = Seq((1, 0.9), (1, 0.8), (0, 0.6), (0, 0.4), (0, 0.2)).toDF("y", "s")
+    val testDf = Seq((1, 0.95), (1, 0.5), (0, 0.7), (0, 0.3)).toDF("y", "s")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      org.apache.spark.ProfileBus.drain(sc)
+      val j0 = jobs.get
+      val m = BinaryOperational.evaluate(valDf, testDf, col("y"), col("s"),
+        fprTarget = 0.0, hopSeconds = 3600.0)
+      org.apache.spark.ProfileBus.drain(sc)
+      val n = jobs.get - j0
+      info(s"evaluate jobs $n")
+      assert(m.threshold == 0.8)
+      assert(n <= 2, s"evaluate jobs $n")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("curve collapse: more points than the driver limit fails by name") {
+    // 2^20 + 1 distinct scores: one past the point limit
+    val df = spark.range(0, (1L << 20) + 1).select(lit(1).as("y"), col("id").cast("double").as("s"))
+    val e = intercept[IllegalArgumentException](Curves.rocAuc(df, col("y"), col("s")))
+    assert(e.getMessage.contains("Curves.rocAuc: more than 1048576 distinct (key, score) points"),
+      e.getMessage)
+  }
+
   test("multiclass metrics match sklearn on a 3-class fixture") {
     // y_true: 0,0,1,1,2,2 ; y_pred: 0,1,1,1,2,0
     val df = Seq((0, 0), (0, 1), (1, 1), (1, 1), (2, 2), (2, 0)).toDF("yt", "yp")
@@ -130,6 +446,24 @@ class MetricsCurvesSpec extends SparkSpec {
     // .9>.5, .9>.2, .4<.5, .4>.2 → AUC 3/4; class1 symmetric 3/4.
     assert(approx(m.getAs[Double]("roc_auc_macro"), 0.75))
     assert(m.getAs[Double]("pr_auc_micro") > 0 && m.getAs[Double]("pr_auc_micro") <= 1)
+  }
+
+  test("multiclassMetricsPerGroup: cells outside the label universe drop " +
+      "(sklearn labels= rule) and zero-support classes keep zero rows") {
+    val df = Seq(
+      ("g", 0, 0), ("g", 0, 0), ("g", 1, 0), ("g", 1, 1),
+      ("g", 0, 9), // y_pred outside labels: the whole cell must drop
+      ("g", 9, 1)  // y_true outside labels: drops too
+    ).toDF("grp", "yt", "yp")
+    val m = MetricsOps.multiclassMetricsPerGroup(df, "grp", "yt", "yp",
+      Seq(0, 1, 2)).head()
+    // surviving cells: (0,0)x2, (1,0), (1,1) -> acc 3/4; class 2 empty
+    assert(approx(m.getAs[Double]("accuracy"), 0.75))
+    // precision: cls0 2/3, cls1 1/1, cls2 0 (zero_division=0) -> macro 5/9
+    assert(approx(m.getAs[Double]("precision_macro"), 5.0 / 9.0))
+    // balanced accuracy: recall over classes PRESENT in y_true:
+    // cls0 2/2, cls1 1/2 -> 0.75
+    assert(approx(m.getAs[Double]("balanced_accuracy"), 0.75))
   }
 
   test("zero_division=0: class never predicted gets precision 0") {

@@ -35,7 +35,8 @@ class MiscOpsSpec extends SparkSpec {
       (1, Seq(0.1, 0.9)), (0, Seq(0.2, 0.8)), (1, Seq(0.3, 0.7)),
       (1, Seq(0.4, 0.6)), (0, Seq(0.6, 0.4)), (0, Seq(0.7, 0.3)))
       .toDF("y", "p")
-    val auc = Curves.rocAucMacro(df, col("y"), col("p"), 2).head().getDouble(0)
+    val auc = Curves.multiclassAucSuite(df, col("y"), col("p")).head()
+      .getAs[Double]("roc_auc_macro")
     assert(approx(auc, 7.0 / 9, 1e-12))
   }
 

@@ -227,14 +227,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rocCurve: the only full-data pass is the map-side-combined groupBy(score)") {
-    val p = planOf(graft.ops.Curves.rocCurve(
-      graft.queries.Q.scoredEvents(spark, dir), col("y_true"), col("score")))
-    // partial_sum before the exchange = map-side combine on the raw scan
+    val scored = graft.queries.Q.scoredEvents(spark, dir)
+    val p = planOf(graft.ops.Curves.collapse(scored, Nil, col("y_true"), col("score")))
+    // partial_sum before the exchange = map-side combine on the raw scan,
+    // and exactly one hash exchange of the full data; the curve itself is
+    // walked on the driver, so rocCurve returns a local relation
     assert(p.contains("partial_sum"), p)
-    // the cumulative window runs on the aggregated curve (single partition
-    // of D distinct scores), downstream of the aggregate — by construction
-    // there is exactly one hash exchange of the full data
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("Window"), p)
+    assert(graft.ops.Curves.rocCurve(scored, col("y_true"), col("score")).isLocal)
   }
 
   test("dedup_containment: candidate join is hash-keyed on the shingle — no cartesian; per-doc rank window is id-partitioned") {

@@ -2,16 +2,14 @@ package graft
 
 import org.apache.spark.sql.execution.SimpleMode
 import org.apache.spark.sql.functions._
-import graft.ops.{Calibration, DataQuality, MetricsOps, Stats, Curves}
+import graft.ops.{Calibration, DataQuality, Stats}
 
 /** Round-12 optimization parity pins: every fused/rewritten operator must
   * produce the values of the multi-pass form it replaced.
   *  - temperatureFitWithMeans == temperatureFit + temperatureApply means
   *  - profileCompareSlices == profileCompare on (frame, filtered frame)
   *  - spearman (one-pass cell collapse) == hand-computed midrank Pearson
-  *  - multiclassMetricsPerGroup melt keeps the sklearn labels= drop rule
   *  - cohensKappa melt keeps the null-label marginal convention
-  *  - multiclassAucSuite == the three singleton AUC ops
   * Plus plan pins: the rewrites exist to cut corpus scans, so the scan
   * counts are asserted (a correct-but-rescanning refactor is a
   * regression). */
@@ -116,24 +114,6 @@ class R12FusionSpec extends SparkSpec {
     assert(p.contains("ExistingRDD") || p.contains("LogicalRDD"), p)
   }
 
-  test("multiclassMetricsPerGroup: cells outside the label universe drop " +
-      "(sklearn labels= rule) and zero-support classes keep zero rows") {
-    val df = Seq(
-      ("g", 0, 0), ("g", 0, 0), ("g", 1, 0), ("g", 1, 1),
-      ("g", 0, 9), // y_pred outside labels: the whole cell must drop
-      ("g", 9, 1)  // y_true outside labels: drops too
-    ).toDF("grp", "yt", "yp")
-    val m = MetricsOps.multiclassMetricsPerGroup(df, "grp", "yt", "yp",
-      Seq(0, 1, 2)).head()
-    // surviving cells: (0,0)x2, (1,0), (1,1) -> acc 3/4; class 2 empty
-    assert(approx(m.getAs[Double]("accuracy"), 0.75))
-    // precision: cls0 2/3, cls1 1/1, cls2 0 (zero_division=0) -> macro 5/9
-    assert(approx(m.getAs[Double]("precision_macro"), 5.0 / 9.0))
-    // balanced accuracy: recall over classes PRESENT in y_true:
-    // cls0 2/2, cls1 1/2 -> 0.75
-    assert(approx(m.getAs[Double]("balanced_accuracy"), 0.75))
-  }
-
   test("cohensKappa: null labels keep their mass in n but join no marginal") {
     val df = Seq[(Option[Int], Option[Int])](
       (Some(0), Some(0)), (Some(0), Some(0)), (Some(1), Some(1)),
@@ -145,17 +125,5 @@ class R12FusionSpec extends SparkSpec {
     // rc over non-null classes = 3*4 + 2*1 = 14
     assert(approx(r.getAs[Double]("po"), 3.0 / 7.0))
     assert(approx(r.getAs[Double]("pe"), 14.0 / 49.0))
-  }
-
-  test("multiclassAucSuite == the three singleton AUC ops") {
-    val df = fixture(300, 3).withColumnRenamed("z", "p")
-    val suite = Curves.multiclassAucSuite(df, col("y"), col("p")).head()
-    val micro = Curves.prAucMicro(df, col("y"), col("p")).head().getDouble(0)
-    val macroAp = Curves.prAucMacro(df, col("y"), col("p")).head().getDouble(0)
-    val macroAuc = Curves.rocAucMacro(df, col("y"), col("p"), 3)
-      .head().getDouble(0)
-    assert(suite.getAs[Double]("pr_auc_micro") == micro)
-    assert(suite.getAs[Double]("pr_auc_macro") == macroAp)
-    assert(suite.getAs[Double]("roc_auc_macro") == macroAuc)
   }
 }

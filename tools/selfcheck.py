@@ -5,9 +5,13 @@ Runs graft.Verify at a given SF dir, then replays every oracle_sql.json
 entry in DuckDB over the same parquet tables and compares with the
 Spark-written parquet (columns sorted by name, rows sorted, exact values).
 
+Verify runs in the checkout that holds this script, on
+local[$SPARK_GRAFT_CPUS] (Verify's default: 32 cores); the summary line
+names that core count.
+
 Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--skip-verify] [query...]
 """
-import json, math, subprocess, sys
+import json, math, os, subprocess, sys
 from pathlib import Path
 
 import duckdb
@@ -33,6 +37,8 @@ def norm_type(t):
                           for f in t])
     return t
 
+CHECKOUT = Path(__file__).resolve().parent.parent
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 flags = [a for a in sys.argv[3:] if a.startswith("--")]
@@ -41,7 +47,7 @@ only = [a for a in sys.argv[3:] if not a.startswith("--")]
 if "--skip-verify" not in flags:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=CHECKOUT, capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
         print("VERIFY FAILED:\n", tail); sys.exit(1)
@@ -126,5 +132,7 @@ for name, sql in sorted(oracle.items()):
 ok = sum(1 for v in results.values() if v == "OK")
 for name, v in sorted(results.items()):
     print(("PASS " if v == "OK" else "FAIL ") + name + ("" if v == "OK" else f"  {v}"))
-print(f"\n{ok}/{len(results)} queries match")
+ran = ("Verify skipped; this shell's SPARK_GRAFT_CPUS gives" if "--skip-verify" in flags
+       else "Verify ran at")
+print(f"\n{ok}/{len(results)} queries match ({ran} local[{CPUS}], checkout {CHECKOUT})")
 sys.exit(0 if ok == len(results) else 2)
