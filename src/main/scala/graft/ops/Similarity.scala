@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    against the corpus, one window per query for top-k. Scales linearly
   *    in corpus size; use for verification and small query batches.
   *  - [[ivfTopK]]: the scale path — k-means-style inverted-file: assign
-  *    every corpus vector to its nearest of C centroids (broadcast C),
+  *    every corpus vector to its nearest of C centroids (C as literals),
   *    search only the `nProbe` closest cells per query. Corpus scan drops
   *    from O(N·Q) to O(N·Q·nProbe/C) with one narrow pre-pass.
   *  - [[randomHyperplaneLsh]]: signed-projection LSH bucket key for
@@ -116,71 +116,76 @@ object Similarity {
       when(dot(vec, typedLit(pl)) > 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Literal-path threshold on nCells·dim (the generated argmin's term
-    * count): below it the nearest-centroid argmin is an UNROLLED
-    * `least()` over literal structs — whole-stage-codegen'd, the fastest
-    * form when it JIT-compiles. Above it the single generated projection
-    * blows the JIT method budget (~8k bytecodes) and runs INTERPRETED —
-    * measured on 100k×dim-32 vectors: unrolled 2.2–45 s from 512 terms
-    * up, hard codegen failure by 131k terms. The criterion uses
-    * nCells·dim, not nCells: a 768-dim embedding hits the budget at a
-    * handful of cells. Past the threshold the literal-array FOLD takes
-    * over (see [[assignCells]]) — still narrow and per-row, evaluated
-    * rather than codegen'd, with plan size independent of nCells (it
-    * replaced the round-7 broadcast-join + groupBy argmin, whose
-    * struct-buffered aggregation sort-aggregated N·nCells rows — 65 GB
-    * of spill at the 10M×1000-cell probe). */
-  val DefaultMaxLiteralTerms = 256
+  /** Literal-form threshold on nCells·dim (the generated argmin's term
+    * count), applied by [[assignCorpus]] for every IVF and clustering op:
+    * at or below it the nearest-centroid argmin is an UNROLLED `least()`
+    * over literal structs — whole-stage-codegen'd, the fastest form when
+    * it JIT-compiles. Above it the single generated projection blows the
+    * JIT method budget (~8k bytecodes) and runs INTERPRETED — measured on
+    * 100k×dim-32 vectors: unrolled 2.2–45 s from 512 terms up, hard
+    * codegen failure by 131k terms. The criterion uses nCells·dim, not
+    * nCells: a 768-dim embedding hits the budget at a handful of cells.
+    * Past the threshold the native argmin takes over (see
+    * [[assignCells]]) — just as narrow and per-row, with plan size
+    * independent of nCells. Both forms assign the same cells to every
+    * vector of nonzero norm, so the threshold picks a plan, not an
+    * answer (a zero-norm vector: see [[assignCells]]). */
+  private[graft] val DefaultMaxLiteralTerms = 256
 
   /** Deterministic "centroid" sample: the nCells corpus rows with the
     * smallest xxhash64(id) — stable across partitioning and cluster size.
-    * (byHash=false picks the lowest ids instead.) Materialized on the
-    * driver once: referenced by broadcast joins / literal plans, and
-    * leaving them lazy re-runs the scan+sort+limit job per use. */
+    * (byHash=false picks the lowest ids instead.) Lazy: each caller
+    * collects it exactly once (the index needs the rows on the driver,
+    * and every further use would re-run the scan+sort+limit job). */
   private def sampleCentroids(corpus: DataFrame, id: String, vec: String,
-      nCells: Int, byHash: Boolean): (Array[org.apache.spark.sql.Row], DataFrame) = {
-    val centroidRows = corpus
+      nCells: Int, byHash: Boolean): DataFrame =
+    corpus
       .select(col(id).as("cell_id"), col(vec).as("cvec"),
         (if (byHash) xxhash64(col(id)) else col(id)).as("h"))
       .orderBy("h").limit(nCells).drop("h")
       .withColumn("cnorm", norm(col("cvec")))
-    val centroidData = centroidRows.collect()
-    (centroidData, corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroidRows.schema))
+
+  /** The IVF index builder behind every IVF and clustering op here:
+    * projects the corpus to (id, vec), adds its norm `vnorm` and the
+    * nearest of the centroid rows (cell_id, cvec, cnorm) as `cell_id`.
+    * The form of the argmin ([[assignCells]]) follows nCells·dim against
+    * `maxLiteralTerms`; only specs pass anything but the default, to
+    * force each form. */
+  private[graft] def assignCorpus(corpus: DataFrame, id: String, vec: String,
+      centroidData: Array[Row], maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
+    val literal = centroidData.isEmpty ||
+      centroidData.length.toLong * centroidData.head.getSeq[Double](1).size <= maxLiteralTerms
+    corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
+      .withColumn("cell_id", assignCells(vec, centroidData, literal))
   }
 
-  /** Nearest-centroid assignment, two physical strategies with identical
-    * results (spec-enforced) — BOTH narrow (no join, no shuffle, no
-    * aggregate):
+  /** Nearest-centroid cell id of `vec` (its norm in `vnorm`), in two
+    * physical forms with identical results (spec-enforced) — BOTH narrow
+    * (no join, no shuffle, no aggregate):
     *
-    *  - `nCells·dim <= maxLiteralTerms`: argmin via `least()` over
-    *    nCells codegen'd (d, cell_id) literal structs — the dot products
-    *    unroll into whole-stage codegen, fastest at small nCells.
-    *  - above: a per-row FOLD over three CONSTANT-FOLDED literal arrays
-    *    (centroid vectors / norms / ids — `array(lit…)` of foldables
-    *    collapses to one Literal each, so the plan size is
-    *    nCells-independent), `least()`-combining (d, cell_id) structs
-    *    exactly like the unrolled form. Evaluated, not codegen'd — the
-    *    price of not unrolling — but strictly per-row.
+    *  - `literal`: argmin via `least()` over nCells codegen'd
+    *    (d, cell_id) literal structs — the dot products unroll into
+    *    whole-stage codegen, fastest at small nCells·dim.
+    *  - native: [[graft.functions.VectorFunctions.nearestCentroid]] over
+    *    the centroids in ascending id order ([[nativeCentroids]]), so its
+    *    strict first-wins compare reproduces least()'s tie→lowest-id and
+    *    NaN-greatest order. The matrix rides as one referenced
+    *    double[][] — plan size independent of nCells — and the loop is a
+    *    primitive static call inside whole-stage codegen.
     *
-    *    The previous strategy here (broadcast-join the centroid table +
-    *    `groupBy(id)` argmin) was quadratic in DISK at scale: the
-    *    aggregation buffer carried the row's vector (`first(vec)`) and
-    *    an argmin struct, both of which force SORT-based aggregation, so
-    *    Spark sorted N·nCells joined rows — measured 65 GB of spill and
-    *    an executor OOM at 10M×16d×1000 cells, for a 1.3 GB corpus. The
-    *    fold computes the same math per row and never materializes the
-    *    (row × centroid) expansion.
+    * No form joins: a broadcast join of the centroid table + a
+    * `groupBy(id)` argmin sort-aggregates N·nCells joined rows (measured
+    * 65 GB of spill and an executor OOM at 10M×16d×1000 cells, for a
+    * 1.3 GB corpus; SCALE.md).
     *
-    * Ties → lowest cell_id; NaN distances order greatest (Spark struct
-    * ordering in both forms). Norms are precomputed once per vector
-    * either way — the cosine against each candidate costs one dot
-    * product, not three. */
-  private def assignCells(corpusN: DataFrame, id: String, vec: String,
-      centroidData: Array[org.apache.spark.sql.Row], centroids: DataFrame,
-      maxLiteralTerms: Int): DataFrame =
-    if (centroidData.isEmpty ||
-      centroidData.length.toLong * centroidData.head.getSeq[Double](1).size <= maxLiteralTerms) {
+    * Norms are precomputed once per vector either way — the cosine
+    * against each candidate costs one dot product, not three. A
+    * zero-norm vector is out of contract and the forms part there: under
+    * ANSI the literal form raises DIVIDE_BY_ZERO, the native form puts
+    * the vector in the lowest cell (all distances NaN). */
+  private def assignCells(vec: String, centroidData: Array[Row],
+      literal: Boolean): Column =
+    if (literal) {
       val cellStructs = centroidData.map { r =>
         val cvec = typedLit(r.getSeq[Double](1))
         struct((-dot(col(vec), cvec) / (col("vnorm") * lit(r.getDouble(2)))).as("d"),
@@ -192,30 +197,29 @@ object Similarity {
       val best =
         if (cellStructs.length == 1) cellStructs.head
         else least(cellStructs.toIndexedSeq: _*)
-      corpusN.withColumn("cell_id", best.getField("cell_id"))
+      best.getField("cell_id")
     } else {
-      // native argmin: centroids sorted ascending by id so the strict
-      // first-wins compare reproduces least()'s tie→lowest-id and
-      // NaN-greatest ordering (see NearestCentroid); the matrix rides as
-      // one referenced double[][] — plan size independent of nCells, and
-      // the loop is a primitive static call inside whole-stage codegen
-      // (replacing the interpreted higher-order fold, which was the
-      // dominant per-row cost of ann_ivf at sf0.1)
-      val sorted = centroidData.sortWith((a, b) => cellIdLess(a.get(0), b.get(0)))
-      val cvecs = sorted.map(_.getSeq[Double](1).toArray)
-      val cnorms = sorted.map(_.getDouble(2))
-      val ids = array(sorted.toIndexedSeq.map(r => lit(r.get(0))): _*)
-      val idx = graft.functions.VectorFunctions
-        .nearestCentroid(col(vec), col("vnorm"), cvecs, cnorms)
-      corpusN.withColumn("cell_id", element_at(ids, idx + 1))
+      val (cvecs, cnorms, ids) = nativeCentroids(centroidData)
+      element_at(ids, graft.functions.VectorFunctions
+        .nearestCentroid(col(vec), col("vnorm"), cvecs, cnorms) + 1)
     }
+
+  /** Centroid rows as the native kernels take them: ascending by id
+    * ([[cellIdLess]]), as vectors, norms, and the ids in one
+    * constant-folded literal array (kernel index i ↔ element i + 1). */
+  private def nativeCentroids(centroidData: Array[Row])
+      : (Array[Array[Double]], Array[Double], Column) = {
+    val sorted = centroidData.sortWith((a, b) => cellIdLess(a.get(0), b.get(0)))
+    (sorted.map(_.getSeq[Double](1).toArray), sorted.map(_.getDouble(2)),
+      array(sorted.toIndexedSeq.map(r => lit(r.get(0))): _*))
+  }
 
   /** Ascending order on centroid ids, matching Spark's own orderings
     * (strings compare as UTF-8 bytes, like the distributed `least()`
-    * struct form did). Loud on unsupported id types — a silently wrong
-    * sort would silently break the tie rule. (Shared with
-    * [[Dedup.nearDupIncremental]]'s driver regime, whose "earlier in
-    * batch" order is the same contract.) */
+    * struct form). Loud on unsupported id types — a silently wrong sort
+    * would silently break the tie rule. (Shared with the driver-local
+    * Lloyd regime and [[Dedup.nearDupIncremental]]'s driver regime, whose
+    * "earlier in batch" order is the same contract.) */
   private[graft] def cellIdLess(a: Any, b: Any): Boolean = (a, b) match {
     case (x: Long, y: Long) => x < y
     case (x: Int, y: Int) => x < y
@@ -228,43 +232,33 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN: centroids from a deterministic sample of the
-    * corpus; corpus vectors pre-assigned to nearest centroid ([[assignCells]]
-    * — narrow unrolled argmin, or the literal-array fold above
-    * `maxLiteralTerms`);
-    * each query probes its `nProbe` nearest cells. Returns approximate
+    * corpus ([[sampleCentroids]]), then [[ivfTopKWithCentroids]] — corpus
+    * vectors pre-assigned to their nearest centroid ([[assignCorpus]]),
+    * each query probing its `nProbe` nearest cells. Returns approximate
     * top-k per query. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
       qid: String, qvec: String, k: Int, nCells: Int, nProbe: Int,
-      centroidsByHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
-    val (centroidData, centroids) = sampleCentroids(corpus, id, vec, nCells, centroidsByHash)
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-    val assigned = assignCells(corpusN, id, vec, centroidData, centroids, maxLiteralTerms)
-    searchCells(assigned, centroidData, queries, id, vec, qid, qvec, k, nProbe)
-  }
+      centroidsByHash: Boolean = true): DataFrame =
+    ivfTopKWithCentroids(corpus, sampleCentroids(corpus, id, vec, nCells, centroidsByHash),
+      queries, id, vec, qid, qvec, k, nProbe)
 
   /** One Lloyd iteration over a centroid table: assign every corpus
-    * vector to its nearest centroid (cosine, [[assignCells]] semantics —
-    * broadcast join, map-side-combined argmin), then recompute each cell's
-    * centroid as the element-wise mean of its members. Returns the new
-    * (cell_id, cvec, cnorm) table (cells that lost all members disappear —
-    * standard Lloyd's on empty clusters).
+    * vector to its nearest centroid ([[assignCorpus]] — cosine, the same
+    * narrow argmin and tie order as every IVF op), then recompute each
+    * cell's centroid as the element-wise mean of its members. Returns the
+    * new (cell_id, cvec, cnorm) table (cells that lost all members
+    * disappear — standard Lloyd's on empty clusters).
     *
-    * Scale shape: the mean is computed by exploding members to
-    * (cell, dim, value) — the shuffle carries one float per coordinate,
-    * map-side combined into (sum, count) partials — then the k·dim
-    * means reassemble with a sorted collect per cell (k·dim rows total,
-    * never data-sized). `posexplode` keeps coordinate order explicit. */
+    * Scale shape: the centroid table is collected once (it must not
+    * re-run its possibly iterative lineage per use); the mean is computed
+    * by exploding members to (cell, dim, value) — the shuffle carries one
+    * float per coordinate, map-side combined into (sum, count) partials —
+    * then the k·dim means reassemble with a sorted collect per cell (k·dim
+    * rows total, never data-sized). `posexplode` keeps coordinate order
+    * explicit. */
   def kMeansStep(corpus: DataFrame, centroids: DataFrame, id: String,
-      vec: String): DataFrame = {
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-    // materialize once: the centroid table is referenced by the broadcast
-    // join and must not re-run its (possibly iterative) lineage
-    val centroidData = centroids.collect()
-    val local = corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroids.schema)
-    val assigned = assignCells(corpusN, id, vec, centroidData, local, 0)
-    assigned
+      vec: String): DataFrame =
+    assignCorpus(corpus, id, vec, centroids.collect())
       .select(col("cell_id"), posexplode(col(vec)))
       .groupBy(col("cell_id"), col("pos"))
       .agg(avg(col("col")).as("m"))
@@ -273,7 +267,6 @@ object Similarity {
       .select(col("cell_id"),
         transform(col("dims"), d => d.getField("m")).as("cvec"))
       .withColumn("cnorm", norm(col("cvec")))
-  }
 
   /** Vector elements (rows × dim) under which [[trainIvfCentroids]] runs
     * its Lloyd steps on the driver ([[LocalRegime]]). */
@@ -300,7 +293,10 @@ object Similarity {
     * corpora take the per-iteration aggregation path unchanged. */
   def trainIvfCentroids(corpus: DataFrame, id: String, vec: String,
       nCells: Int, iters: Int, byHash: Boolean = true): DataFrame = {
-    val (seedData, seeds) = sampleCentroids(corpus, id, vec, nCells, byHash)
+    val sample = sampleCentroids(corpus, id, vec, nCells, byHash)
+    val seedData = sample.collect()
+    val seeds = corpus.sparkSession.createDataFrame(
+      java.util.Arrays.asList(seedData: _*), sample.schema)
     if (iters == 0 || seedData.isEmpty) return seeds
     val dim = seedData.head.getSeq[Double](1).size
     val rowLimit = LocalLloydElements / math.max(dim, 1)
@@ -312,23 +308,14 @@ object Similarity {
   }
 
   /** Driver-side finish for [[trainIvfCentroids]]' small-corpus regime:
-    * `iters` Lloyd iterations with [[assignCells]]/[[kMeansStep]]
-    * semantics — cosine argmin breaking ties to the lowest cell_id with
-    * NaN distances greatest (Spark's struct-min order), null vectors
+    * `iters` Lloyd iterations with [[kMeansStep]] semantics — cosine
+    * argmin breaking ties to the lowest cell_id in [[cellIdLess]] order
+    * with NaN distances greatest (Spark's struct-min order), null vectors
     * contributing to no cell (posexplode emits nothing for them), empty
     * cells dropped. Driver memory is bounded by `LocalLloydElements`. */
   private def localLloyd(spark: org.apache.spark.sql.SparkSession,
-      corpusRows: Array[org.apache.spark.sql.Row],
-      seedData: Array[org.apache.spark.sql.Row], iters: Int,
+      corpusRows: Array[Row], seedData: Array[Row], iters: Int,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    def idLess(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: Long, y: Long) => x < y
-      case (x: Int, y: Int) => x < y
-      case (x: Short, y: Short) => x < y
-      case (x: Double, y: Double) => x < y
-      case (x: String, y: String) => x < y
-      case _ => sys.error(s"unsupported local Lloyd cell id: $a")
-    }
     val vecs = corpusRows.iterator.filter(r => !r.isNullAt(1))
       .map(_.getSeq[Double](1).toArray).toArray
     val vnorms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
@@ -360,7 +347,7 @@ object Similarity {
           // struct-min order: smaller d wins; NaN greatest; ties -> lower id
           val wins = best < 0 ||
             java.lang.Double.compare(d, bestD) < 0 ||
-            (java.lang.Double.compare(d, bestD) == 0 && idLess(cells(c), cells(best)))
+            (java.lang.Double.compare(d, bestD) == 0 && cellIdLess(cells(c), cells(best)))
           if (wins) { best = c; bestD = d }
           c += 1
         }
@@ -385,59 +372,55 @@ object Similarity {
       cvecs = keep.map(i => sums(i).map(_ / counts(i))).toArray
       cnorms = cvecs.map(cv => math.sqrt(cv.map(x => x * x).sum))
     }
-    val rows = cells.indices.map(i => org.apache.spark.sql.Row(
-      cells(i), cvecs(i).toIndexedSeq, cnorms(i)))
+    val rows = cells.indices.map(i => Row(cells(i), cvecs(i).toIndexedSeq, cnorms(i)))
     spark.createDataFrame(java.util.Arrays.asList(rows.toArray: _*), schema)
   }
 
-  /** [[ivfTopK]] with EXTERNAL centroids (e.g. [[trainIvfCentroids]]'s
-    * output) instead of the raw hash sample. */
+  /** IVF ANN over a centroid table (e.g. [[trainIvfCentroids]]' output,
+    * or [[ivfTopK]]'s raw sample): the table is collected once, the
+    * corpus assigned to its cells ([[assignCorpus]]), and each query
+    * probes its `nProbe` nearest cells ([[searchCells]]). */
   def ivfTopKWithCentroids(corpus: DataFrame, centroids: DataFrame,
       queries: DataFrame, id: String, vec: String, qid: String, qvec: String,
-      k: Int, nProbe: Int,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
+      k: Int, nProbe: Int): DataFrame = {
     val centroidData = centroids.collect()
-    val local = corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroids.schema)
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-    val assigned = assignCells(corpusN, id, vec, centroidData, local, maxLiteralTerms)
-    searchCells(assigned, centroidData, queries, id, vec, qid, qvec, k, nProbe)
+    searchCells(assignCorpus(corpus, id, vec, centroidData), centroidData,
+      queries, id, vec, qid, qvec, k, nProbe)
   }
 
   /** Per-query nProbe nearest cells as a NARROW projection: one native
     * [[graft.functions.VectorFunctions.nearestCells]] call per query row
     * ((d asc, cell_id asc) probe order, NaN-greatest), indices mapped to
-    * ids through one constant-folded literal array, exploded. Replaces
+    * ids through [[nativeCentroids]]' literal array, exploded. Replaces
     * the former broadcast(centroids) join + window rank (an extra
     * exchange + window stage per search) — and its literal-array
     * `array_sort` successor, whose 2·nCells typedLit forest measurably
-    * taxed every Catalyst pass of the ANN plans. Appends `cell_id` to
-    * queriesN (which must already carry `qnorm`). */
-  private def probeCellsNarrow(queriesN: DataFrame, qvec: String,
-      centroidData: Array[org.apache.spark.sql.Row], nProbe: Int): DataFrame = {
-    val sorted = centroidData.sortWith((a, b) => cellIdLess(a.get(0), b.get(0)))
-    val cvecs = sorted.map(_.getSeq[Double](1).toArray)
-    val cnorms = sorted.map(_.getDouble(2))
-    val ids = array(sorted.toIndexedSeq.map(r => lit(r.get(0))): _*)
-    val idxs = graft.functions.VectorFunctions.nearestCells(
-      col(qvec), col("qnorm"), cvecs, cnorms, nProbe)
-    queriesN.withColumn("cell_id",
-      explode(transform(idxs, i => element_at(ids, i + 1))))
+    * taxed every Catalyst pass of the ANN plans. Appends the query
+    * norm `qnorm` and `cell_id` (of type `cellType`) to `queries`; an
+    * empty index probes no cell. */
+  private def probeCells(queries: DataFrame, qvec: String,
+      centroidData: Array[Row], nProbe: Int,
+      cellType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val queriesN = queries.withColumn("qnorm", norm(col(qvec)))
+    if (centroidData.isEmpty)
+      queriesN.where(lit(false)).withColumn("cell_id", lit(null).cast(cellType))
+    else {
+      val (cvecs, cnorms, ids) = nativeCentroids(centroidData)
+      val idxs = graft.functions.VectorFunctions.nearestCells(
+        col(qvec), col("qnorm"), cvecs, cnorms, nProbe)
+      queriesN.withColumn("cell_id",
+        explode(transform(idxs, i => element_at(ids, i + 1))))
+    }
   }
 
   /** Probe + scan + per-query top-k over a (centroids, assigned) pair —
-    * the shared tail of [[ivfTopK]] and [[ivfTopKFromIndex]]. */
-  private def searchCells(assigned: DataFrame, centroidData: Array[org.apache.spark.sql.Row],
+    * the shared tail of [[ivfTopKWithCentroids]] and [[ivfTopKFromIndex]]. */
+  private[graft] def searchCells(assigned: DataFrame, centroidData: Array[Row],
       queries: DataFrame, id: String, vec: String, qid: String, qvec: String,
       k: Int, nProbe: Int): DataFrame = {
-    val queriesN = queries.withColumn("qnorm", norm(col(qvec)))
-    val probes =
-      if (centroidData.isEmpty)
-        queriesN.where(lit(false))
-          .withColumn("cell_id", lit(null).cast(assigned.schema("cell_id").dataType))
-          .select(col(qid), col(qvec), col("qnorm"), col("cell_id"))
-      else probeCellsNarrow(queriesN, qvec, centroidData, nProbe)
-        .select(col(qid), col(qvec), col("qnorm"), col("cell_id"))
+    val probes = probeCells(queries, qvec, centroidData, nProbe,
+        assigned.schema("cell_id").dataType)
+      .select(col(qid), col(qvec), col("qnorm"), col("cell_id"))
     val candidates = assigned.join(broadcast(probes), Seq("cell_id"))
       .where(col(id) =!= col(qid))
       .withColumn("cos", dot(col(qvec), col(vec)) / (col("qnorm") * col("vnorm")))
@@ -454,25 +437,19 @@ object Similarity {
     * which carries its own exact oracle.
     *
     * Plan shape: centroid sample + cell assignment as [[ivfTopK]]
-    * (narrow unrolled argmin or literal-array fold), PQ encode as a
-    * narrow projection, per-query probe cells via the broadcast centroid
-    * join, then [[Pq.adcTopKProbed]] — the only data-sized stage reads
+    * ([[assignCorpus]]), PQ encode as a narrow projection, per-query
+    * probe cells as [[probeCells]]' narrow projection, then
+    * [[Pq.adcTopKProbed]] — the only data-sized stage reads
     * (id, cell_id, codes) and touches only probed cells. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
       qid: String, qvec: String, k: Int, nCells: Int, nProbe: Int,
-      cb: Pq.Codebooks, centroidsByHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
-    val (centroidData, centroids) = sampleCentroids(corpus, id, vec, nCells, centroidsByHash)
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-    val assigned = assignCells(corpusN, id, vec, centroidData, centroids, maxLiteralTerms)
+      cb: Pq.Codebooks, centroidsByHash: Boolean = true): DataFrame = {
+    val centroidData = sampleCentroids(corpus, id, vec, nCells, centroidsByHash).collect()
+    val assigned = assignCorpus(corpus, id, vec, centroidData)
     val encoded = Pq.encode(assigned, vec, cb).select(col(id), col("cell_id"), col("codes"))
-    val queriesN = queries.withColumn("qnorm", norm(col(qvec)))
-    val probes =
-      if (centroidData.isEmpty) queriesN.where(lit(false))
-        .withColumn("cell_id", lit(null).cast(centroids.schema("cell_id").dataType))
-        .select(col(qid), col("cell_id"))
-      else probeCellsNarrow(queriesN, qvec, centroidData, nProbe)
-        .select(col(qid), col("cell_id"))
+    val probes = probeCells(queries, qvec, centroidData, nProbe,
+        assigned.schema("cell_id").dataType)
+      .select(col(qid), col("cell_id"))
     Pq.adcTopKProbed(encoded, queries, probes, id, qid, qvec, cb, k)
   }
 
@@ -483,13 +460,13 @@ object Similarity {
     * dynamic partition pruning, so query cost is O(N·nProbe/nCells) I/O,
     * not a full scan. Build once, query many. */
   def buildIvfIndex(corpus: DataFrame, id: String, vec: String, nCells: Int,
-      path: String, centroidsByHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): Unit = {
-    val (centroidData, centroids) = sampleCentroids(corpus, id, vec, nCells, centroidsByHash)
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-    val assigned = assignCells(corpusN, id, vec, centroidData, centroids, maxLiteralTerms)
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(s"$path/assigned")
+      path: String, centroidsByHash: Boolean = true): Unit = {
+    val sample = sampleCentroids(corpus, id, vec, nCells, centroidsByHash)
+    val centroidData = sample.collect()
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(centroidData: _*), sample.schema)
+      .write.mode("overwrite").parquet(s"$path/centroids")
+    assignCorpus(corpus, id, vec, centroidData)
+      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$path/assigned")
   }
 
   /** Query a persisted IVF index (see [[buildIvfIndex]]). Result equals
@@ -517,11 +494,10 @@ object Similarity {
   def ivfPqTopKReranked(corpus: DataFrame, queries: DataFrame, id: String,
       vec: String, qid: String, qvec: String, k: Int, nCells: Int, nProbe: Int,
       cb: Pq.Codebooks, shortlistFactor: Int = 4,
-      centroidsByHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
+      centroidsByHash: Boolean = true): DataFrame = {
     require(shortlistFactor >= 1, "shortlistFactor must be >= 1")
     val shortlist = ivfPqTopK(corpus, queries, id, vec, qid, qvec,
-        k * shortlistFactor, nCells, nProbe, cb, centroidsByHash, maxLiteralTerms)
+        k * shortlistFactor, nCells, nProbe, cb, centroidsByHash)
       .select(col(qid), col(id))
     val vecs = corpus.select(col(id), col(vec).cast("array<double>").as("__v"))
       .withColumn("__vn", norm(col("__v")))
@@ -550,8 +526,8 @@ object Similarity {
     * is quadratic only WITHIN a cell (one shuffle of (cell, id, vec),
     * join keyed by cell). Pick `nCells ≈ N/1e4` so cells stay ~1e4 rows
     * — exactly the published recipe (they run k-means with large k for
-    * this reason); the assignment pass is the IVF narrow/broadcast
-    * argmin, and the final flag join is a broadcast of the (usually
+    * this reason); the assignment pass is the IVF narrow argmin
+    * ([[assignCorpus]]), and the final flag join is a broadcast of the (usually
     * small) duplicate-id set when AQE sees it fit, else a key shuffle.
     *
     * Returns (id, cell_id, is_dup) for every input row; downstream keeps
@@ -559,19 +535,13 @@ object Similarity {
     * or a plain filter). */
   def semanticDedup(corpus: DataFrame, id: String, vec: String,
       nCells: Int, iters: Int, simThreshold: Double,
-      byHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
-    val centroids = trainIvfCentroids(corpus, id, vec, nCells, iters, byHash)
-    val centroidData = centroids.collect()
-    val local = corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroids.schema)
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
+      byHash: Boolean = true): DataFrame = {
+    val centroidData = trainIvfCentroids(corpus, id, vec, nCells, iters, byHash).collect()
     // persisted: the plan below consumes `assigned` THREE times (both
     // sides of the within-cell self-join + the final flag rejoin) —
     // without the cache each consumer re-runs the nCells-way argmin over
     // the whole corpus
-    val assigned = assignCells(corpusN, id, vec, centroidData, local, maxLiteralTerms)
-      .persist()
+    val assigned = assignCorpus(corpus, id, vec, centroidData).persist()
     val a = assigned.select(col("cell_id"), col(id).as("__ia"),
       col(vec).as("__va"), col("vnorm").as("__na"))
     val b = assigned.select(col("cell_id"), col(id).as("__ib"),
@@ -595,10 +565,9 @@ object Similarity {
     * corpus, embedding-based record linkage.
     *
     * Scale shape: centroids train on `right` (bounded model, collected
-    * once); `right` assigns narrowly ([[assignCells]]' fold — no
+    * once); `right` assigns narrowly ([[assignCorpus]] — no
     * shuffle); each `left` row ranks its `nProbe` nearest cells IN-ROW
-    * (transform + `array_sort` over the same constant-folded literal
-    * arrays — still narrow) and explodes to nProbe rows. The ONLY
+    * ([[probeCells]] — still narrow) and explodes to nProbe rows. The ONLY
     * corpus-sized shuffle is the cell-keyed equi-join of left×nProbe
     * against right, and the per-left top-k runs as a WindowGroupLimit
     * window. Each right row lives in exactly one cell, so candidate
@@ -611,26 +580,20 @@ object Similarity {
     * lowest right id. */
   def knnJoin(left: DataFrame, lid: String, lvec: String,
       right: DataFrame, rid: String, rvec: String, k: Int, nCells: Int,
-      nProbe: Int, iters: Int = 1, byHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
+      nProbe: Int, iters: Int = 1, byHash: Boolean = true): DataFrame = {
     require(k >= 1 && nProbe >= 1, "k and nProbe must be >= 1")
     require(lid != rid, s"left and right id columns must differ (both '$lid')")
-    val centroids = trainIvfCentroids(right, rid, rvec, nCells, iters, byHash)
-    val centroidData = centroids.collect()
+    val centroidData = trainIvfCentroids(right, rid, rvec, nCells, iters, byHash).collect()
     require(centroidData.nonEmpty, "right corpus is empty — no centroids")
-    val local = right.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroids.schema)
-    val rightN = right.select(col(rid), col(rvec)).withColumn("vnorm", norm(col(rvec)))
-    val rightAssigned = assignCells(rightN, rid, rvec, centroidData, local, maxLiteralTerms)
+    val assigned = assignCorpus(right, rid, rvec, centroidData)
+    val rightAssigned = assigned
       .select(col("cell_id"), col(rid), col(rvec).as("__rv"), col("vnorm").as("__rn"))
     // per-left-row probe cells via the native nearestCells expression
     // (same (d asc, cell_id asc) order the literal array_sort form had) —
     // the interpreted 2·nCells typedLit struct sort this replaces was the
     // per-row bottleneck past a few hundred cells
-    val nC = centroidData.length
-    val probed = probeCellsNarrow(
-        left.select(col(lid), col(lvec)).withColumn("qnorm", norm(col(lvec))),
-        lvec, centroidData, math.min(nProbe, nC))
+    val probed = probeCells(left.select(col(lid), col(lvec)), lvec, centroidData,
+        math.min(nProbe, centroidData.length), assigned.schema("cell_id").dataType)
       .select(col(lid), col(lvec), col("qnorm").as("__ln"), col("cell_id"))
     val w = Window.partitionBy(lid).orderBy(col("cos").desc, col(rid).asc)
     probed.join(rightAssigned, Seq("cell_id"))
@@ -656,21 +619,16 @@ object Similarity {
     *
     * Scale shape = SemDeDup's: centroid training is the only iterative
     * part (bounded model, collected to the driver), assignment is the
-    * narrow literal/broadcast argmin, and the quota is the two-level
+    * narrow argmin ([[assignCorpus]]), and the quota is the two-level
     * tournament — no per-cell single-partition funnel. Deterministic
     * across partitioning, reruns, and engines; a smaller quota selects a
     * subset of a larger one. Returns the KEPT rows as (id, cell_id). */
   def clusterBalancedSample(corpus: DataFrame, id: String, vec: String,
       nCells: Int, quota: Int, iters: Int = 1, seed: Long = 42L,
-      byHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
+      byHash: Boolean = true): DataFrame = {
     require(quota >= 1, "quota must be >= 1")
-    val centroids = trainIvfCentroids(corpus, id, vec, nCells, iters, byHash)
-    val centroidData = centroids.collect()
-    val local = corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroids.schema)
-    val corpusN = corpus.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-    val assigned = assignCells(corpusN, id, vec, centroidData, local, maxLiteralTerms)
+    val centroidData = trainIvfCentroids(corpus, id, vec, nCells, iters, byHash).collect()
+    val assigned = assignCorpus(corpus, id, vec, centroidData)
     Stats.quotaPerGroup(assigned.select(col(id), col("cell_id")),
       col(id), col("cell_id"), Map.empty, quota, seed)
   }
@@ -843,23 +801,17 @@ object Similarity {
     * per-feature [[graft.ops.Stats.psi]].
     *
     * Scale shape: after the bounded centroid train/collect, each corpus
-    * makes ONE narrow assignment pass (the [[assignCells]] literal/
+    * makes ONE narrow assignment pass ([[assignCorpus]]' literal or
     * native argmin — no join) into a map-side-combined nCells-row count;
     * the JS arithmetic runs on 2·nCells rows. Returns
     * (cell_id, n_a, n_b, js_term), cells with at least one member. */
   def embeddingDriftJs(a: DataFrame, b: DataFrame, id: String, vec: String,
-      nCells: Int, iters: Int = 1, byHash: Boolean = true,
-      maxLiteralTerms: Int = DefaultMaxLiteralTerms): DataFrame = {
-    val centroids = trainIvfCentroids(a, id, vec, nCells, iters, byHash)
-    val centroidData = centroids.collect()
+      nCells: Int, iters: Int = 1, byHash: Boolean = true): DataFrame = {
+    val centroidData = trainIvfCentroids(a, id, vec, nCells, iters, byHash).collect()
     require(centroidData.nonEmpty, "reference corpus is empty — no centroids")
-    val local = a.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centroidData: _*), centroids.schema)
-    def cellCounts(df: DataFrame, out: String) = {
-      val n = df.select(col(id), col(vec)).withColumn("vnorm", norm(col(vec)))
-      assignCells(n, id, vec, centroidData, local, maxLiteralTerms)
+    def cellCounts(df: DataFrame, out: String) =
+      assignCorpus(df, id, vec, centroidData)
         .groupBy("cell_id").agg(count(lit(1)).as(out))
-    }
     val joined = cellCounts(a, "n_a")
       .join(cellCounts(b, "n_b"), Seq("cell_id"), "full_outer")
       .select(col("cell_id"), coalesce(col("n_a"), lit(0L)).as("n_a"),

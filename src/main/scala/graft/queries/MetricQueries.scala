@@ -120,7 +120,6 @@ object MetricQueries {
       Curves.rocCurve(ev, col("y_true"), col("score"))
         .select(col("threshold"), col("fps"), col("tps"),
           round(col("fpr"), 6).as("fpr"), round(col("tpr"), 6).as("tpr"))
-        .orderBy(col("threshold").desc)
     }),
 
     "g14_roc_auc" -> ((s, dir) => {

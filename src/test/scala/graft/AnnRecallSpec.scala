@@ -107,6 +107,35 @@ class AnnRecallSpec extends SparkSpec {
     assert(byProbe(8) >= 0.90, s"nProbe=8 recall ${byProbe(8)}")
   }
 
+  /** `body`'s Spark job count, read after the listener bus drains. */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try {
+      body
+      org.apache.spark.ProfileBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    } finally sc.clearJobGroup()
+  }
+
+  test("job budget: ivfTopK and ivfPqTopK collect their centroid sample once") {
+    corpus.count(); queries.count() // materialize the cached fixture first
+    val cb = Pq.trainCodebooks(corpus, "id", "vec", m = 4, k = 16, iters = 3)
+    val ivf = jobsOf("ann-budget-ivf") {
+      Similarity.ivfTopK(corpus, queries, "id", "vec", "qid", "qvec", k,
+        nCells = nCenters, nProbe = 4).collect()
+    }
+    val pq = jobsOf("ann-budget-ivfpq") {
+      Similarity.ivfPqTopK(corpus, queries, "id", "vec", "qid", "qvec", k,
+        nCells = nCenters, nProbe = 4, cb).collect()
+    }
+    info(s"jobs: ivfTopK $ivf, ivfPqTopK $pq")
+    // pinned at the counts measured before both ops shared one index
+    // body; a second collect of the centroid sample adds a job to either
+    assert(ivf <= 4, s"ivfTopK jobs $ivf")
+    assert(pq <= 7, s"ivfPqTopK jobs $pq")
+  }
+
   test("Lloyd-refined centroids beat the raw hash sample at equal nProbe") {
     val refined = Similarity.trainIvfCentroids(corpus, "id", "vec", nCenters, iters = 2)
     val rRefined = recallAt10(Similarity.ivfTopKWithCentroids(

@@ -102,8 +102,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("ivfTopK broadcast-join assignment path == literal least() path") {
-    // 60 vectors in 3 lobes, 8 cells; maxLiteralCells = 0 forces the join
-    // path — results (incl. rank ties) must be identical to the literal plan.
+    // 60 vectors in 3 lobes, 8 cells. The index builder at
+    // maxLiteralTerms = 0 forces the native argmin (the form that replaced
+    // the broadcast join), Int.MaxValue the unrolled least() — results
+    // (incl. rank ties) must be identical, and equal ivfTopK's.
     val corpus = (1 to 60).map { i =>
       val lobe = i % 3
       (i.toLong, Seq(
@@ -113,12 +115,17 @@ class SimilarityMultimodalSpec extends SparkSpec {
     }.toDF("id", "v")
     val queries = Seq((3L, Seq(1.0, 0.1, 0.2)), (4L, Seq(0.1, 1.0, 0.1)),
       (5L, Seq(0.1, 0.1, 1.0))).toDF("qid", "qv")
-    def run(maxTerms: Int) =
-      Similarity.ivfTopK(corpus, queries, "id", "v", "qid", "qv",
-        k = 5, nCells = 8, nProbe = 3, maxLiteralTerms = maxTerms)
-        .select("qid", "id", "rank").collect()
+    // iters = 0: the raw hash sample, ivfTopK's own centroids
+    val cents = Similarity.trainIvfCentroids(corpus, "id", "v", nCells = 8, iters = 0).collect()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    def run(maxTerms: Int) =
+      rows(Similarity.searchCells(Similarity.assignCorpus(corpus, "id", "v", cents, maxTerms),
+        cents, queries, "id", "v", "qid", "qv", k = 5, nProbe = 3))
     assert(run(0) == run(Int.MaxValue), "join-path assignment must equal literal-path")
+    assert(run(Int.MaxValue) == rows(Similarity.ivfTopK(corpus, queries, "id", "v", "qid", "qv",
+      k = 5, nCells = 8, nProbe = 3)))
   }
 
   test("kMeansStep converges to true cluster means; trained IVF matches brute force") {
@@ -161,6 +168,21 @@ class SimilarityMultimodalSpec extends SparkSpec {
         corpus, "id", "v", nCells = 5, iters = iters, byHash = byHash)))
       assert(local == dist, s"iters=$iters byHash=$byHash\n$local\nvs\n$dist")
     }
+    // a tie between two identical seeds goes to the lower id in Spark's
+    // UTF-8 order in both regimes: U+FFFF sorts before U+1F600 in UTF-8,
+    // after it in Java's UTF-16 String order; every other id sorts after
+    // both, so the byHash = false seeds are exactly the tied pair
+    val tied = Seq(("\uFFFF", Seq(1.0, 0.5)), ("\uD83D\uDE00", Seq(1.0, 0.5)),
+      ("\uD83D\uDE01", Seq(1.0, 0.25)), ("\uD83D\uDE02", Seq(0.5, 0.5))).toDF("id", "v")
+    def collectTied(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getSeq[Double](1).toList, r.getDouble(2)))
+        .sortBy(_._1).toList
+    val localTied = collectTied(Similarity.trainIvfCentroids(
+      tied, "id", "v", nCells = 2, iters = 1, byHash = false))
+    val distTied = LocalRegime.distributedOnly(collectTied(Similarity.trainIvfCentroids(
+      tied, "id", "v", nCells = 2, iters = 1, byHash = false)))
+    assert(localTied == distTied, s"tied seeds\n$localTied\nvs\n$distTied")
+    assert(localTied.map(_._1) == List("\uFFFF"), localTied)
   }
 
   test("semanticDedup: near-copies flagged within cluster, representatives kept, distant points clean") {
