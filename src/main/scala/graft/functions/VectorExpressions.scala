@@ -140,6 +140,21 @@ case class L2Norm(child: Expression)
     copy(child = newChild)
 }
 
+/** The cosine distance's divisor `vnorm · cnorm` in the native kernels,
+  * loud on zero exactly like the literal `least()` form of the same
+  * argmin (graft.ops.Similarity `assignCells`), whose ANSI division
+  * raises DIVIDE_BY_ZERO: a zero-norm vector or centroid fails the same
+  * way whichever form the index picks, instead of argmin-ing NaN
+  * distances into the lowest cell. */
+object CosineDivisor {
+  def apply(vnorm: Double, cnorm: Double): Double = {
+    val den = vnorm * cnorm
+    if (den == 0.0)
+      throw org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+    den
+  }
+}
+
 /** Per-row nearest-centroid argmin over a CONSTANT centroid matrix — the
   * scale form of the IVF cell assignment (graft.ops.Similarity
   * `assignCells`). Returns the winning centroid's INDEX (the caller maps
@@ -150,6 +165,7 @@ case class L2Norm(child: Expression)
   * (`Double.compare < 0`), which reproduces `least()`-struct semantics
   * exactly — ties → earliest visited = lowest id, NaN distances greatest
   * (never win against a number, and an all-NaN row keeps the lowest id).
+  * A zero divisor raises ([[CosineDivisor]]).
   *
   * vs the previous literal-array `aggregate` fold: same math, but the
   * matrix rides as ONE referenced `double[][]` (plan size independent of
@@ -169,7 +185,7 @@ object NearestCentroidImpl {
       var dp = 0.0
       var j = 0
       while (j < n) { dp += v.getDouble(j) * cv(j); j += 1 }
-      val d = -dp / (vnorm * cnorms(c))
+      val d = -dp / CosineDivisor(vnorm, cnorms(c))
       if (best < 0 || java.lang.Double.compare(d, bestD) < 0) {
         best = c; bestD = d
       }
@@ -198,7 +214,7 @@ object NearestCellsImpl {
       var dp = 0.0
       var j = 0
       while (j < n) { dp += v.getDouble(j) * cv(j); j += 1 }
-      d(c) = -dp / (vnorm * cnorms(c))
+      d(c) = -dp / CosineDivisor(vnorm, cnorms(c))
       c += 1
     }
     val idx = Array.range(0, k).sortWith { (a, b) =>

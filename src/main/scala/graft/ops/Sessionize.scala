@@ -273,9 +273,8 @@ object Sessionize extends Serializable {
           "not us) or wrap the tie-break"))))
     // the window orders by the CHECKED packed key (monotone in (t, tie),
     // so the order is identical) — this makes the range check fire on
-    // EVERY row, conversions included, matching the streaming face's
-    // contract (a malformed conversion must raise here too, not pass
-    // silently while AttributionStream refuses it)
+    // EVERY row, conversions included (a malformed conversion must
+    // raise too, not pass silently)
     val checked = base.withColumn("__enc", enc)
     val w = Window.partitionBy("k").orderBy(col("__enc"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -128,8 +128,8 @@ object Similarity {
     * Past the threshold the native argmin takes over (see
     * [[assignCells]]) — just as narrow and per-row, with plan size
     * independent of nCells. Both forms assign the same cells to every
-    * vector of nonzero norm, so the threshold picks a plan, not an
-    * answer (a zero-norm vector: see [[assignCells]]). */
+    * vector of nonzero norm and raise the same error on a zero-norm one
+    * ([[assignCells]]), so the threshold picks a plan, not an answer. */
   private[graft] val DefaultMaxLiteralTerms = 256
 
   /** Deterministic "centroid" sample: the nCells corpus rows with the
@@ -180,9 +180,10 @@ object Similarity {
     *
     * Norms are precomputed once per vector either way — the cosine
     * against each candidate costs one dot product, not three. A
-    * zero-norm vector is out of contract and the forms part there: under
-    * ANSI the literal form raises DIVIDE_BY_ZERO, the native form puts
-    * the vector in the lowest cell (all distances NaN). */
+    * zero-norm vector or centroid is out of contract, and both forms
+    * raise DIVIDE_BY_ZERO on it (the literal form through ANSI division,
+    * the native one through [[org.apache.spark.sql.graft.CosineDivisor]]),
+    * at any nCells. */
   private def assignCells(vec: String, centroidData: Array[Row],
       literal: Boolean): Column =
     if (literal) {
@@ -191,13 +192,12 @@ object Similarity {
         struct((-dot(col(vec), cvec) / (col("vnorm") * lit(r.getDouble(2)))).as("d"),
           lit(r.get(0)).as("cell_id"))
       }
-      // least() rejects a single argument — a 1-centroid index (tiny
-      // training side, e.g. knnJoin against a 1-row corpus) assigns
-      // everything to that cell directly
-      val best =
-        if (cellStructs.length == 1) cellStructs.head
-        else least(cellStructs.toIndexedSeq: _*)
-      best.getField("cell_id")
+      // least() rejects a single argument, so a 1-centroid index (tiny
+      // training side, e.g. knnJoin against a 1-row corpus) passes its
+      // struct twice: the distance is still computed, and a zero divisor
+      // still raises, like every other index
+      least((if (cellStructs.length == 1) cellStructs ++ cellStructs
+        else cellStructs).toIndexedSeq: _*).getField("cell_id")
     } else {
       val (cvecs, cnorms, ids) = nativeCentroids(centroidData)
       element_at(ids, graft.functions.VectorFunctions
@@ -337,13 +337,9 @@ object Similarity {
           val n = math.min(v.length, cv.length)
           var j = 0
           while (j < n) { dp += v(j) * cv(j); j += 1 }
-          // the distributed path runs under ANSI SQL and throws
-          // DIVIDE_BY_ZERO on a zero-norm vector or centroid — stay
-          // equally loud instead of silently argmin-ing NaN distances
-          if (vnorms(vi) * cnorms(c) == 0.0) throw new ArithmeticException(
-            "zero-norm vector or centroid in cosine Lloyd (the distributed " +
-              "regime raises ANSI DIVIDE_BY_ZERO on the same input)")
-          val d = -dp / (vnorms(vi) * cnorms(c))
+          // a zero-norm vector or centroid raises DIVIDE_BY_ZERO, as in
+          // the distributed regime
+          val d = -dp / org.apache.spark.sql.graft.CosineDivisor(vnorms(vi), cnorms(c))
           // struct-min order: smaller d wins; NaN greatest; ties -> lower id
           val wins = best < 0 ||
             java.lang.Double.compare(d, bestD) < 0 ||

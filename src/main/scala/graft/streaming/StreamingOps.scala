@@ -5,71 +5,24 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming analogues of the batch operators (SURVEY §2.6
-  * note: the reference is batch/count-based; these are the event-time
-  * extensions a production deployment of the same semantics needs).
+/** Structured Streaming operators (SURVEY §2.6 note: the reference is
+  * batch/count-based; these are the event-time forms a production
+  * deployment needs). Only streams with a stateful or monitoring shape
+  * of their own live here; a stream whose batch twin answers the same
+  * question over a prefix is that batch operator, run on a stream.
   *
-  *  - [[slidingFeatureWindows]]: W1's event-time form — sliding
-  *    window(aggregates) with watermark, per entity.
+  *  - [[dedupExactStream]], [[nearDupStream]], [[QuotaAdmission]]: the
+  *    stages [[graft.pipelines.CorpusPipeline.curateStream]] and
+  *    `curateAdmitStream` chain (exact dedup, MinHash-LSH near-dup
+  *    keep-first, per-group token-budget admission).
   *  - [[EpisodeDetector]]: G12's online form — per-entity
   *    flatMapGroupsWithState sessionization emitting (episode start,
   *    first detection, delay) as episodes close.
+  *  - [[psiStream]], [[coverageStream]]: per-window monitors against a
+  *    model fitted once on a batch reference (input drift, conformal
+  *    coverage).
   */
 object StreamingOps {
-
-  /** Sliding event-time feature windows per entity: mean/std/min/max of
-    * `valueCol` over `windowDur` sliding by `slideDur`, watermarked —
-    * the streaming W1/G6. Late data beyond the watermark is dropped
-    * (state is bounded; at 1000 executors state is partitioned by
-    * (entity, window) — no global order needed, unlike batch W1). */
-  def slidingFeatureWindows(events: DataFrame, tsCol: String, entityCol: String,
-      valueCol: String, windowDur: String, slideDur: String,
-      watermark: String = "10 seconds"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(entityCol), window(col(tsCol), windowDur, slideDur))
-      .agg(
-        avg(valueCol).as("mean_value"),
-        coalesce(stddev_pop(col(valueCol)), lit(0.0)).as("std_value"),
-        min(valueCol).as("min_value"),
-        max(valueCol).as("max_value"),
-        count(lit(1)).as("n"))
-
-  /** Streaming heavy hitters — the online G10 value_counts: per
-    * event-time tumbling window, keys whose count reaches `minCount`.
-    * Append mode emits each window's final counts once the watermark
-    * passes its end; state is (window × distinct keys), bounded by the
-    * watermark horizon. The count is exact per window (not sketched) —
-    * at 1000 executors the groupBy partial-aggregates map-side, so the
-    * shuffle carries one row per (window, key). */
-  def heavyHittersStream(events: DataFrame, tsCol: String, keyCol: String,
-      windowDur: String, minCount: Long,
-      watermark: String = "10 seconds"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowDur), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") >= minCount)
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col(keyCol), col("n"))
-
-  /** Gap-based sessionization on a stream — the online form of
-    * `Sessionize.byGap`, expressed with Spark's native `session_window`
-    * (dynamic, merging event-time sessions; a session closes once event
-    * time passes its end + watermark). State is one open session per
-    * entity, partitioned by key across executors — no global order, no
-    * growing state. Emits (entity, session_start, session_end, n_events,
-    * sum_value) per closed session. */
-  def sessionizeStream(events: DataFrame, tsCol: String, entityCol: String,
-      valueCol: String, gap: String, watermark: String = "10 seconds"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(entityCol), session_window(col(tsCol), gap))
-      .agg(count(lit(1)).as("n_events"), sum(valueCol).as("sum_value"))
-      .select(col(entityCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("sum_value"))
 
   /** Streaming exact dedup (the online form of `Dedup.dedupExact`):
     * first-seen row per content hash wins, duplicates within the
@@ -86,129 +39,6 @@ object StreamingOps {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__dup_hash")
       .drop("__dup_hash")
-
-  /** Stream-stream interval join — the online form of
-    * [[graft.ops.Joins.rangeJoin]]: every `points` row pairs with the
-    * `intervals` rows of the same `key` whose start lies in
-    * `(pointTs − windowDur, pointTs]`, i.e. point ∈ [start, start +
-    * windowDur). Both sides are watermarked, so the join state Spark
-    * buffers (rows awaiting possible matches from the other stream) is
-    * evicted once event time passes `watermark + windowDur` — bounded,
-    * partitioned by key across executors. Timestamp columns must be named
-    * differently on the two sides; the duplicate key column is dropped. */
-  def intervalJoin(points: DataFrame, pointTs: String, intervals: DataFrame,
-      ivTs: String, key: String, windowDur: String,
-      watermark: String = "10 seconds"): DataFrame = {
-    require(pointTs != ivTs, "timestamp columns must have distinct names")
-    val l = points.withWatermark(pointTs, watermark).alias("l")
-    val r = intervals.withWatermark(ivTs, watermark).alias("r")
-    l.join(r, expr(
-        s"l.$key = r.$key AND l.$pointTs >= r.$ivTs AND l.$pointTs < r.$ivTs + interval $windowDur"))
-      .drop(col(s"r.$key"))
-  }
-
-  /** LEFT OUTER [[intervalJoin]]: points with no covering interval still
-    * emit (interval columns null) — but only once the watermark proves no
-    * match can arrive, so unmatched rows surface with watermark latency.
-    * Same bounded state as the inner form; Spark requires the time-range
-    * condition on both sides for outer stream-stream joins, which the
-    * interval predicate supplies. */
-  def intervalJoinOuter(points: DataFrame, pointTs: String, intervals: DataFrame,
-      ivTs: String, key: String, windowDur: String,
-      watermark: String = "10 seconds"): DataFrame = {
-    require(pointTs != ivTs, "timestamp columns must have distinct names")
-    val l = points.withWatermark(pointTs, watermark).alias("l")
-    val r = intervals.withWatermark(ivTs, watermark).alias("r")
-    l.join(r, expr(
-        s"l.$key = r.$key AND l.$pointTs >= r.$ivTs AND l.$pointTs < r.$ivTs + interval $windowDur"),
-      "left_outer")
-      .drop(col(s"r.$key"))
-  }
-
-  /** Stream-static enrichment: join a stream against a slowly-changing
-    * dimension table (labels, user attributes, model thresholds). The
-    * static side re-resolves per micro-batch (file-source dims pick up
-    * new files) and broadcasts — no stream-side state at all, unlike a
-    * stream-stream join. Left join keeps unmatched events flowing. */
-  def enrichStream(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
-
-  final case class Point(entity: String, ts: Timestamp, x: Double)
-  final case class EwmaState(y: Double, lastTsMs: Long)
-  final case class EwmaOut(entity: String, tsMs: Long, x: Double, ewma: Double)
-
-  /** Streaming EWMA — the online form of [[graft.ops.Stats.ewma]]: the
-    * same `y_1 = x_1; y_t = (1−α)·y + α·x` recurrence carried across
-    * micro-batches in per-entity state (2 scalars per entity, partitioned
-    * across executors by the groupByKey). Rows WITHIN a micro-batch are
-    * folded in event-time order; rows older than the entity's last
-    * processed timestamp (late arrivals across batches) are passed
-    * through with the CURRENT smoothed value rather than retro-folded —
-    * the standard online-smoothing tradeoff, matched by the spec against
-    * the batch op on in-order streams. */
-  object EwmaStream {
-    def run(points: Dataset[Point], alpha: Double): Dataset[EwmaOut] = {
-      require(alpha > 0.0 && alpha <= 1.0, "alpha must be in (0, 1]")
-      import points.sparkSession.implicits._
-      val decay = 1.0 - alpha
-      points.groupByKey(_.entity)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-          (entity: String, rows: Iterator[Point], state: GroupState[EwmaState]) => {
-            var st = state.getOption
-            val out = rows.toSeq.sortBy(_.ts.getTime).map { p =>
-              val t = p.ts.getTime
-              st match {
-                case None =>
-                  st = Some(EwmaState(p.x, t))
-                case Some(s) if t >= s.lastTsMs =>
-                  st = Some(EwmaState(decay * s.y + alpha * p.x, t))
-                case Some(_) => () // late row: emit current y, don't fold
-              }
-              EwmaOut(entity, t, p.x, st.get.y)
-            }
-            st.foreach(state.update)
-            out.iterator
-          })
-    }
-  }
-
-  final case class CusumState(sUp: Double, sDn: Double, lastTsMs: Long)
-  final case class CusumOut(entity: String, tsMs: Long, x: Double,
-      cusumUp: Double, cusumDn: Double, alarmUp: Boolean, alarmDn: Boolean)
-
-  /** Streaming CUSUM — the online form of [[graft.ops.Stats.cusum]]:
-    * the textbook recursion `S⁺ = max(0, S⁺ + x − target − slack)` /
-    * `S⁻ = max(0, S⁻ + target − x − slack)` carried across micro-batches
-    * in per-entity state (2 scalars + a watermark timestamp per entity —
-    * the batch op's prefix-scan trick isn't needed online because the
-    * recursion IS the online form). Rows within a micro-batch fold in
-    * event-time order; late arrivals (older than the entity's last
-    * processed timestamp) emit the current statistics without folding,
-    * the same tradeoff [[EwmaStream]] documents. The parity spec pins
-    * stream == batch on in-order streams in the exact-integer regime. */
-  object CusumStream {
-    def run(points: Dataset[Point], target: Double, slack: Double = 0.0,
-        threshold: Double = Double.PositiveInfinity): Dataset[CusumOut] = {
-      require(slack >= 0.0, "slack must be >= 0")
-      import points.sparkSession.implicits._
-      points.groupByKey(_.entity)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-          (entity: String, rows: Iterator[Point], state: GroupState[CusumState]) => {
-            var st = state.getOption.getOrElse(CusumState(0.0, 0.0, Long.MinValue))
-            val out = rows.toSeq.sortBy(_.ts.getTime).map { p =>
-              val t = p.ts.getTime
-              if (t >= st.lastTsMs)
-                st = CusumState(
-                  math.max(0.0, st.sUp + (p.x - target - slack)),
-                  math.max(0.0, st.sDn + (target - p.x - slack)), t)
-              CusumOut(entity, t, p.x, st.sUp, st.sDn,
-                st.sUp > threshold, st.sDn > threshold)
-            }
-            state.update(st)
-            out.iterator
-          })
-    }
-  }
 
   final case class NearDupBucketRow(band: Int, bucket: Long, id: Long,
       ts: Timestamp, text: String, sh: Array[Long])
@@ -453,38 +283,6 @@ object StreamingOps {
     }
   }
 
-  /** Streaming train/test-leak scan — [[graft.ops.Dedup.decontaminate]]'s
-    * semantics applied at ingest time: per arriving corpus doc, the count
-    * of distinct word n-gram hashes it shares with a STATIC benchmark
-    * set. Emits (ts, id, n_shared_grams) for contaminated docs only, as
-    * the watermark closes each doc's event time (append mode).
-    *
-    * Scale shape: the benchmark side collapses to distinct 31-bit gram
-    * hashes ONCE (static subplan, broadcast into the stream-static
-    * left-semi join — no state); the per-doc distinct is row-local
-    * (`array_distinct` over the hashed shingle array, identical collision
-    * behavior to batch's (id, hash) distinct); the only stateful operator
-    * is the watermarked (ts, id) count over matched grams, whose state is
-    * bounded by matches inside the watermark, not by the corpus. Batch
-    * parity: run on a batch frame, the same plan reproduces
-    * `decontaminate` plus the ts column (spec-pinned). */
-  def decontaminateStream(docs: DataFrame, tsCol: String, idCol: String,
-      textCol: String, benchmark: DataFrame, benchText: String, n: Int,
-      watermark: String = "10 minutes"): DataFrame = {
-    import graft.ops.{Dedup, IntHash}
-    val benchGrams = benchmark
-      .select(explode(Dedup.shingles(col(benchText), n)).as("g"))
-      .select(IntHash.stringHash(col("g")).as("h")).distinct()
-    docs
-      .withWatermark(tsCol, watermark)
-      .select(col(tsCol), col(idCol), explode(array_distinct(
-        transform(Dedup.shingles(col(textCol), n),
-          g => IntHash.stringHash(g)))).as("h"))
-      .join(broadcast(benchGrams), Seq("h"), "left_semi")
-      .groupBy(col(tsCol), col(idCol))
-      .agg(count(lit(1)).as("n_shared_grams"))
-  }
-
   /** Streaming PSI drift monitor — [[graft.ops.Stats.psi]]'s production
     * deployment shape: fit the bin model ONCE on a batch reference
     * (quantile bounds + Laplace-smoothed reference proportions — a
@@ -496,29 +294,6 @@ object StreamingOps {
     * a window's PSI equals `Stats.psi(reference ∪ window-slice)` with
     * the same k/alpha (spec-pinned). Returns
     * (window, n, psi) per closed window. */
-  /** Streaming A/B monitor — [[graft.ops.Experiment.abConversion]]'s
-    * live-dashboard shape: per event-time window and arm, the UNIT-level
-    * totals (units seen, units converted, conversion rate). Chained
-    * stateful aggregations: the first windowed agg collapses events to
-    * one row per (window, arm, unit) — a late event for a unit that
-    * already converted cannot double-count — the second counts units per
-    * (window, arm); both keyed on the same event-time window, watermark-
-    * bounded state. Feed two arms' rows to the batch z-test for the
-    * readout; SRM falls out of comparing n_units across arms. */
-  def abConversionStream(stream: DataFrame, tsCol: String, arm: Column,
-      unit: Column, isConv: Column, windowDur: String,
-      watermark: String): DataFrame = {
-    val perUnit = stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowDur), arm.as("arm"),
-        unit.as("unit"))
-      .agg(max(isConv.cast("int")).as("conv"))
-    perUnit
-      .groupBy(window(col("window"), windowDur).as("window"), col("arm"))
-      .agg(count(lit(1)).as("n_units"), sum("conv").as("n_converted"))
-      .withColumn("rate", col("n_converted") / col("n_units"))
-  }
-
   def psiStream(stream: DataFrame, tsCol: String, value: Column,
       reference: DataFrame, refValue: Column, k: Int = 10,
       alpha: Double = 0.5, windowDur: String = "10 minutes",
@@ -572,189 +347,5 @@ object StreamingOps {
         sum(when(covered, 1L).otherwise(0L)).as("n_covered"))
       .select(col("window"), col("n"), col("n_covered"),
         round(col("n_covered").cast("double") / col("n"), 6).as("coverage"))
-  }
-
-  /** Streaming embedding-distribution drift —
-    * [[graft.ops.Similarity.embeddingDriftJs]]'s production deployment
-    * shape (the embedding twin of [[psiStream]]): train cells and the
-    * reference occupancy ONCE on a batch reference corpus (bounded model,
-    * collected to literals), then emit one Jensen–Shannon divergence per
-    * event-time window of the vector stream. The stream side is a single
-    * watermarked window aggregation: per row one native nearest-centroid
-    * argmin (same distance/tie contract as the batch assignment — the
-    * two regimes are spec-pinned identical), then nCells conditional
-    * counters and a literal fold for the JS formula — no join, no second
-    * stateful stage, state bounded by the watermark horizon. Batch
-    * parity: a window's js equals Σ js_term of
-    * `embeddingDriftJs(reference, window-slice)` with the same cell
-    * parameters (spec-pinned). Returns (window, n, js) per window;
-    * js ∈ [0, ln 2], alarm thresholds are corpus-specific. */
-  def embeddingDriftStream(stream: DataFrame, tsCol: String, vec: Column,
-      reference: DataFrame, refId: String, refVec: String, nCells: Int,
-      iters: Int = 1, byHash: Boolean = true,
-      windowDur: String = "10 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    import graft.ops.Similarity
-    val centroidData = Similarity.trainIvfCentroids(reference, refId, refVec,
-      nCells, iters, byHash).collect()
-    require(centroidData.nonEmpty, "reference corpus is empty — no centroids")
-    val sorted = centroidData.sortWith((a, b) => Similarity.cellIdLess(a.get(0), b.get(0)))
-    val cvecs = sorted.map(_.getSeq[Double](1).toArray)
-    val cnorms = sorted.map(_.getDouble(2))
-    val nC = sorted.length
-    def idxOf(v: Column): Column = graft.functions.VectorFunctions
-      .nearestCentroid(v, graft.functions.VectorFunctions.l2norm(v), cvecs, cnorms)
-    val refCounts = reference.select(idxOf(col(refVec)).as("i"))
-      .groupBy("i").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nRef = refCounts.values.sum.toDouble
-    def p(i: Int): Double = refCounts.getOrElse(i, 0L) / nRef
-    val idx = idxOf(vec)
-    val cnts = (0 until nC).map(i =>
-      sum(when(idx === i, 1L).otherwise(0L)).as(s"__c$i"))
-    val total = (0 until nC).map(i => col(s"__c$i")).reduce(_ + _)
-    val jsExpr: Column = (0 until nC).map { i =>
-      val q = col(s"__c$i") / col("__n")
-      val m = (lit(p(i)) + q) / 2
-      val tp = if (p(i) > 0) lit(p(i)) * log(lit(p(i)) / m) else lit(0.0)
-      val tq = when(q > 0, q * log(q / m)).otherwise(lit(0.0))
-      (tp + tq) / 2
-    }.reduce(_ + _)
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(cnts.head, cnts.tail: _*)
-      .withColumn("__n", total)
-      .select(col("window"), col("__n").as("n"), jsExpr.as("js"))
-  }
-
-  final case class FunnelEvent(entity: String, ts: Timestamp, step: String)
-  final case class FunnelHit(entity: String, stepIdx: Int, tsMs: Long)
-  final case class FunnelProgress(idx: Int, t0Ms: Long, lastMs: Long)
-
-  /** Streaming ordered funnel — the online form of [[graft.ops.Stats.funnel]]:
-    * per entity, a [[FunnelHit]] is emitted the moment the entity FIRST
-    * reaches each step in order (step 0 starts the clock; step k counts
-    * only at/after the step-(k−1) time and within `maxSpanMs` of step 0 —
-    * exactly the batch op's min-time chaining). State per entity is 3
-    * scalars in flatMapGroupsWithState, partitioned across executors by
-    * the groupByKey; counting hits per stepIdx downstream reproduces the
-    * batch conversion table (FunnelStreamSpec pins equality).
-    *
-    * Ordering contract (the [[EwmaStream]] convention): rows WITHIN a
-    * micro-batch are folded in event-time order; an event arriving in a
-    * LATER batch with an earlier timestamp than the entity's current
-    * progress cannot rewind the funnel — it can still ADVANCE it if it
-    * is timestamped at/after the entity's last step (batch-parity holds
-    * on streams that are in order per entity across batches). */
-  object FunnelStream {
-    def run(events: Dataset[FunnelEvent], steps: Seq[String],
-        maxSpanMs: Long): Dataset[FunnelHit] = {
-      require(steps.size >= 2, "funnelStream: need at least 2 steps")
-      require(steps.distinct.size == steps.size,
-        "funnelStream: steps must be distinct")
-      require(maxSpanMs > 0, "funnelStream: maxSpanMs must be > 0")
-      import events.sparkSession.implicits._
-      val stepIdx = steps.zipWithIndex.toMap
-      events.groupByKey(_.entity)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout) {
-          (entity: String, it: Iterator[FunnelEvent],
-              state: GroupState[FunnelProgress]) =>
-            // equal-timestamp events fold in FUNNEL order (batch's
-            // inclusive __tc >= __t lets step k+1 share step k's instant)
-            val sorted = it.toArray.sortBy(e =>
-              (e.ts.getTime, stepIdx.getOrElse(e.step, Int.MaxValue)))
-            var st = state.getOption.getOrElse(FunnelProgress(-1, 0L, 0L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[FunnelHit]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              if (st.idx < 0) {
-                if (stepIdx.get(e.step).contains(0)) {
-                  st = FunnelProgress(0, t, t)
-                  out += FunnelHit(entity, 0, t)
-                }
-              } else if (st.idx < steps.size - 1
-                  && stepIdx.get(e.step).contains(st.idx + 1)
-                  && t >= st.lastMs && t <= st.t0Ms + maxSpanMs) {
-                st = FunnelProgress(st.idx + 1, st.t0Ms, t)
-                out += FunnelHit(entity, st.idx, t)
-              }
-            }
-            state.update(st)
-            out.iterator
-        }
-    }
-  }
-
-  final case class TouchEvent(entity: String, t: Long, tie: Long,
-      conv: Boolean, label: String, value: Double)
-  final case class TouchState(enc: Long, label: String)
-  final case class AttributionHit(entity: String, convT: Long, convTie: Long,
-      value: Double, touchLabel: Option[String], touchT: Option[Long])
-
-  /** Streaming last-touch attribution — the online form of
-    * [[graft.ops.Sessionize.lastTouchAttribution]]: per entity, one
-    * [[AttributionHit]] per conversion event, crediting the most recent
-    * preceding NON-conversion touch within `lookback` time units (same
-    * clock as `t`; null touch = "direct"), ties at one timestamp broken
-    * on the largest tie-break id — the batch op's exact credit rule.
-    *
-    * State per entity is the packed touch key t·2²⁰ + tie (the batch
-    * op's encoding, same [0, 2⁴³)×[0, 2²⁰) domain, violations throw)
-    * plus its label — two scalars in flatMapGroupsWithState, partitioned
-    * across executors by the groupByKey; no timeout, the newest touch
-    * must outlive any idle gap.
-    *
-    * Ordering contract (the [[FunnelStream]] convention): rows WITHIN a
-    * micro-batch fold in (t, tie) order. TOUCH updates are
-    * order-insensitive even across batches — the state carries the MAX
-    * packed key, and max is commutative, so a late-arriving touch folds
-    * in correctly unless a conversion it should have credited was
-    * already emitted. CONVERSIONS therefore need the stream in order
-    * per entity across batches (AttributionStreamSpec pins equality
-    * with the batch op across micro-batch splits). */
-  object AttributionStream {
-    def run(events: Dataset[TouchEvent], lookback: Long): Dataset[AttributionHit] = {
-      require(lookback > 0, "attributionStream: lookback must be > 0")
-      import events.sparkSession.implicits._
-      events.groupByKey(_.entity)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout) {
-          (entity: String, it: Iterator[TouchEvent],
-              state: GroupState[TouchState]) =>
-            val sorted = it.toArray.sortBy(e => (e.t, e.tie))
-            var st = state.getOption.getOrElse(TouchState(-1L, null))
-            val out = scala.collection.mutable.ArrayBuffer.empty[AttributionHit]
-            sorted.foreach { e =>
-              require(e.t >= 0 && e.t < (1L << 43)
-                  && e.tie >= 0 && e.tie < (1L << 20),
-                s"attributionStream: (t, tie) (${e.t}, ${e.tie}) outside " +
-                  "[0, 2^43) x [0, 2^20) — coarsen the clock (ms, not us) " +
-                  "or wrap the tie-break")
-              if (e.conv) {
-                // batch face: touch_t decodes from the packed key; the
-                // window check rides the decoded t only. The st.enc <
-                // convEnc clause keeps the batch op's strict-precedence
-                // rule under a violated ordering contract: a conversion
-                // replayed or reordered BEHIND a newer touch must never
-                // credit that future touch (batch can't — its window is
-                // preceding rows only); it degrades to "direct" instead.
-                val convEnc = e.t * (1L << 20) + e.tie
-                val touchT = st.enc >> 20
-                val inWindow = st.enc >= 0 && st.enc < convEnc &&
-                  e.t - touchT <= lookback
-                out += AttributionHit(entity, e.t, e.tie, e.value,
-                  if (inWindow) Option(st.label) else None,
-                  if (inWindow) Some(touchT) else None)
-              } else {
-                val enc = e.t * (1L << 20) + e.tie
-                if (enc > st.enc) st = TouchState(enc, e.label)
-              }
-            }
-            state.update(st)
-            out.iterator
-        }
-    }
   }
 }

@@ -175,6 +175,14 @@ class AnalyticsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == Map(("a", 0L) -> 1L, ("a", 10L) -> 1L, ("a", 100L) -> 2L,
       ("a", 105L) -> 2L, ("a", 300L) -> 3L, ("b", 7L) -> 1L))
+    // a chain merges though its span exceeds the gap: u1 at 0, 3, 6 is one
+    // session (each step within 5 of the previous), u2 at 0 and 20 is two
+    val chain = Seq(("u1", 0L), ("u1", 3L), ("u1", 6L), ("u2", 0L), ("u2", 20L))
+      .toDF("k", "t")
+    val chained = Sessionize.byGap(chain, col("k"), col("t"), gap = 5L)
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(chained == Map(("u1", 0L) -> 1L, ("u1", 3L) -> 1L, ("u1", 6L) -> 1L,
+      ("u2", 0L) -> 1L, ("u2", 20L) -> 2L))
   }
 
   test("byGap: equal timestamps share a session regardless of order") {
@@ -356,6 +364,14 @@ class AnalyticsSpec extends SparkSpec {
       "no alarm before the shift")
     assert(out.last.getAs[Boolean]("alarm_up"), "sustained +20 shift alarms")
     assert(out.forall(!_.getAs[Boolean]("alarm_dn")))
+    // a series far below target: the downward statistic grows, the
+    // upward one stays 0 (1 → 10 − 1 − 2 = 7; 2 → 7 + 10 − 2 − 2 = 13)
+    val below = Stats.cusum(Seq((1L, "b", 1.0), (2L, "b", 2.0)).toDF("t", "key", "x"),
+        Seq(col("key")), Seq(col("t")), col("x"),
+        target = 10.0, slack = 2.0, threshold = 15.0)
+      .orderBy("t").collect()
+      .map(r => (r.getAs[Double]("cusum_up"), r.getAs[Double]("cusum_dn")))
+    assert(below.toSeq == Seq((0.0, 7.0), (0.0, 13.0)))
 
     // integral regime: identical on any partitioning
     val big = (1 to 400).map(i =>

@@ -212,6 +212,24 @@ class ChangelogSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("n_entities")).toSeq == Seq(3L, 2L, 1L))
     assert(approx(out(1).getAs[Double]("conversion"), 2.0 / 3, 1e-6))
     assert(approx(out(2).getAs[Double]("conversion"), 1.0 / 3, 1e-6))
+    // 60 entities, ten of each fate: full conversion; stall after click;
+    // stall at signup; never signs up; a purchase before signup, then the
+    // full chain (the early purchase is ignored); a click past the span
+    val fates = (0 until 60).flatMap { i =>
+      val u = i.toLong
+      val t = i.toLong
+      i % 6 match {
+        case 0 => Seq((u, t, "s"), (u, t + 5, "c"), (u, t + 9, "p"))
+        case 1 => Seq((u, t, "s"), (u, t + 3, "c"))
+        case 2 => Seq((u, t, "s"))
+        case 3 => Seq((u, t, "c"), (u, t + 1, "p"))
+        case 4 => Seq((u, t, "p"), (u, t + 1, "s"), (u, t + 2, "c"), (u, t + 3, "p"))
+        case _ => Seq((u, t, "s"), (u, t + 60, "c"))
+      }
+    }.toDF("u", "ts", "et")
+    val byFate = Stats.funnel(fates, col("u"), col("ts"), col("et"),
+      Seq("s", "c", "p"), maxSpan = 30.0).orderBy("step_idx").collect()
+    assert(byFate.map(_.getAs[Long]("n_entities")).toSeq == Seq(50L, 30L, 20L))
   }
 
   // ------------------------------------------------------ joinCardinality

@@ -300,6 +300,18 @@ class CorpusDiagnosticsSpec extends SparkSpec {
     assert(approx(out(2L)._3, jsTerm(1.0 / 3, 1.0), 1e-12))
     // total JS is bounded by ln 2
     assert(out.values.map(_._3).sum <= math.log(2.0) + 1e-12)
+    // a reference of two topic clusters: a sample with the same mix
+    // barely drifts, one collapsed onto the second topic drifts far
+    val ref = Seq((1L, ang(0)), (2L, ang(90)), (3L, ang(2)), (4L, ang(88)),
+      (5L, ang(1)), (6L, ang(89))).toDF("vec_id", "v")
+    def totalJs(sample: Seq[Double]*): Double =
+      Similarity.embeddingDriftJs(ref,
+          sample.zipWithIndex.map { case (v, i) => (100L + i, v) }.toDF("vec_id", "v"),
+          "vec_id", "v", nCells = 2, iters = 0, byHash = false)
+        .agg(sum("js_term")).head().getDouble(0)
+    val stable = totalJs(ang(1), ang(89), ang(3), ang(87))
+    val shifted = totalJs(ang(88), ang(89), ang(90), ang(91))
+    assert(stable < 0.01 && shifted > 0.2, s"stable $stable, shifted $shifted")
   }
 
   test("bitextMarginMine threshold gates low-margin sources") {

@@ -749,6 +749,19 @@ class DedupTextSpec extends SparkSpec {
     val out = Dedup.decontaminate(corpus, "id", "t", bench, "bt", n = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 2L, 3L -> 1L)) // doc 2 clean → absent
+    // two benchmark texts; doc 2 is clean and doc 5 too short for a
+    // 3-gram, so both are absent
+    val bench2 = Seq("the quick brown fox jumps over the lazy dog",
+      "pack my box with five dozen liquor jugs").toDF("bt")
+    val corpus2 = Seq(
+      (1L, "we saw the quick brown fox jumps high today"), // 3 shared grams
+      (2L, "totally clean document with no overlap at all"),
+      (3L, "pack my box with care and five dozen liquor jugs inside"), // 4
+      (4L, "the quick brown fox jumps over the lazy dog verbatim copy"), // all 7
+      (5L, "ok")).toDF("id", "t")
+    val out2 = Dedup.decontaminate(corpus2, "id", "t", bench2, "bt", n = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out2 == Map(1L -> 3L, 3L -> 4L, 4L -> 7L))
   }
 
   test("connectedComponents: chain collapses transitively, components split, singletons keep own id") {

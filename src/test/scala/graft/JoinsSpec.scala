@@ -71,6 +71,11 @@ class JoinsSpec extends SparkSpec {
         .select("t", "iid").collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == expect, s"binWidth=$w")
     }
+    // half-open at the right edge: a point AT hi matches nothing
+    val edge = Joins.rangeJoin(Seq(1L, 4L, 5L, 12L).toDF("t"), "t",
+        Seq((0L, 5L, 100L), (10L, 15L, 200L)).toDF("lo", "hi", "iid"), "lo", "hi", 5.0)
+      .select("t", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(edge == Set((1L, 100L), (4L, 100L), (12L, 200L)))
   }
 
   test("bloomFilteredJoin == plain join (long keys), false positives invisible") {

@@ -128,6 +128,26 @@ class SimilarityMultimodalSpec extends SparkSpec {
       k = 5, nCells = 8, nProbe = 3)))
   }
 
+  test("assignCorpus: a zero-norm vector raises DIVIDE_BY_ZERO in both argmin forms, at 1 and 2 cells") {
+    // both forms divide by vnorm · cnorm: the literal least() form through
+    // ANSI division, the native kernel through CosineDivisor; a 1-cell
+    // index still computes its one distance. repartition keeps the
+    // projection in a task (no driver-side local-relation folding).
+    val corpus = Seq((1L, Seq(0.0, 0.0))).toDF("id", "v").repartition(1)
+    val cents = Seq((1L, Seq(1.0, 0.0), 1.0), (2L, Seq(0.0, 1.0), 1.0))
+      .toDF("cell_id", "cvec", "cnorm").collect()
+    def conditions(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .collect { case e: org.apache.spark.SparkThrowable => e.getCondition }
+        .toSeq
+    for (nCells <- Seq(1, 2); maxTerms <- Seq(0, Int.MaxValue)) {
+      val e = intercept[Exception](Similarity.assignCorpus(corpus, "id", "v",
+        cents.take(nCells), maxTerms).collect())
+      assert(conditions(e).contains("DIVIDE_BY_ZERO"),
+        s"nCells=$nCells maxLiteralTerms=$maxTerms: $e")
+    }
+  }
+
   test("kMeansStep converges to true cluster means; trained IVF matches brute force") {
     // two tight, well-separated clusters around (1,0) and (0,1)
     val corpus = ((1 to 30).map(i => (i.toLong, Seq(1.0 + (i % 5) * 0.01, 0.02 * (i % 3)))) ++
@@ -152,9 +172,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // dyadic-rational coordinates -> every per-dim sum is FP-exact in any
     // association, so local and distributed means are bit-identical.
     // 3 clusters, uneven sizes, ids shuffled so byHash seeds are
-    // nontrivial. (Zero vectors are out of contract: the distributed
-    // regime raises ANSI DIVIDE_BY_ZERO and the local regime throws the
-    // matching ArithmeticException.)
+    // nontrivial. (Zero vectors are out of contract: both regimes raise
+    // DIVIDE_BY_ZERO.)
     val corpus = ((1 to 40).map(i => (i.toLong, Seq(1.0 + (i % 8) / 64.0, (i % 4) / 32.0, 0.0))) ++
       (41 to 70).map(i => (i.toLong, Seq((i % 4) / 32.0, 1.0 + (i % 8) / 64.0, 0.25))) ++
       (71 to 90).map(i => (i.toLong, Seq(0.5, (i % 8) / 64.0, 1.0 + (i % 4) / 32.0)))).toDF("id", "v")

@@ -60,59 +60,6 @@ class SkewStreamDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("heavyHittersStream: per-window exact counts, threshold filter, close at watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: Int) = new Timestamp(1700000000000L + s * 1000L)
-    val input = MemoryStream[(String, Timestamp)]
-    val hh = StreamingOps.heavyHittersStream(
-      input.toDF().toDF("key", "ts"), "ts", "key",
-      windowDur = "10 seconds", minCount = 2L, watermark = "2 seconds")
-    val q = hh.writeStream.format("memory").queryName("hh_stream")
-      .outputMode("append").start()
-    try {
-      // window [0,10): a x3, b x1; window [10,20): b x2
-      input.addData(("a", ts(1)), ("a", ts(2)), ("b", ts(3)), ("a", ts(4)),
-        ("b", ts(11)), ("b", ts(12)))
-      q.processAllAvailable()
-      input.addData(("c", ts(60))) // advance watermark, close both windows
-      q.processAllAvailable()
-      val got = spark.table("hh_stream").select("key", "n", "window_start")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getTimestamp(2))).toSet
-      assert(got == Set(("a", 3L, ts(0)), ("b", 2L, ts(10)))) // b@[0,10) below support
-    } finally q.stop()
-  }
-
-  test("sessionizeStream: gap sessions merge, close at the watermark, and carry aggregates") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: Int) = new Timestamp(1700000000000L + s * 1000L)
-    val input = MemoryStream[(String, Timestamp, Double)]
-    val sessions = StreamingOps.sessionizeStream(
-      input.toDF().toDF("user", "ts", "value"), "ts", "user",
-      "value", gap = "5 seconds", watermark = "2 seconds")
-    val q = sessions.writeStream.format("memory").queryName("sess_stream")
-      .outputMode("append").start()
-    try {
-      // u1: events at 0,3,6 chain into ONE session (each within 5s of the
-      // previous); u2: 0 and 20 are two sessions
-      input.addData(("u1", ts(0), 1.0), ("u1", ts(3), 2.0), ("u1", ts(6), 4.0),
-        ("u2", ts(0), 8.0), ("u2", ts(20), 16.0))
-      q.processAllAvailable()
-      // advance event time far past every session end + watermark so all
-      // sessions finalize and emit
-      input.addData(("u3", ts(300), 0.0))
-      q.processAllAvailable()
-      val got = spark.table("sess_stream")
-        .select("user", "session_start", "session_end", "n_events", "sum_value")
-        .collect()
-        .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2),
-          r.getLong(3), r.getDouble(4))).toSet
-      assert(got == Set(
-        ("u1", ts(0), ts(11), 3L, 7.0),   // merged chain: last event 6 + 5s gap
-        ("u2", ts(0), ts(5), 1L, 8.0),
-        ("u2", ts(20), ts(25), 1L, 16.0)))
-    } finally q.stop()
-  }
-
   test("nearDupStream: stream == batch near-dedup keep-first; chains collapse across micro-batches") {
     import graft.ops.Dedup
     implicit val sqlCtx = spark.sqlContext
@@ -365,42 +312,5 @@ class SkewStreamDedupSpec extends SparkSpec {
     for (m <- Seq("n_docs", "n_tokens", "avg_tokens", "avg_chars",
         "empty_rate", "group_entropy"))
       assert(streamCard(m) == batchCard(m), s"$m: ${streamCard(m)} vs ${batchCard(m)}")
-  }
-
-  test("decontaminateStream == batch decontaminate (per-doc shared-gram counts)") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: Int) = new Timestamp(1700000000000L + s * 1000L)
-    val bench = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "pack my box with five dozen liquor jugs").toDF("btext")
-    val corpusRows = Seq(
-      (1L, "we saw the quick brown fox jumps high today"), // shares 3-grams
-      (2L, "totally clean document with no overlap at all"),
-      (3L, "pack my box with care and five dozen liquor jugs inside"),
-      (4L, "the quick brown fox jumps over the lazy dog verbatim copy"),
-      (5L, "ok")) // too short for 3-grams
-    val batchWant = graft.ops.Dedup.decontaminate(
-        corpusRows.toDF("doc_id", "text"), "doc_id", "text",
-        bench, "btext", n = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val flagged = StreamingOps.decontaminateStream(
-      input.toDF().toDF("doc_id", "ts", "text"), "ts", "doc_id", "text",
-      bench, "btext", n = 3, watermark = "1 minute")
-    val q = flagged.writeStream.format("memory").queryName("decon_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(corpusRows.take(3).zipWithIndex.map { case ((id, t), i) => (id, ts(i), t) }: _*)
-      q.processAllAvailable()
-      input.addData(corpusRows.drop(3).zipWithIndex.map { case ((id, t), i) => (id, ts(10 + i), t) }: _*)
-      q.processAllAvailable()
-      input.addData((99L, ts(600), "watermark advancer")) // close all doc groups
-      q.processAllAvailable()
-      val got = spark.table("decon_stream").select("doc_id", "n_shared_grams")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === batchWant)
-      assert(got.keySet === Set(1L, 3L, 4L)) // 2 clean, 5 shingle-free
-    } finally q.stop()
   }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
 
-/** Structured Streaming operators driven through MemoryStream — event-time
-  * sliding windows and the online episode detector. */
+/** Structured Streaming operators driven through MemoryStream — the
+  * per-window drift and coverage monitors, batch-fitted scorers run on a
+  * stream, and the online episode detector. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -80,130 +81,6 @@ class StreamingSpec extends SparkSpec {
       assert(n1 == 40 && n2 == 40) // the tmin(40) closer's own window never emits
       assert(c1 == batch(w1) && cov1 >= 0.75) // the conformal guarantee regime
       assert(c2 == batch(w2) && cov2 < cov1)  // doubled residuals alarm
-    } finally q.stop()
-  }
-
-  test("embeddingDriftStream: per-window JS vs a batch-fitted reference == batch embeddingDriftJs") {
-    import graft.ops.Similarity
-    implicit val sqlCtx = spark.sqlContext
-    def tmin(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-    def ang(deg: Double): Seq[Double] = {
-      val r = math.toRadians(deg)
-      Seq(math.cos(r), math.sin(r))
-    }
-    // reference: two clear topic clusters (seeds = ids 1, 2)
-    val ref = Seq((1L, ang(0)), (2L, ang(90)), (3L, ang(2)), (4L, ang(88)),
-      (5L, ang(1)), (6L, ang(89))).toDF("vec_id", "v")
-    val input = MemoryStream[(Timestamp, Seq[Double])]
-    val out = StreamingOps.embeddingDriftStream(input.toDF().toDF("ts", "v"),
-      "ts", col("v"), ref, "vec_id", "v", nCells = 2, iters = 0,
-      byHash = false, windowDur = "10 minutes", watermark = "0 seconds")
-    val q = out.writeStream.format("memory").queryName("drift_stream")
-      .outputMode("append").start()
-    try {
-      // window 1 matches the reference mix; window 2 collapses to topic 2
-      val w1 = Seq(ang(1), ang(89), ang(3), ang(87))
-      val w2 = Seq(ang(88), ang(89), ang(90), ang(91))
-      input.addData(w1.map(v => (tmin(1), v)): _*)
-      input.addData(w2.map(v => (tmin(11), v)): _*)
-      input.addData((tmin(40), ang(45))) // advance watermark: close both
-      q.processAllAvailable()
-      val got = spark.table("drift_stream")
-        .select(col("window.start").cast("long").as("s"), col("n"), col("js"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      val (n1, js1) = got(1699999800L)
-      val (n2, js2) = got(1700000400L)
-      assert(n1 == 4 && n2 == 4)
-      def batchJs(slice: Seq[Seq[Double]]): Double =
-        Similarity.embeddingDriftJs(ref,
-            slice.zipWithIndex.map { case (v, i) => (100L + i, v) }.toDF("vec_id", "v"),
-            "vec_id", "v", nCells = 2, iters = 0, byHash = false)
-          .agg(sum("js_term")).head().getDouble(0)
-      assert(approx(js1, batchJs(w1), 1e-12), s"$js1")
-      assert(approx(js2, batchJs(w2), 1e-12), s"$js2")
-      assert(js1 < 0.01 && js2 > 0.2, s"stable $js1, shifted $js2")
-    } finally q.stop()
-  }
-
-  test("slidingFeatureWindows aggregates per entity over event-time windows") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp, Double)]
-    val agg = StreamingOps.slidingFeatureWindows(
-      input.toDF().toDF("entity", "ts", "value"),
-      "ts", "entity", "value", "10 seconds", "5 seconds")
-    val q = agg.writeStream.format("memory").queryName("sw")
-      .outputMode("complete").start()
-    try {
-      input.addData(
-        ("a", ts(0), 1.0), ("a", ts(2), 3.0), ("a", ts(7), 5.0),
-        ("b", ts(1), 10.0))
-      q.processAllAvailable()
-      val rows = spark.table("sw")
-        .select(col("entity"), col("window.start").cast("long").as("ws"),
-          col("mean_value"), col("n"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      // entity a, window starting at t=0 (1700000000): values 1,3,5 → mean 3
-      val a0 = rows.find(r => r._1 == "a" && r._2 == 1700000000L).get
-      assert(approx(a0._3, 3.0) && a0._4 == 3)
-      // sliding: the window starting at t=-5 contains 1,3
-      val aMinus = rows.find(r => r._1 == "a" && r._2 == 1699999995L).get
-      assert(approx(aMinus._3, 2.0) && aMinus._4 == 2)
-      assert(rows.exists(_._1 == "b"))
-    } finally q.stop()
-  }
-
-  test("intervalJoin pairs points with same-key intervals, online == batch semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    val pts = MemoryStream[(String, Timestamp, Double)]
-    val ivs = MemoryStream[(String, Timestamp, Long)]
-    val joined = StreamingOps.intervalJoin(
-      pts.toDF().toDF("k", "pts", "value"),
-      "pts", ivs.toDF().toDF("k", "its", "ivid"), "its", "k", "5 seconds")
-    val q = joined.writeStream.format("memory").queryName("ij")
-      .outputMode("append").start()
-    try {
-      ivs.addData(("a", ts(0), 100L), ("a", ts(10), 200L), ("b", ts(0), 300L))
-      pts.addData(
-        ("a", ts(1), 1.0),   // in [0,5) -> 100
-        ("a", ts(4), 2.0),   // in [0,5) -> 100
-        ("a", ts(5), 3.0),   // 5 is OUTSIDE [0,5) and outside [10,15) -> no match
-        ("a", ts(12), 4.0),  // in [10,15) -> 200
-        ("b", ts(3), 5.0),   // same window, other key -> 300
-        ("c", ts(1), 6.0))   // key with no intervals -> dropped (inner)
-      q.processAllAvailable()
-      val got = spark.table("ij").select("value", "ivid").collect()
-        .map(r => (r.getDouble(0), r.getLong(1))).toSet
-      assert(got == Set((1.0, 100L), (2.0, 100L), (4.0, 200L), (5.0, 300L)))
-    } finally q.stop()
-  }
-
-  test("intervalJoinOuter: unmatched points emit with nulls once the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val pts = MemoryStream[(String, Timestamp, Double)]
-    val ivs = MemoryStream[(String, Timestamp, Long)]
-    val joined = StreamingOps.intervalJoinOuter(
-      pts.toDF().toDF("k", "pts", "value"),
-      "pts", ivs.toDF().toDF("k", "its", "ivid"), "its", "k", "5 seconds",
-      watermark = "2 seconds")
-    val q = joined.writeStream.format("memory").queryName("ijo")
-      .outputMode("append").start()
-    try {
-      ivs.addData(("a", ts(0), 100L))
-      pts.addData(
-        ("a", ts(1), 1.0),  // covered -> 100
-        ("a", ts(7), 2.0),  // outside [0,5) -> null match
-        ("c", ts(1), 6.0))  // key with no intervals -> null match
-      q.processAllAvailable()
-      // push both watermarks far forward so unmatched rows finalize
-      ivs.addData(("z", ts(300), 0L))
-      pts.addData(("z", ts(300), 0.0))
-      q.processAllAvailable()
-      val got = spark.table("ijo").select("k", "value", "ivid")
-        .where(col("k").isin("a", "c"))
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
-      assert(got == Set(("a", 1.0, 100L), ("a", 2.0, -1L), ("c", 6.0, -1L)))
     } finally q.stop()
   }
 

@@ -56,6 +56,32 @@ class WalkAttributionSpec extends SparkSpec {
     assert(r(1).getAs[String]("touch_label") == null)    // u1 direct
     assert(r(2).getAs[String]("touch_label") == "click") // u2 tie 2 wins
     assert(r(2).getAs[Long]("touch_t") == 7L)
+    // one entity per credit fate, lookback 100: fresh touch; touch too
+    // old (direct); no touch at all (direct); the latest of several
+    // touches, equal-t touches breaking on the larger tie; and a second
+    // conversion crediting a touch that arrived after the first
+    val fates = Seq(
+      (0L, 1000L, 1L, false, "email", 0.0), (0L, 1010L, 2L, true, null, 5.0),
+      (1L, 1000L, 1L, false, "ad", 0.0), (1L, 1101L, 2L, true, null, 7.0),
+      (2L, 1000L, 1L, true, null, 1.0),
+      (3L, 1000L, 1L, false, "email", 0.0), (3L, 1005L, 2L, false, "sms", 0.0),
+      (3L, 1005L, 3L, false, "push", 0.0), (3L, 1020L, 4L, true, null, 3.0),
+      (4L, 1000L, 1L, false, "ad", 0.0), (4L, 1008L, 2L, true, null, 2.0),
+      (4L, 1030L, 3L, false, "social", 0.0), (4L, 1040L, 4L, true, null, 4.0)
+    ).toDF("u", "t", "tie", "conv", "label", "v")
+    val credited = Sessionize.lastTouchAttribution(fates, col("u"), col("t"),
+        col("tie"), col("conv"), col("label"), col("v"), lookback = 100L)
+      .collect().map(r => (r.getAs[Long]("k"), r.getAs[Long]("conv_t"),
+        Option(r.getAs[String]("touch_label")),
+        if (r.isNullAt(r.fieldIndex("touch_t"))) None else Some(r.getAs[Long]("touch_t"))))
+      .toSet
+    assert(credited == Set(
+      (0L, 1010L, Some("email"), Some(1000L)),
+      (1L, 1101L, None, None),
+      (2L, 1000L, None, None),
+      (3L, 1020L, Some("push"), Some(1005L)),
+      (4L, 1008L, Some("ad"), Some(1000L)),
+      (4L, 1040L, Some("social"), Some(1030L))))
   }
 
   test("lastTouchAttribution: out-of-contract clock fails loudly") {
